@@ -250,43 +250,6 @@ def main() -> None:
         except Exception as exc:  # record, don't kill the bench line
             errors[name] = f"{type(exc).__name__}: {exc}"[:200]
 
-    # Noise-band adjudication (VERDICT r15 #2): this host class steals
-    # CPU in hypervisor bursts, so a single sweep draw can bill a query
-    # 2-4x its code-true time and flip `catalog_over_target` on steal,
-    # not code.  Any TAIL query whose measured time exceeds its
-    # committed multi-round median (median across the newest
-    # BENCH_FULL_r*.json artifacts) by >2x AND >1 s gets ONE automatic
-    # re-run minutes later in the sweep; the adjudicated value is the
-    # MIN of the two draws — steal is strictly additive noise, so the
-    # lower draw is the estimate closer to the code — and BOTH raw
-    # numbers plus the committed median are reported in
-    # `noise_reruns` (old numbers kept, per the harness-change rule).
-    # The HEADLINE queries keep their untouched median-of-3 so the
-    # round-over-round headline metric's methodology is unchanged; the
-    # timed region (_run) is untouched.
-    committed = _committed_medians()
-    noise_reruns: dict[str, dict] = {}
-    for name in list(timings):
-        if name in HEADLINE or name in errors:
-            continue
-        m = committed.get(name)
-        first = timings[name]
-        if m is None or first <= max(2.0 * m, m + 1.0):
-            continue
-        if time.time() - t_start > BUDGET_S + 300 or len(noise_reruns) >= 40:
-            break
-        try:
-            again = _run(registry[name].fn, spark)
-        except Exception:
-            continue
-        timings[name] = min(first, again)
-        noise_reruns[name] = {
-            "first": first,
-            "rerun": again,
-            "committed_median": round(m, 3),
-            "used": timings[name],
-        }
-
     out = {
         "metric": "headline_queries_total_runtime",
         "value": total,
@@ -309,8 +272,6 @@ def main() -> None:
         )
     if tail_runs:
         out["tail_runs"] = tail_runs
-    if noise_reruns:
-        out["noise_reruns"] = noise_reruns
     if not deep:
         out["deep_deferred"] = sorted(DEEP_TIER)
     if tail_skipped:
@@ -344,38 +305,9 @@ def main() -> None:
                 "n_benched": len(timings),
                 "n_errors": len(errors),
                 "n_skipped": len(tail_skipped),
-                "n_noise_reruns": len(noise_reruns),
             }
         )
     )
-
-
-def _committed_medians() -> dict[str, float]:
-    """Per-query MEDIAN across the newest committed BENCH_FULL_r*.json
-    artifacts (up to 5) — the cross-round band the noise-rerun
-    adjudication compares a fresh draw against."""
-    import re
-    import statistics
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    files = sorted(
-        (int(m.group(1)), f)
-        for f in os.listdir(here)
-        if (m := re.fullmatch(r"BENCH_FULL_r(\d+)\.json", f))
-    )[-5:]
-    acc: dict[str, list[float]] = {}
-    for _, f in files:
-        try:
-            with open(os.path.join(here, f)) as fh:
-                qs = json.load(fh).get("queries", {})
-        except (OSError, ValueError):
-            continue
-        for k, v in qs.items():
-            try:
-                acc.setdefault(k, []).append(float(v))
-            except (TypeError, ValueError):
-                continue
-    return {k: statistics.median(v) for k, v in acc.items()}
 
 
 def _previous_round_timings() -> dict[str, float]:

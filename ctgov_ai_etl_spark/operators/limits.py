@@ -403,9 +403,7 @@ def temperature_weights(
     return {s: powed[s] / denom for s in strata if counts.get(s, 0) > 0}
 
 
-def spread_to_parallelism(
-    df: DataFrame, expected_partitions: int | None = None
-) -> DataFrame:
+def spread_to_parallelism(df: DataFrame) -> DataFrame:
     """Round-robin repartition to cluster parallelism IFF the input
     plans fewer partitions.  Compute-heavy per-row stages (signature
     folds, shingling, hash ladders) are CPU-bound, and a small parquet
@@ -416,18 +414,10 @@ def spread_to_parallelism(
     shuffle added); identical repartition subtrees across plan
     branches collapse to one exchange via ReuseExchange.
 
-    Callers that already know their input's partition count pass it as
-    ``expected_partitions`` and skip the probe entirely.  Otherwise the
-    count is read via the JVM DataFrame's RDD handle — no Python-side
-    RDD wrapper (``df.rdd``) is materialized, avoiding the per-call
-    Python RDD conversion the previous implementation paid."""
+    The partition count is read via the JVM DataFrame's RDD handle, so
+    no Python-side RDD wrapper (``df.rdd``) is materialized."""
     par = df.sparkSession.sparkContext.defaultParallelism
-    n = (
-        expected_partitions
-        if expected_partitions is not None
-        else df._jdf.rdd().getNumPartitions()
-    )
-    if n < par:
+    if df._jdf.rdd().getNumPartitions() < par:
         return df.repartition(par)
     return df
 

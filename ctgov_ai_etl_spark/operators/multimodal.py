@@ -7,10 +7,8 @@ frame-sample) are Arrow-batched ``mapInPandas`` stages so each task
 amortizes codec init and the bytes never round-trip through Python
 row objects.  "No keyed shuffle" throughout this module means: the
 codec path never hash-partitions (codec work has no key); the ONLY
-exchange is ``_spread``'s conditional round-robin repartition of a
-source scan narrower than the core count — a single-file-layout
-rescue that is a no-op at scale, where the file layout already
-provides the parallelism (see ``_spread``).  Four REAL image codecs back the seam in pure Python —
+exchange is the renderers' opt-in ``spread`` (below).  Four REAL
+image codecs back the seam in pure Python —
 netpbm (P5/P6) and 8-bit PNG with all five scanline filters
 (``functions/imagecodec.py``), baseline AND progressive JPEG with
 canonical Huffman, restart markers, successive approximation, and
@@ -26,6 +24,19 @@ layers are parsed for real since r14: MP3 frame headers + ID3v2
 (``functions/warc.py``), each with a closed-form byte-layout oracle.
 ``decode_image_features`` remains the sha-derived deterministic fake
 whose oracle needs no codec at all.
+
+The renderers' ``spread`` flag applies
+:func:`operators.limits.spread_to_parallelism` (a round-robin
+repartition of a source scan narrower than the core count, a no-op
+once the file layout provides the parallelism) at the SOURCE stage
+of a chain; parse stages inherit the width.  It is opt-in because
+the exchange and the extra Python-stage tasks cost ~0.5 s flat, so it
+pays only for chains with more than ~1 s of single-threaded codec
+work: on the one-row-group fixtures mm_decode_jpeg went 5.1 -> 2.0 s
+and mm_audio_wav_meta 2.8 -> 1.2 s spread (32-core host), while
+spreading every chain lost on 11 of the 15 light ones on a 4-core
+host (zip_scan_entries 0.58 -> 0.82 s).  Call sites set the flag
+from per-query A/B timings.
 """
 
 from __future__ import annotations
@@ -37,33 +48,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-
-def _spread(src: DataFrame) -> DataFrame:
-    """Conditional round-robin spread of a narrow fixture scan before
-    per-row codec work (see :func:`operators.limits.spread_to_parallelism`,
-    the shared helper the dedup/quality/clustering families already
-    use for their CPU-bound signature folds).
-
-    Measured motivation: mm_decode_jpeg's codec work is ~4.6 s
-    single-threaded at sf0.1 and the query timed ~4.9 s — the whole
-    synthesize+parse chain ran as ONE task on the one-row-group bench
-    file.  Applied at the SOURCE stage of each chain only; parse
-    stages inherit the width.  No-op when the file layout already
-    provides ``defaultParallelism`` input files (the 100 TB case).
-
-    OPT-IN (the renderers' ``spread`` flag): locally the exchange plus
-    the 32-task × 2-Python-stage overhead costs ~0.5-0.7 s flat, so
-    spreading only pays for chains whose single-threaded codec work
-    exceeds roughly 1 s.  Every call site's decision is measured, not
-    guessed — the per-query A/B table lives in OPTIMIZATION_r16.md
-    (winners: jpeg 5.1→2.0, wav 2.8→1.2, progressive 2.1→1.4, phash
-    1.8→1.2, mp3 1.4→0.9 …; losers left at default: gif/bmp/h264/pdf/
-    zip/warc and the light audio/video chains, each 0.1-0.5 s worse
-    when spread).
-    """
-    from ctgov_ai_etl_spark.operators.limits import spread_to_parallelism
-
-    return spread_to_parallelism(src)
+from ctgov_ai_etl_spark.operators.limits import spread_to_parallelism
 
 
 def attach_blob(df: DataFrame, src_col: str, blob_col: str = "blob") -> DataFrame:
@@ -98,8 +83,8 @@ def render_test_images(
 
     ship_package(df.sparkSession)
     src = df.select(id_col, text_col)
-    if spread:  # caller measured heavy per-row Python; see _spread
-        src = _spread(src)
+    if spread:  # see the module docstring
+        src = spread_to_parallelism(src)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -167,8 +152,8 @@ def render_png_matrix(
 
     ship_package(df.sparkSession)
     src = df.select(id_col, text_col)
-    if spread:  # caller measured heavy per-row Python; see _spread
-        src = _spread(src)
+    if spread:  # see the module docstring
+        src = spread_to_parallelism(src)
     pal = PNG_MATRIX_PALETTE
 
     def _grey4(w: int, h: int, v: int) -> bytes:
@@ -267,8 +252,8 @@ def render_test_jpegs(
 
     ship_package(df.sparkSession)
     src = df.select(id_col, text_col)
-    if spread:  # caller measured heavy per-row Python; see _spread
-        src = _spread(src)
+    if spread:  # see the module docstring
+        src = spread_to_parallelism(src)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
@@ -331,8 +316,8 @@ def render_test_jpegs_progressive(
 
     ship_package(df.sparkSession)
     src = df.select(id_col, text_col)
-    if spread:  # caller measured heavy per-row Python; see _spread
-        src = _spread(src)
+    if spread:  # see the module docstring
+        src = spread_to_parallelism(src)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
@@ -531,8 +516,8 @@ def render_test_audio(
 
     ship_package(df.sparkSession)
     src = df.select(id_col, text_col)
-    if spread:  # caller measured heavy per-row Python; see _spread
-        src = _spread(src)
+    if spread:  # see the module docstring
+        src = spread_to_parallelism(src)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -662,8 +647,8 @@ def render_test_video(
 
     ship_package(df.sparkSession)
     src = df.select(id_col, text_col)
-    if spread:  # caller measured heavy per-row Python; see _spread
-        src = _spread(src)
+    if spread:  # see the module docstring
+        src = spread_to_parallelism(src)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -942,8 +927,8 @@ def render_and_decode_test_gifs(
 
     ship_package(df.sparkSession)
     src = df.select(id_col, text_col)
-    if spread:  # caller measured heavy per-row Python; see _spread
-        src = _spread(src)
+    if spread:  # see the module docstring
+        src = spread_to_parallelism(src)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1014,8 +999,8 @@ def render_test_bmps(
 
     ship_package(df.sparkSession)
     src = df.select(id_col, text_col)
-    if spread:  # caller measured heavy per-row Python; see _spread
-        src = _spread(src)
+    if spread:  # see the module docstring
+        src = spread_to_parallelism(src)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1122,8 +1107,8 @@ def render_test_mp3(
 
     ship_package(df.sparkSession)
     src = df.select(id_col, text_col)
-    if spread:  # caller measured heavy per-row Python; see _spread
-        src = _spread(src)
+    if spread:  # see the module docstring
+        src = spread_to_parallelism(src)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
@@ -1217,8 +1202,8 @@ def render_test_warc(
 
     ship_package(df.sparkSession)
     src = df.select(id_col, text_col)
-    if spread:  # caller measured heavy per-row Python; see _spread
-        src = _spread(src)
+    if spread:  # see the module docstring
+        src = spread_to_parallelism(src)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1326,8 +1311,8 @@ def render_test_h264(
 
     ship_package(df.sparkSession)
     src = df.select(id_col, text_col)
-    if spread:  # caller measured heavy per-row Python; see _spread
-        src = _spread(src)
+    if spread:  # see the module docstring
+        src = spread_to_parallelism(src)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1436,8 +1421,8 @@ def render_test_mp4(
 
     ship_package(df.sparkSession)
     src = df.select(id_col, text_col)
-    if spread:  # caller measured heavy per-row Python; see _spread
-        src = _spread(src)
+    if spread:  # see the module docstring
+        src = spread_to_parallelism(src)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1528,8 +1513,8 @@ def render_test_wav(
 
     ship_package(df.sparkSession)
     src = df.select(id_col, text_col)
-    if spread:  # caller measured heavy per-row Python; see _spread
-        src = _spread(src)
+    if spread:  # see the module docstring
+        src = spread_to_parallelism(src)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1609,8 +1594,8 @@ def render_test_pdf(
 
     ship_package(df.sparkSession)
     src = df.select(id_col, text_col)
-    if spread:  # caller measured heavy per-row Python; see _spread
-        src = _spread(src)
+    if spread:  # see the module docstring
+        src = spread_to_parallelism(src)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1736,8 +1721,8 @@ def render_test_tar(
 
     ship_package(df.sparkSession)
     src = df.select(id_col, text_col)
-    if spread:  # caller measured heavy per-row Python; see _spread
-        src = _spread(src)
+    if spread:  # see the module docstring
+        src = spread_to_parallelism(src)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1883,8 +1868,8 @@ def render_test_warcgz(
 
     ship_package(df.sparkSession)
     src = df.select(id_col, text_col)
-    if spread:  # caller measured heavy per-row Python; see _spread
-        src = _spread(src)
+    if spread:  # see the module docstring
+        src = spread_to_parallelism(src)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1989,8 +1974,8 @@ def render_test_zip(
 
     ship_package(df.sparkSession)
     src = df.select(id_col, text_col)
-    if spread:  # caller measured heavy per-row Python; see _spread
-        src = _spread(src)
+    if spread:  # see the module docstring
+        src = spread_to_parallelism(src)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

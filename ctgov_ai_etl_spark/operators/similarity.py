@@ -31,6 +31,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ctgov_ai_etl_spark.operators.cache import track
+from ctgov_ai_etl_spark.operators.limits import spread_to_parallelism
 
 _SEED = 1337
 
@@ -525,13 +526,6 @@ def ivf_topk_partitioned(
     )
 
 
-def _spread(df: DataFrame) -> DataFrame:
-    """See operators/limits.spread_to_parallelism (shared helper)."""
-    from ctgov_ai_etl_spark.operators.limits import spread_to_parallelism
-
-    return spread_to_parallelism(df)
-
-
 def _centroid_norms(centroids: list[list[float]]) -> list[float]:
     """Python replay of ``norm`` over each centroid: LEFT-ASSOCIATIVE
     acc + x*x then sqrt — the identical double sequence the engines'
@@ -814,7 +808,7 @@ def blocked_cosine_pairs(
     non-decreasing — the knob tested in
     test_blocked_multi_assign_recall).  Deterministic given the
     centroids, so the whole pipeline is SQL-replayable."""
-    df = _spread(df)
+    df = spread_to_parallelism(df)
     if n_assign == 1:
         asg = centroid_assign(df, centroids, id_col, vec_col, round_digits)
     else:
@@ -1113,7 +1107,8 @@ def semantic_incremental_dedup(
     with the store's (id, cid) table persisted partitioned by cid,
     each increment pays only its own assignment pass.  Deterministic
     given the centroids → SQL-replayable."""
-    existing, incoming = _spread(existing), _spread(incoming)
+    existing = spread_to_parallelism(existing)
+    incoming = spread_to_parallelism(incoming)
     asg_e = centroid_assign(existing, centroids, id_col, vec_col, round_digits)
     asg_i = centroid_assign(incoming, centroids, id_col, vec_col, round_digits)
     cand = (

@@ -432,21 +432,7 @@ def stream_run_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "AND p_ts <= c_ts + INTERVAL 30 MINUTES"
         ),
     )
-    # State partitioning is fixed at first start (baked into the
-    # checkpoint) and a stream-stream join commits FOUR state stores
-    # per partition per micro-batch — measured at sf0.1 that fixed
-    # commit cost is the whole runtime: 5.4 s at 32 partitions,
-    # 2.2 s at 8, identical results.  Size it to the finite input
-    # here; a production deployment sizes it to watermark-window
-    # volume instead (state rows per partition ≈ window × rate /
-    # partitions) — more partitions only help once each holds real
-    # data.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        out = run_stream_to_memory(joined, mode="append")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    out = run_stream_to_memory(joined, mode="append")
     return out.select(
         "click_id",
         "purchase_id",
@@ -507,13 +493,7 @@ def stream_run_semantic_admission(spark: SparkSession, sf_dir: str) -> DataFrame
         hash_bucket(F.col("vec_id")) >= 8000
     )
     dups = semantic_admission_plan(existing, incoming, threshold=0.3)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")  # batch-volume sizing
-    try:
-        out = run_stream_to_memory(dups, mode="complete")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return out
+    return run_stream_to_memory(dups, mode="complete")
 
 
 def semantic_admission_plan(
@@ -1381,8 +1361,7 @@ def stream_run_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     ids, filtered from the result) — sentinel batch N advances the
     min-of-both-sides watermark that batch N+1 uses to flush closed
     state.  Oracle: the plain batch LEFT range-join, valid because
-    the sentinels close every real window.  Same fixed-cost state
-    partitioning note as the inner twin (8 partitions here)."""
+    the sentinels close every real window."""
     import os
 
     from ctgov_ai_etl_spark.streaming.events import run_stream_to_memory, scratch_dir
@@ -1452,17 +1431,7 @@ def stream_run_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "left_outer",
     )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    # 4 state partitions (r11, was 8): the outer join keeps four
-    # state stores per partition per trigger, so the fixed harness
-    # cost scales with partitions x triggers — 4 halves it while the
-    # keyspace (1,500 users at sf0.1) still spreads fine; a real
-    # cluster sizes this to executor count, not to this fixture.
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        out = run_stream_to_memory(joined, mode="append")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    out = run_stream_to_memory(joined, mode="append")
     return out.filter(F.col("click_id") >= 0).select(
         "click_id",
         "purchase_id",
@@ -1835,16 +1804,7 @@ def stream_run_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     hits = probes.join(F.broadcast(bench_shingles), "s").groupBy(
         "doc_id"
     ).agg(F.count("*").cast("int").alias("n_hits"))
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    # State sizing: keys are contaminated doc ids only (rare by
-    # construction) — 8 partitions cover any test SF; production
-    # sizes to watermark-window match volume.
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        out = run_stream_to_memory(hits, mode="complete")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return out
+    return run_stream_to_memory(hits, mode="complete")
 
 
 def _patch_stream_decontam_oracle() -> None:
@@ -2096,12 +2056,7 @@ def stream_run_volume_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = ev.select(day).groupBy("day").agg(
         F.count("*").cast("long").alias("n")
     )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")  # ~30 day keys
-    try:
-        drained = run_stream_to_memory(counts, mode="complete")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    drained = run_stream_to_memory(counts, mode="complete")
     b = _lt(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
     d = b.groupBy(
         fdiv(F.unix_micros(F.col("ts")), F.lit(86_400_000_000)).alias(

@@ -16,7 +16,27 @@ import tempfile
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+def _usable_cpus() -> int:
+    """Cores this process may run on (its affinity mask, not the
+    machine's total)."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity API on this platform
+        return os.cpu_count() or 1
+
+
+def _default_driver_mem() -> str:
+    """``min(16g, half of physical RAM)``: the driver JVM heap must
+    leave room for the Python workers and the OS on small hosts."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError, AttributeError):
+        return "16g"
+    return f"{min(16 << 10, phys // 2 >> 20)}m"
+
+
+DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(_usable_cpus())
 
 _SHIPPED_SESSIONS: set[int] = set()
 
@@ -110,7 +130,10 @@ def get_spark(app_name: str = "ctgov_ai_etl_spark", cpus: str | None = None) -> 
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128MB")
         # If events.parquet carries TIMESTAMP(NANOS) (as it did in some

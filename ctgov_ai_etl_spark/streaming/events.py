@@ -48,39 +48,39 @@ def scratch_dir(prefix: str) -> str:
         return tempfile.mkdtemp(prefix=prefix)
 
 
+#: Upper bound on the state-store partitions of a stream run.
+STREAM_SHUFFLE_CAP = 8
+
+
 @contextlib.contextmanager
 def _stream_shuffle_parts(spark):
-    """Bound the state-store partition count of a stream run.
+    """Bound the state-store partition count of a stream run to
+    ``min(session shuffle partitions, STREAM_SHUFFLE_CAP)``.
 
     A stateful streaming query creates one state-store instance per
     shuffle partition and commits every one of them per micro-batch;
-    at the session default (= core count) a tiny-state query pays 32
-    store commits + 32-task stateful stages per batch for state that
-    fits in a handful of partitions.  Several queries already size
-    this to their real key volume by hand (stream-stream joins: 8,
-    upsert merges: 4); this manager gives every run through the
-    shared runners the same treatment: lower to
-    ``$SPARK_GRAFT_STREAM_SHUFFLE`` (default 8) unless the caller
-    already set something at or below it (their sizing wins).  On a
-    production cluster the env knob sizes state partitions to state
-    volume — the standard sizing rule for state stores, independent
-    of core count.  Restores the caller's value on exit; the conf is
-    read once at query start, so the restore cannot affect the
-    running query.
+    at the session default (= core count) a tiny-state query on a wide
+    host pays one store commit and one stateful task per core per
+    batch for state that fits in a handful of partitions.  State
+    partitions are sized to state volume, not to core count — the
+    standard sizing rule for state stores.  Every stream run in the
+    package goes through this manager, so it is the one place that
+    sizes them.  Restores the caller's value on exit; the conf is read
+    once at query start, so the restore cannot affect the running
+    query.
 
-    SINGLE-THREADED assumption (ADVICE r15): this mutates the
-    session-global ``spark.sql.shuffle.partitions`` for the duration
-    of the run, so any batch query planned CONCURRENTLY on the shared
-    session would silently plan with the lowered value.  The harness
-    drives queries sequentially; runners that ever parallelize must
-    scope the conf per query instead.
+    SINGLE-THREADED assumption: this mutates the session-global
+    ``spark.sql.shuffle.partitions`` for the duration of the run, so
+    any batch query planned CONCURRENTLY on the shared session would
+    silently plan with the lowered value.  The harness drives queries
+    sequentially; runners that ever parallelize must scope the conf
+    per query instead.
     """
-    target = int(os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8"))
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     lowered = False
     try:
-        if int(prev) > target:
-            spark.conf.set("spark.sql.shuffle.partitions", str(target))
+        if int(prev) > STREAM_SHUFFLE_CAP:
+            spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_CAP))
             lowered = True
     except (TypeError, ValueError):
         pass
@@ -396,18 +396,7 @@ def stream_upsert_snapshot(
         latest.append(vdir)
 
     ckpt = os.path.join(work, "ckpt")
-    # Size the per-batch merge's shuffle to its real volume (the
-    # stream-join treatment, VERDICT r5): each foreachBatch merge
-    # aggregates ≤ |events| rows (100k at sf0.1) but at the session
-    # default it pays 32 shuffle tasks + 32 output files per batch ×
-    # n_shards batches — fixed scheduling/commit cost that dominates
-    # the runtime at this scale.  4 partitions hold ~25k rows each
-    # here; a production deployment sizes this to snapshot volume /
-    # target partition size instead, and buckets the snapshot by the
-    # merge key so the per-batch groupBy stops shuffling at all.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    with _stream_shuffle_parts(spark):
         q = (
             stream.writeStream.foreachBatch(upsert_batch)
             .option("checkpointLocation", ckpt)
@@ -415,9 +404,7 @@ def stream_upsert_snapshot(
             .start()
         )
         q.awaitTermination()
-        _capture_stream_plan(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _capture_stream_plan(q)
     return spark.read.parquet(latest[-1])
 
 

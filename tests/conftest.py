@@ -14,4 +14,4 @@ SF_SMALL = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
-    return get_spark("tests", cpus="8")
+    return get_spark("tests")

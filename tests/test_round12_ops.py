@@ -279,7 +279,7 @@ def test_hits_matches_reference(edge_set):
     from ctgov_ai_etl_spark.operators.graph import hits
     from ctgov_ai_etl_spark.session import get_spark
 
-    spark = get_spark("tests", cpus="8")
+    spark = get_spark("tests")
     edges = sorted(edge_set)
     df = spark.createDataFrame(edges, ["src", "dst"])
     got = {

@@ -4,6 +4,7 @@ stateful per-key operator check."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from ctgov_ai_etl_spark.streaming.events import (
@@ -795,3 +796,59 @@ def test_audit_chain_state_across_microbatches(spark, tmp_path):
         h = hashlib.md5(f"{h}:{eid}".encode()).hexdigest()
     assert latest["n_events"] == 3 and latest["final_hash"] == h
     assert len(snaps) == 2  # one snapshot per micro-batch
+
+
+# --- stream state-store partition sizing ---------------------------------
+
+_PARTS = "spark.sql.shuffle.partitions"
+
+
+@pytest.fixture(params=[None, "12"], ids=["session", "above_cap"])
+def session_parts(spark, request):
+    """The session's shuffle-partition value for one test: the
+    session default, or a value above the stream cap.  Restored after
+    the test so no conf change leaks into later tests."""
+    prev = spark.conf.get(_PARTS)
+    if request.param is not None:
+        spark.conf.set(_PARTS, request.param)
+    try:
+        yield spark.conf.get(_PARTS)
+    finally:
+        spark.conf.set(_PARTS, prev)
+
+
+def test_volume_alert_state_parts_follow_rule(spark, session_parts):
+    """stream_run_volume_alert plans its state store with
+    min(session value, cap) partitions and leaves the session conf as
+    it found it."""
+    import re
+
+    import ctgov_ai_etl_spark.streaming.events as ev
+    from ctgov_ai_etl_spark.queries.stream_batch import stream_run_volume_alert
+
+    ev.STREAM_PLAN_CAPTURE = []
+    try:
+        stream_run_volume_alert(spark, SF_SMALL).collect()
+        plan = "\n".join(ev.STREAM_PLAN_CAPTURE)
+    finally:
+        ev.STREAM_PLAN_CAPTURE = None
+    want = min(int(session_parts), ev.STREAM_SHUFFLE_CAP)
+    assert set(re.findall(r"numPartitions = (\d+)", plan)) == {str(want)}
+    assert spark.conf.get(_PARTS) == session_parts
+
+
+def test_upsert_snapshot_restores_shuffle_parts(spark, session_parts):
+    from ctgov_ai_etl_spark.streaming.events import stream_upsert_snapshot
+
+    assert stream_upsert_snapshot(spark, SF_SMALL).count() > 0
+    assert spark.conf.get(_PARTS) == session_parts
+
+
+def test_failed_stream_run_restores_shuffle_parts(spark, session_parts):
+    """A query that raises mid-run still gets the caller's conf back."""
+    failing = read_events_stream(spark, SF_SMALL).select(
+        F.assert_true(F.col("event_id") < 0).alias("never")
+    )
+    with pytest.raises(Exception):
+        run_stream_to_memory(failing)
+    assert spark.conf.get(_PARTS) == session_parts

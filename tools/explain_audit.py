@@ -1959,15 +1959,19 @@ CHECKS["dedup_simhash"] = [
 # static sides, Arrow-batched stateful operators, and statelessness
 # where the design says the stream is a pass-through.  Same regex
 # conventions as CHECKS (negatives anchor \A under DOTALL).
+# STATE_PARTS is filled in at audit time with the state-store partition
+# count streaming.events._stream_shuffle_parts gives the session:
+# min(spark.sql.shuffle.partitions, STREAM_SHUFFLE_CAP).
+STATE_PARTS = r"numPartitions = {parts}\b"
 STREAM_CHECKS: dict[str, list[tuple[str, str]]] = {
     "stream_run_stream_join": [
         ("watermarked stream-stream join is symmetric-hash", r"StreamingSymmetricHashJoin"),
-        ("state store sized to 8 partitions", r"numPartitions = 8"),
+        ("state store sized by the stream partition rule", STATE_PARTS),
         ("no cartesian", r"\A(?!.*CartesianProduct)"),
     ],
     "stream_run_stream_join_outer": [
         ("watermarked outer stream-stream join is symmetric-hash", r"StreamingSymmetricHashJoin"),
-        ("state store sized to 4 partitions", r"numPartitions = 4"),
+        ("state store sized by the stream partition rule", STATE_PARTS),
         ("no cartesian", r"\A(?!.*CartesianProduct)"),
     ],
     "stream_run_static_join": [
@@ -1984,13 +1988,13 @@ STREAM_CHECKS: dict[str, list[tuple[str, str]]] = {
         ("keys co-located by ONE hash shuffle", r"Exchange hashpartitioning"),
     ],
     "stream_run_semantic_admission": [
-        ("admission state sized to 8 partitions", r"numPartitions = 8"),
+        ("admission state sized by the stream partition rule", STATE_PARTS),
         ("centroid frame broadcast onto the stream", r"BroadcastHashJoin"),
         ("state store present", r"StateStoreSave"),
     ],
     "stream_run_decontam": [
         ("benchmark shingles broadcast onto the stream", r"BroadcastHashJoin"),
-        ("dedup state sized to 8 partitions", r"numPartitions = 8"),
+        ("dedup state sized by the stream partition rule", STATE_PARTS),
         ("state store present", r"StateStoreSave"),
     ],
     "stream_run_tumbling": [
@@ -2010,7 +2014,7 @@ STREAM_CHECKS: dict[str, list[tuple[str, str]]] = {
         ("one shuffle, demanded by the stateful operator", r"REQUIRED_BY_STATEFUL_OPERATOR"),
     ],
     "stream_run_volume_alert": [
-        ("alert state sized to 8 partitions", r"numPartitions = 8"),
+        ("alert state sized by the stream partition rule", STATE_PARTS),
         ("state store present", r"StateStoreSave"),
     ],
     "stream_run_dedup": [
@@ -2057,6 +2061,8 @@ def audit_streams(spark, registry, lines: list) -> int:
     Returns the failure count."""
     import ctgov_ai_etl_spark.streaming.events as _ev
 
+    session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    parts = str(min(session_parts, _ev.STREAM_SHUFFLE_CAP))
     failures = 0
     for name, checks in STREAM_CHECKS.items():
         _ev.STREAM_PLAN_CAPTURE = []
@@ -2077,6 +2083,7 @@ def audit_streams(spark, registry, lines: list) -> int:
         )
         print(f"{'PASS' if captured else 'FAIL'}  {name}: plan captured")
         for prop, pattern in checks:
+            pattern = pattern.replace("{parts}", parts)
             ok = re.search(pattern, plan, re.MULTILINE | re.DOTALL) is not None
             mark = "✅" if ok else "✗"
             if not ok:
