@@ -79,12 +79,17 @@ def make_raw_studies_json(n: int) -> list[str]:
     return [json.dumps(make_raw_study(i), sort_keys=True) for i in range(n)]
 
 
-def mock_ctgov_transport(n_studies: int = 57, page_size: int = 10, indexed: bool = False):
+def mock_ctgov_transport(
+    n_studies: int = 57, page_size: int = 10, indexed: bool = False, log_path: str = ""
+):
     """An in-process paginated transport over the fixture corpus:
     serves ``nextPageToken`` pages like the CTGov v2 API
     (/root/reference/etl.py:146-152 token protocol).  With
     ``indexed=True`` the second argument is a page *index* (the
-    parallel-partition protocol) instead of an opaque offset token."""
+    parallel-partition protocol) instead of an opaque offset token.
+    With ``log_path`` every served page appends one ``"<rows>\\n"``
+    line there: pages are fetched in Python worker processes, where an
+    in-process counter cannot see them."""
 
     def transport(params: dict[str, Any], token: Any) -> dict[str, Any]:
         size = int(params.get("pageSize", page_size))
@@ -96,6 +101,9 @@ def mock_ctgov_transport(n_studies: int = 57, page_size: int = 10, indexed: bool
         if params.get("fields"):  # server-side projection, like CTGov v2
             paths = [p.strip() for p in str(params["fields"]).split(",") if p.strip()]
             page = [prune_study(s, paths) for s in page]
+        if log_path:
+            with open(log_path, "a") as fh:
+                fh.write(f"{len(page)}\n")
         nxt = start + size
         out: dict[str, Any] = {"studies": page}
         if nxt < n_studies:

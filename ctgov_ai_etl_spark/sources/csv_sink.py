@@ -12,15 +12,23 @@ Reproduces the reference's observable output contract:
   (etl.py:440-442);
 - UTF-8 with header row.
 
-``single_file=True`` coalesces to one partition for byte-parity with
-the reference's single CSV; at scale you leave it False and get a
-directory of part files — same schema, same rows.
+``single_file=True`` means a parallel write and an ordered splice: the
+plan runs with its own partitioning into a private directory of part
+files, and the driver concatenates the parts in partition-id order into
+the one file, keeping the first header.  That is the order in which
+``coalesce(1)`` would have concatenated the partitions, so the file is
+byte-identical to a one-task write, without folding REST paging,
+``llm_classify`` and the write into a single task.  Whether any row
+was written is read off the parts, so no probe job re-runs the plan.
+At scale you leave it False and get a directory of part files — same
+schema, same rows.
 """
 
 from __future__ import annotations
 
 import glob
 import os
+import re
 import shutil
 import tempfile
 
@@ -28,6 +36,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ctgov_ai_etl_spark.schemas import CSV_SINK_COLUMNS
+
+# part-<partition id>-<job uuid>-c<file counter>.csv; the id widens past
+# five digits, so parts sort by the parsed integers, not by name.
+_PART_NAME = re.compile(r"part-(\d+)-.*-c(\d+)\.csv$")
 
 
 def reference_csv_projection(df: DataFrame, ai_column: str | None = None) -> DataFrame:
@@ -45,6 +57,31 @@ def reference_csv_projection(df: DataFrame, ai_column: str | None = None) -> Dat
     return df.select(*cols)
 
 
+def _part_order(part: str) -> tuple[int, int]:
+    m = _PART_NAME.search(os.path.basename(part))
+    return int(m.group(1)), int(m.group(2))
+
+
+def _splice_parts(parts_dir: str, staged: str) -> bool:
+    """Concatenate the ``part-*.csv`` files of ``parts_dir`` into
+    ``staged`` in partition order under one header line.  Parts holding
+    only a header (empty partitions) are skipped.  Returns False when
+    no part holds a data row."""
+    parts = sorted(glob.glob(os.path.join(parts_dir, "part-*.csv")), key=_part_order)
+    wrote = False
+    with open(staged, "wb") as out:
+        for part in parts:
+            with open(part, "rb") as src:
+                header = src.readline()
+                if os.fstat(src.fileno()).st_size == len(header):
+                    continue
+                if not wrote:
+                    out.write(header)
+                    wrote = True
+                shutil.copyfileobj(src, out)
+    return wrote
+
+
 def write_reference_csv(
     df: DataFrame,
     path: str,
@@ -52,21 +89,24 @@ def write_reference_csv(
     single_file: bool = True,
 ) -> bool:
     """Write the reference-shaped CSV. Returns False (no write) on
-    empty input, mirroring etl.py:440-442."""
+    empty input, mirroring etl.py:440-442.  In single-file mode a write
+    that raises or finds no rows leaves ``path`` as it was."""
     out = reference_csv_projection(df, ai_column)
-    if out.isEmpty():
-        return False
-    writer = (out.coalesce(1) if single_file else out).write.mode("overwrite").option(
-        "header", True
-    )
-    if single_file:
-        # Spark writes a directory; for parity we surface one .csv file.
-        tmp = tempfile.mkdtemp(prefix="ctgov_csv_")
-        writer.csv(tmp)
-        part = glob.glob(os.path.join(tmp, "part-*.csv"))[0]
-        os.makedirs(os.path.dirname(os.path.abspath(path)), exist_ok=True)
-        shutil.move(part, path)
-        shutil.rmtree(tmp, ignore_errors=True)
-    else:
+    writer = out.write.mode("overwrite").option("header", True)
+    if not single_file:
+        if out.isEmpty():
+            return False
         writer.csv(path)
-    return True
+        return True
+    tmp = tempfile.mkdtemp(prefix="ctgov_csv_")
+    try:
+        parts_dir = os.path.join(tmp, "parts")
+        staged = os.path.join(tmp, "staged.csv")
+        writer.csv(parts_dir)
+        if not _splice_parts(parts_dir, staged):
+            return False
+        os.makedirs(os.path.dirname(os.path.abspath(path)), exist_ok=True)
+        shutil.move(staged, path)
+        return True
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)

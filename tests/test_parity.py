@@ -6,15 +6,24 @@ sink column order and phantom columns."""
 from __future__ import annotations
 
 import csv
+import glob
+import json
 import os
+import re
+import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from ctgov_ai_etl_spark.fixtures import make_raw_studies_json, make_raw_study
 from ctgov_ai_etl_spark.operators.flatten import flatten_studies
 from ctgov_ai_etl_spark.operators.limits import deterministic_split, id_set_split
 from ctgov_ai_etl_spark.schemas import RAW_STUDY, STUDIES_FLAT_COLUMNS
-from ctgov_ai_etl_spark.sources.csv_sink import write_reference_csv
+from ctgov_ai_etl_spark.sources.csv_sink import (
+    _splice_parts,
+    reference_csv_projection,
+    write_reference_csv,
+)
 
 
 def _flat(spark, n=30):
@@ -179,3 +188,122 @@ def test_csv_sink_empty_input_no_write(spark, tmp_path):
     path = os.path.join(tmp_path, "never.csv")
     assert write_reference_csv(flat, path) is False
     assert not os.path.exists(path)
+
+
+def _awkward_frame(spark):
+    """Six range partitions of two rows each, partition 2 emptied by the
+    filter; keys descend as partition ids rise, so partition order is not
+    key order.  Row 7's title holds a comma, a double quote and a
+    newline; the AI column is set."""
+    return (
+        spark.range(0, 12, 1, numPartitions=6)
+        .filter(~F.col("id").isin(4, 5))
+        .select(
+            F.format_string("NCT%08d", F.lit(100) - F.col("id")).alias("nct_id"),
+            F.when(F.col("id") == 7, F.lit('a, "quoted"\nsecond line'))
+            .otherwise(F.format_string("title %d", F.col("id")))
+            .alias("brief_title"),
+            F.lit("NOT MENTIONED").alias("ai_determined_value"),
+        )
+    )
+
+
+def test_csv_sink_splice_is_byte_identical_to_coalesce(spark, tmp_path):
+    df = _awkward_frame(spark)
+    assert df.rdd.getNumPartitions() >= 5
+    assert 0 in df.rdd.glom().map(len).collect()  # an empty partition
+    path = os.path.join(tmp_path, "out.csv")
+    assert write_reference_csv(df, path)
+
+    one = os.path.join(tmp_path, "one")
+    reference_csv_projection(df, "ai_determined_value").coalesce(1).write.option(
+        "header", True
+    ).csv(one)
+    (part,) = [p for p in os.listdir(one) if p.startswith("part-")]
+    with open(os.path.join(one, part), "rb") as fh:
+        expected = fh.read()
+    with open(path, "rb") as fh:
+        got = fh.read()
+    assert got == expected
+
+    header = got.split(b"\n", 1)[0]
+    assert header.startswith(b"nct_id,") and got.count(header) == 1
+    ids = [int(m) for m in re.findall(rb"^NCT(\d{8}),", got, flags=re.M)]
+    assert ids == [100 - i for i in range(12) if i not in (4, 5)]
+
+
+def test_csv_sink_splice_orders_parts_by_partition_id(tmp_path):
+    """Partition ids widen past five digits, so name order is not
+    partition order; header-only parts (empty partitions) are skipped."""
+    parts = {100000: b"h\nlast\n", 99999: b"h\nmiddle\n", 7: b"h\n", 2: b"h\nfirst\n"}
+    for pid, body in parts.items():
+        (tmp_path / f"part-{pid:05d}-0a1b-c000.csv").write_bytes(body)
+    staged = tmp_path / "staged.csv"
+    assert _splice_parts(str(tmp_path), str(staged))
+    assert staged.read_bytes() == b"h\nfirst\nmiddle\nlast\n"
+
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    (empty / "part-00000-0a1b-c000.csv").write_bytes(b"h\n")
+    assert not _splice_parts(str(empty), str(tmp_path / "none.csv"))
+
+
+@pytest.mark.parametrize(
+    "ctgov, ai",
+    [
+        ({}, {}),
+        ({"paging": "indexed", "max_pages": 6}, {}),
+        ({}, {"max_rows": 30}),
+    ],
+    ids=["token", "indexed", "cost_cap"],
+)
+def test_pipeline_with_csv_reads_each_page_once(spark, tmp_path, ctgov, ai):
+    """57 studies in pages of 10: a pipeline that writes the CSV fetches
+    each of the 6 pages exactly once."""
+    from ctgov_ai_etl_spark.plans.pipeline import run_pipeline
+
+    log = os.path.join(tmp_path, "pages.log")
+    args = [57, 10, "paging" in ctgov, log]
+    cfg = {
+        "ctgov": {
+            "page_size": 10,
+            "transport_factory": "ctgov_ai_etl_spark.fixtures:mock_ctgov_transport",
+            "transport_args": json.dumps(args),
+            **ctgov,
+        },
+        "ai_processing": {"enabled": True, **ai},
+    }
+    out_csv = os.path.join(tmp_path, "out.csv")
+    run_pipeline(spark, cfg, csv_path=out_csv)
+    with open(log) as fh:
+        pages = fh.read().split()
+    assert len(pages) == 6 and sum(map(int, pages)) == 57
+    with open(out_csv, newline="", encoding="utf-8") as fh:
+        assert len(list(csv.DictReader(fh))) == 57
+
+
+def _ctgov_tmp_dirs():
+    return set(glob.glob(os.path.join(tempfile.gettempdir(), "ctgov_csv_*")))
+
+
+def test_csv_sink_failed_or_empty_write_leaves_path_and_no_temp_dir(spark, tmp_path):
+    path = os.path.join(tmp_path, "keep.csv")
+    with open(path, "w") as fh:
+        fh.write("previous\n")
+    before = _ctgov_tmp_dirs()
+
+    assert write_reference_csv(_flat(spark, 5).filter(F.lit(False)), path) is False
+
+    @F.udf("string")
+    def boom(nct_id):
+        if nct_id == "NCT00000089":  # a late row: the first rows pass
+            raise ValueError("transport failed mid-read")
+        return nct_id
+
+    failing = _awkward_frame(spark).withColumn("nct_id", boom("nct_id"))
+    with pytest.raises(Exception, match="transport failed mid-read"):
+        write_reference_csv(failing, path)
+
+    with open(path) as fh:
+        assert fh.read() == "previous\n"
+    assert _ctgov_tmp_dirs() == before
