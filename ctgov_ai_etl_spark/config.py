@@ -10,6 +10,7 @@ it rides along in task closures (it's tiny).
 from __future__ import annotations
 
 import json
+from collections.abc import Callable
 from typing import Any
 
 
@@ -36,3 +37,21 @@ def conjuncts_from_config(cfg: dict[str, Any]) -> str | None:
     if isinstance(adv, str):
         return adv
     return " AND ".join(adv)
+
+
+def resolve_factory(dotted: str) -> Callable[..., Any]:
+    """Resolve a ``module:function`` path by import — the one seam for
+    pluggable REST transports (``ctgov.transport_factory``) and LLM
+    clients (``gemini.client_factory``).
+
+    Both factories run inside Spark's Python worker processes (data
+    source readers are built there; ``llm_classify`` builds its client
+    once per task), so the callable must be importable there: the
+    engine ships itself via addPyFile (session.ship_package), so any
+    callable in this package or an installed module qualifies, while
+    an in-process registry would be invisible to the workers.
+    """
+    import importlib
+
+    mod_name, _, fn_name = dotted.partition(":")
+    return getattr(importlib.import_module(mod_name), fn_name)

@@ -12,8 +12,7 @@ they push down to parquet scans for free:
 Essie construct        helper
 =====================  =========================================
 ``AREA[F]VALUE``       :func:`area_eq`
-``AREA[F]RANGE[a,b]``  :func:`area_range` (MIN/MAX sentinels,
-                       unit-qualified values like "18 Years")
+``AREA[F]RANGE[a,b]``  :func:`area_range` (MIN/MAX sentinels)
 ``AREA[F]MISSING``     :func:`area_missing`
 ``SEARCH[Study]t``     :func:`search_text`
 ``SEARCH[Loc](expr)``  :func:`search_nested` (∃ array element)
@@ -23,41 +22,8 @@ AND / OR / ( )         plain ``&`` / ``|`` / parentheses
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-_UNIT_RE = re.compile(r"^\s*(-?\d+(?:\.\d+)?)\s*([A-Za-z]+)?\s*$")
-
-# Unit → multiplier into a canonical base (years for ages).
-_AGE_UNITS = {
-    None: 1.0,
-    "year": 1.0,
-    "years": 1.0,
-    "month": 1 / 12,
-    "months": 1 / 12,
-    "week": 7 / 365.25,
-    "weeks": 7 / 365.25,
-    "day": 1 / 365.25,
-    "days": 1 / 365.25,
-}
-
-
-def parse_unit_value(value: str | float | int) -> float:
-    """Parse an Essie unit-qualified value ('18 Years', '6 Months')
-    into canonical years (config.example.yaml:9-10 uses these in
-    MinimumAge/MaximumAge ranges)."""
-    if isinstance(value, (int, float)):
-        return float(value)
-    m = _UNIT_RE.match(value)
-    if not m:
-        raise ValueError(f"unparseable Essie value: {value!r}")
-    num, unit = m.groups()
-    mult = _AGE_UNITS.get(unit.lower() if unit else None)
-    if mult is None:
-        raise ValueError(f"unknown unit in Essie value: {value!r}")
-    return float(num) * mult
 
 
 def _c(col: Column | str) -> Column:

@@ -208,17 +208,6 @@ def _minhash_sig_udf(num_hashes: int):
     return sig
 
 
-def minhash_signature(shingles: Column, num_hashes: int = 64) -> Column:
-    """MinHash signature as array<long>: one universal-hash min per
-    permutation over the base hashes of the shingle set."""
-    base = F.transform(shingles, lambda s: base_hash31(s))
-    sigs = [
-        F.array_min(F.transform(base, lambda h: F.pmod(F.lit(a) * h + F.lit(b), F.lit(_P))))
-        for a, b in _hash_params(num_hashes)
-    ]
-    return F.array(*sigs)
-
-
 def minhash_incremental_dedup(
     existing: DataFrame,
     incoming: DataFrame,

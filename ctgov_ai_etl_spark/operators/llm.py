@@ -91,31 +91,12 @@ PREGNANCY_RULES = KeywordRuleClient(
 )
 
 
-def resolve_client_factory(dotted: str) -> Callable[..., LLMClient]:
-    """Resolve a ``module:function`` LLM-client factory by import —
-    the same pluggability seam as ``rest.resolve_transport_factory``.
-
-    The reference swaps in its live client purely via config
-    (etl.py:236-273; config.example.yaml ``gemini.model`` /
-    ``api_key_env``); here ``gemini.client_factory`` names a callable
-    ``(gemini_cfg: dict) -> LLMClient``.  The factory runs INSIDE each
-    Spark task (client init is per-task, R10), so it must be
-    importable in the worker processes — the engine ships itself via
-    addPyFile (session.ship_package), so any callable in this package
-    or an installed module qualifies; an in-process registry would
-    not.
-    """
-    import importlib
-
-    mod_name, _, fn_name = dotted.partition(":")
-    return getattr(importlib.import_module(mod_name), fn_name)
-
-
 def keyword_rule_client_factory(gem_cfg: dict) -> LLMClient:
-    """Config-driven mock factory (the CI default, explicitly named):
-    ``gemini.rules`` as [[substring, label], ...] with optional
-    ``gemini.default_label``; no ``rules`` → the reference's pregnancy
-    category set."""
+    """Config-driven mock factory, the default ``gemini.client_factory``
+    (the reference swaps in its live client purely via config,
+    etl.py:236-273): ``gemini.rules`` as [[substring, label], ...] with
+    optional ``gemini.default_label``; no ``rules`` → the reference's
+    pregnancy category set."""
     rules = gem_cfg.get("rules")
     if not rules:
         return PREGNANCY_RULES
@@ -154,6 +135,24 @@ def format_prompt(template: str, row: dict) -> str | None:
     try:
         return template.format(**row)
     except (KeyError, IndexError):
+        return None
+
+
+def label_row(
+    client: LLMClient, limiter: TokenBucket | None, template: str, row: dict
+) -> str | None:
+    """Label one row the reference's way: a prompt missing a template
+    key is skipped (etl.py:317-323), each call takes a rate-limit
+    permit, and a failing call yields None (R12, etl.py:299-302) — the
+    caller fills None with 'N/A'."""
+    prompt = format_prompt(template, row)
+    if prompt is None:
+        return None
+    if limiter is not None:
+        limiter.acquire()
+    try:
+        return client.classify(prompt)
+    except Exception:
         return None
 
 
@@ -203,20 +202,20 @@ def llm_classify(
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         client = client_factory()  # once per task, not per row (R10)
-        bucket = TokenBucket(rate_per_sec) if rate_per_sec else None
+        limiter = TokenBucket(rate_per_sec) if rate_per_sec else None
+        spent: dict[int, int] = {}  # per_bucket_cap: bucket -> rows seen
         for pdf in batches:
             labels = []
             for row in pdf.to_dict("records"):
-                prompt = format_prompt(prompt_template, row)
-                if prompt is None:
-                    labels.append(None)
-                    continue
-                if bucket is not None:
-                    bucket.acquire()
-                try:
-                    labels.append(client.classify(prompt))
-                except Exception:
-                    labels.append(None)  # error → null (R12, etl.py:299-302)
+                if per_bucket_cap is not None:
+                    b = row["__bucket"]
+                    spent[b] = spent.get(b, 0) + 1
+                    if spent[b] > per_bucket_cap:
+                        labels.append(NA)  # quota exhausted: pass-through
+                        continue
+                labels.append(label_row(client, limiter, prompt_template, row))
+            if per_bucket_cap is not None:
+                pdf = pdf.drop(columns=["__bucket"])
             pdf = pdf.copy()
             pdf[out_col] = pd.Series(labels, index=pdf.index, dtype="object")
             yield pdf
@@ -239,49 +238,12 @@ def llm_classify(
             )
         from ctgov_ai_etl_spark.operators.limits import hash_bucket
 
-        order_cols = list(order_cols)
-        bucketed = (
+        head = (
             head.withColumn("__bucket", hash_bucket(F.col(bucket_key), n_buckets))
             .repartition(F.col("__bucket"))
             .sortWithinPartitions("__bucket", *order_cols)
         )
-
-        def run_capped(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            client = client_factory()  # once per task (R10)
-            bucket = TokenBucket(rate_per_sec) if rate_per_sec else None
-            spent: dict[int, int] = {}  # bucket -> rows classified so far
-            for pdf in batches:
-                labels = []
-                for row in pdf.to_dict("records"):
-                    b = row["__bucket"]
-                    if spent.get(b, 0) >= per_bucket_cap:
-                        labels.append(NA)  # quota exhausted: pass-through
-                        continue
-                    spent[b] = spent.get(b, 0) + 1
-                    prompt = format_prompt(prompt_template, row)
-                    if prompt is None:
-                        labels.append(None)
-                        continue
-                    if bucket is not None:
-                        bucket.acquire()
-                    try:
-                        labels.append(client.classify(prompt))
-                    except Exception:
-                        labels.append(None)  # error → null (R12)
-                pdf = pdf.drop(columns=["__bucket"]).copy()
-                pdf[out_col] = pd.Series(labels, index=pdf.index, dtype="object")
-                yield pdf
-
-        classified = bucketed.mapInPandas(run_capped, schema=out_schema)
-        classified = classified.withColumn(
-            out_col, F.coalesce(F.col(out_col), F.lit(NA))
-        )
-        if rest is not None:
-            rest = rest.select(*in_cols).withColumn(out_col, F.lit(NA))
-            classified = classified.unionByName(rest)
-        return classified
-
-    if max_rows is not None:
+    elif max_rows is not None:
         if order_cols is None:
             raise ValueError("max_rows needs order_cols for deterministic semantics")
         head, rest2 = deterministic_split(head, max_rows, order_cols)

@@ -12,18 +12,15 @@ chosen by Catalyst, not ``list`` materializations.
 
 from __future__ import annotations
 
+from functools import partial
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ctgov_ai_etl_spark.config import conjuncts_from_config
+from ctgov_ai_etl_spark.config import conjuncts_from_config, resolve_factory
 from ctgov_ai_etl_spark.operators.flatten import flatten_studies
-from ctgov_ai_etl_spark.operators.llm import (
-    PREGNANCY_RULES,
-    llm_classify,
-    resolve_client_factory,
-)
+from ctgov_ai_etl_spark.operators.llm import llm_classify
 from ctgov_ai_etl_spark.schemas import RAW_STUDY
 from ctgov_ai_etl_spark.sources import rest
 from ctgov_ai_etl_spark.sources.csv_sink import write_reference_csv
@@ -63,27 +60,18 @@ def run_pipeline(
         tuning = cfg.get("tuning_trials")
         if ai_cfg.get("debug_only_tuning_trials") and tuning:
             only_ids = ("nct_id", tuning)
-        # Config-pluggable client (reference etl.py:236-273): resolve
-        # gemini.client_factory as module:function — called with the
-        # gemini config dict once per task — defaulting to the
-        # deterministic mock so CI never needs a network.
-        if "client_factory" in gem:
-            factory_fn = resolve_client_factory(gem["client_factory"])
-            gem_cfg = dict(gem)
-
-            def client_factory():
-                return factory_fn(gem_cfg)
-
-        else:
-
-            def client_factory():
-                return PREGNANCY_RULES
-
+        # Config-pluggable client (reference etl.py:236-273): a
+        # module:function called with the gemini section once per task.
+        # The default, the keyword-rule mock, reads gemini.rules and
+        # falls back to the pregnancy rules, so CI never needs a network.
+        factory_fn = resolve_factory(
+            gem.get("client_factory", "ctgov_ai_etl_spark.operators.llm:keyword_rule_client_factory")
+        )
         flat = llm_classify(
             flat,
             prompt_template=gem.get("row_prompt_template", "{criteria}"),
             out_col=ai_cfg.get("column_name", "ai_determined_value"),
-            client_factory=client_factory,
+            client_factory=partial(factory_fn, dict(gem)),
             rate_per_sec=(1.0 / gem["api_delay"]) if gem.get("api_delay") else None,
             max_rows=ai_cfg.get("max_rows"),
             order_cols=["nct_id"] if ai_cfg.get("max_rows") else None,

@@ -11,195 +11,10 @@ or rounded coarsely enough that both engines agree bit-for-bit.
 
 from ctgov_ai_etl_spark.queries.registry import REGISTRY, QuerySpec, query
 
-# The driver walks ``queries()`` in registration order and checks the
-# first ~40-50 per round, so ``load_all`` re-orders the registry each
-# round to put queries with no (or stale) driver evidence first.
-#
-# ROTATION RULE (codified after the r9 lesson, VERDICT r9 #1):
-#   previously-DRIVER-RED (fixed but never driver-re-confirmed)
-#   > changed this round > changed last round but never re-sampled
-#   > new this round > stalest driver evidence, oldest round first.
-# The r9 mistake was placing 66 new entries ahead of the two queries
-# the r8 driver itself had flagged red — the driver's ~50-query
-# window never reached its own reds.  Reds lead, always.
-#
-# Round-11 priority (the belt-and-braces LOCAL full-catalog sweep —
-# CORRECTNESS_FULL_local_r*.json — runs on top).  The r10 verdict
-# asked for a PURE stale-evidence head this round, presuming zero
-# changed/new queries; the r11 ADVICE fixes touched two queries and
-# the round added new ones, so the codified rule above still leads
-# with those (changed > new), and the stale r4 cohort fills the rest
-# of the driver's ~50-name window — the r5/r6 cohorts follow for the
-# next rounds' windows.  Every prior _PRIORITY block (r10's reds/
-# changed/new) is driver-green in CORRECTNESS_r10.json and rotates
-# out to the registry tail.
-_PRIORITY = (
-    # Round-16 priority (OPTIMIZATION round 2).  Codified rule (r9
-    # lesson): previously-DRIVER-RED > changed this round > changed
-    # last round never re-sampled > new this round > stalest driver
-    # evidence.  No driver-reds (r15 window 50/50 green), no new
-    # queries (optimization round).
-    # -- block 0: CHANGED in the r16 optimization passes (physical
-    #    rewrites, same declared results): the vectorized minhash
-    #    signature fold + jaccard tokenize-once and their CC-family
-    #    consumers, the vectorized centroid assignment and its
-    #    sim/semantic consumers, the graph-loop edge checkpoints, the
-    #    markov-chain projection rebuild, the conditional source
-    #    spreads (codec family, profile, novelty, select/curate
-    #    pipelines), and the global_rank driver tier's consumers.
-    # -- block 1 (after the 52 changed): the 5 stream runners changed
-    #    by the r15 state-partition bound that the r15 window did not
-    #    reach.
-    # -- block 2: the stale r6-cohort remainder, rolling forward.
-    "attribution_markov_removal",
-    "dedup_minhash_lsh",
-    "dedup_incremental",
-    "dedup_lsh_recall_eval",
-    "dedup_jaccard_pairs",
-    "dedup_jaccard_bigram",
-    "basket_pair_affinity",
-    "graph_pagerank",
-    "graph_personalized_pagerank",
-    "graph_hits",
-    "sim_topk_ivf",
-    "sim_topk_ivf_partitioned",
-    "sim_topk_ivf_trained",
-    "sim_topk_ivfpq",
-    "sim_ivf_recall_eval",
-    "emb_mutual_knn_graph",
-    "dedup_embedding_blocked",
-    "dedup_components",
-    "dedup_components_star",
-    "cluster_dbscan_grid",
-    "dedup_semantic_groups",
-    "dedup_semantic_prune",
-    "dedup_keep_best",
-    "split_group_aware",
-    "pipeline_entity_resolution",
-    "pipeline_curate_semantic",
-    "dedup_semantic_incremental",
-    "mm_decode_jpeg",
-    "mm_decode_jpeg_progressive",
-    "mm_audio_wav_meta",
-    "mm_decode_png_matrix",
-    "mm_video_scene_cuts",
-    "mm_dedup_phash",
-    "mm_video_mp4_boxes",
-    "mm_audio_mp3_meta",
-    "tar_scan_members",
-    "wds_sample_groups",
-    "dq_profile_lineitem",
-    "text_ngram_novelty",
-    "pipeline_select_corpus",
-    "pipeline_curate_full",
-    "graph_jaccard_link_prediction",
-    "ml_bradley_terry",
-    "shuffle_training_order",
-    "curriculum_order",
-    "dedup_snm_multipass",
-    "dedup_sorted_neighborhood",
-    "win_rank_distributed",
-    "agg_histogram_equidepth",
-    "sample_systematic",
-    "stat_gini_concentration",
-    "llm_classify_cost_cap",
-    "stream_run_blocklist",
-    "stream_run_geo_fence",
-    "stream_run_holt",
-    "stream_run_interval_join",
-    "stream_run_quality_filter",
-    "ops_rate_limit",
-    "ts_clamped_cumsum",
-    "gov_audit_chain",
-    "stream_run_attribution",
-    "stream_run_audit_chain",
-    "stream_run_bitmap_days",
-    "stream_run_burn_rate",
-    "stream_run_capped_sessions",
-    "stream_run_chi2_drift",
-    "stream_run_cms_sketch",
-    "stream_run_decontam",
-    "stream_run_dedup",
-    "stream_run_dsir_gate",
-    "stream_run_funnel",
-    "stream_run_hll",
-    "stream_run_ohlc",
-    "stream_run_priority_sample",
-    "stream_run_rate_limit",
-    "stream_run_rest_source",
-    "stream_run_running_balance",
-    "stream_run_semantic_admission",
-    "stream_run_session_window",
-    "stream_run_sliding_window",
-    "stream_run_sprt",
-    "stream_run_stateful",
-    "stream_run_stateful_auto",
-    "stream_run_static_join",
-    "stream_run_stream_join",
-    "stream_run_stream_join_outer",
-    "stream_run_topk_window",
-    "stream_run_tumbling",
-    "stream_run_upsert",
-    "stream_run_volume_alert",
-    "zip_scan_entries",
-    "warcgz_scan_records",
-    "doc_pdf_meta",
-    "text_fingerprint",
-    "text_langid_quality",
-    "text_pack_sequences",
-    "text_tfidf_top_term",
-    "text_token_stats",
-    "text_top_tokens",
-    "udtf_tokenize",
-    "win_topk_per_group",
-    "agg_hll_sketch_merge",
-    "binary_file_scan",
-    "cdc_time_travel",
-    "embed_random_projection",
-    "essie_search_nested_struct",
-    "fn_json_map_family",
-    "fn_try_family",
-    "fn_variant_family",
-    "graph_triangle_count",
-    "join_asof",
-    "json_corrupt_records",
-    "json_scan_roundtrip",
-    "lm_bigram_score",
-    "pivot_status_matrix",
-    "quality_linear_score",
-    "sample_reservoir",
-    "sample_temperature",
-    "scd2_history",
-    "set_intersect_all",
-    "stream_session_window",
-    "stream_sliding_window",
-    "stream_tumbling_window",
-    "text_boilerplate_lines",
-    "text_gopher_rules",
-    "text_hash_embedding",
-    "text_pii_redact",
-    "text_scan_roundtrip",
-    "text_token_bpe",
-    "udf_grouped_agg",
-    "udf_map_in_arrow",
-    "udf_pandas_scalar",
-    "unpivot_stack",
-    "win_first_last",
-    "win_lag_lead",
-    "win_running_sum",
-    "win_sliding_frame",
-    "xml_scan_roundtrip",
-)
-_PRIORITY_POS = {n: i for i, n in enumerate(_PRIORITY)}
-
 
 def load_all() -> dict[str, QuerySpec]:
-    """Import every query module, then order the registry driver-first.
-
-    Order: new-this-round (never checked) -> changed-this-round (old
-    evidence stale by construction) -> round-1-latest evidence
-    (stalest, cheapest first) -> round-2-latest -> the r3-green rest.
-    """
+    """Import every query module.  The registry keeps the order in
+    which the modules were first imported, then definition order."""
     from ctgov_ai_etl_spark.queries import (  # noqa: F401
         relational,
         scalars,
@@ -217,21 +32,4 @@ def load_all() -> dict[str, QuerySpec]:
         geo,
     )
 
-    def rank(name: str) -> tuple[int, str]:
-        pos = _PRIORITY_POS.get(name)
-        if pos is not None:
-            return (pos, "")
-        return (len(_PRIORITY), name)
-
-    ghosts = [n for n in _PRIORITY if n not in REGISTRY]
-    assert not ghosts, (
-        f"_PRIORITY names missing from REGISTRY: {ghosts} — the "
-        "rotation bookkeeping must never advertise unimplemented "
-        "queries (ADVICE r5)"
-    )
-    ordered = sorted(REGISTRY, key=lambda n: rank(n))
-    if list(REGISTRY) != ordered:
-        reordered = {name: REGISTRY[name] for name in ordered}
-        REGISTRY.clear()
-        REGISTRY.update(reordered)
     return REGISTRY

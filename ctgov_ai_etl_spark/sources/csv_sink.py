@@ -12,16 +12,15 @@ Reproduces the reference's observable output contract:
   (etl.py:440-442);
 - UTF-8 with header row.
 
-``single_file=True`` means a parallel write and an ordered splice: the
-plan runs with its own partitioning into a private directory of part
-files, and the driver concatenates the parts in partition-id order into
-the one file, keeping the first header.  That is the order in which
-``coalesce(1)`` would have concatenated the partitions, so the file is
-byte-identical to a one-task write, without folding REST paging,
-``llm_classify`` and the write into a single task.  Whether any row
-was written is read off the parts, so no probe job re-runs the plan.
-At scale you leave it False and get a directory of part files — same
-schema, same rows.
+The output is always one file, written in parallel and spliced in
+order: the plan runs with its own partitioning into a private directory
+of part files, and the driver concatenates the parts in partition-id
+order into the one file, keeping the first header.  That is the order
+in which ``coalesce(1)`` would have concatenated the partitions, so the
+file is byte-identical to a one-task write, without folding REST
+paging, ``llm_classify`` and the write into a single task.  Whether any
+row was written is read off the parts, so no probe job re-runs the
+plan.
 """
 
 from __future__ import annotations
@@ -86,23 +85,16 @@ def write_reference_csv(
     df: DataFrame,
     path: str,
     ai_column: str | None = "ai_determined_value",
-    single_file: bool = True,
 ) -> bool:
-    """Write the reference-shaped CSV. Returns False (no write) on
-    empty input, mirroring etl.py:440-442.  In single-file mode a write
+    """Write the reference-shaped CSV to the one file ``path``.  Returns
+    False (no write) on empty input, mirroring etl.py:440-442.  A write
     that raises or finds no rows leaves ``path`` as it was."""
     out = reference_csv_projection(df, ai_column)
-    writer = out.write.mode("overwrite").option("header", True)
-    if not single_file:
-        if out.isEmpty():
-            return False
-        writer.csv(path)
-        return True
     tmp = tempfile.mkdtemp(prefix="ctgov_csv_")
     try:
         parts_dir = os.path.join(tmp, "parts")
         staged = os.path.join(tmp, "staged.csv")
-        writer.csv(parts_dir)
+        out.write.mode("overwrite").option("header", True).csv(parts_dir)
         if not _splice_parts(parts_dir, staged):
             return False
         os.makedirs(os.path.dirname(os.path.abspath(path)), exist_ok=True)

@@ -38,7 +38,7 @@ from __future__ import annotations
 
 import json
 from collections.abc import Callable, Iterator
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Any
 
 from pyspark.sql.datasource import (
@@ -56,6 +56,8 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StringType, StructField, StructType
 
+from ctgov_ai_etl_spark.config import resolve_factory
+
 DEFAULT_PAGE_SIZE = 1000  # reference default, etl.py:103
 DEFAULT_MAX_PAGES = 100  # reference hard cap, etl.py:156-157
 DEFAULT_TIMEOUT_S = 60.0  # reference timeout, etl.py:121
@@ -67,20 +69,6 @@ MAX_IN_PUSHDOWN = 50
 # A transport takes (params, page_index_or_token) and returns the page
 # dict {"studies": [...], "nextPageToken": str|None}.
 Transport = Callable[[dict[str, Any], Any], dict[str, Any]]
-
-
-def resolve_transport_factory(dotted: str) -> Callable[..., Transport]:
-    """Resolve a ``module:function`` transport factory by import.
-
-    Python data source readers are constructed inside Spark's Python
-    worker processes, so the factory must be importable there (the
-    engine ships itself via addPyFile — session.ship_package); an
-    in-process registry would be invisible to the workers.
-    """
-    import importlib
-
-    mod_name, _, fn_name = dotted.partition(":")
-    return getattr(importlib.import_module(mod_name), fn_name)
 
 
 def _http_transport(url: str, timeout_s: float) -> Transport:
@@ -193,6 +181,58 @@ def filters_to_essie(filters: list[Filter]) -> tuple[list[str], list[Filter]]:
     return conjuncts, unsupported
 
 
+def _page_reader(options: dict[str, str]) -> tuple[Transport, dict[str, Any], int]:
+    """Reader options → (transport under the retry policy, page params,
+    page cap): the one option parser of the batch and stream readers.
+
+    The params start from any config-provided ``filter_advanced``
+    conjuncts, exactly like the reference AND-joins its YAML list
+    (etl.py:100).  ``fields`` is projection pushdown (SURVEY.md §4):
+    the CTGov v2 API returns only the requested dotted study paths —
+    the server-side analogue of parquet column pruning.  Catalyst can't
+    derive it (the source's schema is one RAW_STUDY json column), so
+    it's an explicit option; operators/flatten.py:flatten_fields()
+    yields the ~10 leaves the reference pipeline needs instead of the
+    full study document (the reference always fetches whole studies,
+    etl.py:115-157)."""
+    factory = options.get("transport_factory")
+    if factory:
+        args = json.loads(options.get("transport_args", "[]"))
+        transport = resolve_factory(factory)(*args)
+    else:
+        timeout_s = float(options.get("timeout_s", DEFAULT_TIMEOUT_S))
+        transport = _http_transport(options.get("url", ""), timeout_s)
+    transport = with_retries(
+        transport,
+        int(options.get("max_retries", 0)),
+        float(options.get("backoff_s", 0.5)),
+    )
+    params: dict[str, Any] = {"pageSize": int(options.get("page_size", DEFAULT_PAGE_SIZE))}
+    if options.get("filter_advanced"):
+        params["filter.advanced"] = options["filter_advanced"]
+    if options.get("fields"):
+        params["fields"] = options["fields"]
+    return transport, params, int(options.get("max_pages", DEFAULT_MAX_PAGES))
+
+
+def _token_walk(
+    transport: Transport, params: dict[str, Any], token: Any, n_pages: int
+) -> Iterator[tuple[dict[str, Any], Any]]:
+    """Yield ``(page, next_token)`` for up to ``n_pages`` pages from
+    ``token``, stopping after a page without a ``nextPageToken``
+    (the reference's loop and page cap, etl.py:147-157)."""
+    for _ in range(n_pages):
+        page = transport(params, token)
+        token = page.get("nextPageToken")
+        yield page, token
+        if not token:
+            return
+
+
+def _page_rows(page: dict[str, Any]) -> Iterator[tuple]:
+    return ((json.dumps(study, sort_keys=True),) for study in page.get("studies", []))
+
+
 @dataclass
 class PagePartition(InputPartition):
     page: int = 0
@@ -200,52 +240,20 @@ class PagePartition(InputPartition):
 
 class RestStudiesReader(DataSourceReader):
     def __init__(self, options: dict[str, str]):
-        self.options = options
-        self.page_size = int(options.get("page_size", DEFAULT_PAGE_SIZE))
-        self.max_pages = int(options.get("max_pages", DEFAULT_MAX_PAGES))
-        self.timeout_s = float(options.get("timeout_s", DEFAULT_TIMEOUT_S))
+        self.transport, self.params, self.max_pages = _page_reader(options)
         self.indexed = options.get("paging", "token") == "indexed"
-        self.url = options.get("url", "")
-        factory = options.get("transport_factory")
-        if factory:
-            import json as _json
-
-            args = _json.loads(options.get("transport_args", "[]"))
-            self.transport = resolve_transport_factory(factory)(*args)
-        else:
-            self.transport = _http_transport(self.url, self.timeout_s)
-        self.transport = with_retries(
-            self.transport,
-            int(options.get("max_retries", 0)),
-            float(options.get("backoff_s", 0.5)),
-        )
-        # filter.advanced starts from any config-provided conjuncts,
-        # exactly like the reference AND-joins its YAML list (etl.py:100)
-        adv = options.get("filter_advanced")
-        self.conjuncts: list[str] = [adv] if adv else []
-        # Projection pushdown (SURVEY.md §4): the CTGov v2 API's
-        # ``fields`` query param returns only the requested dotted
-        # study paths — the server-side analogue of parquet column
-        # pruning.  Catalyst can't derive it (the source's schema is
-        # one RAW_STUDY json column), so it's an explicit option;
-        # operators/flatten.py:flatten_fields() yields the projection
-        # the reference pipeline needs, ~10 leaves instead of the
-        # full study document (the reference always fetches whole
-        # studies, etl.py:115-157).
-        self.fields = options.get("fields")
+        self.pushed: list[str] = []
 
     def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
         pushed, unsupported = filters_to_essie(list(filters))
-        self.conjuncts.extend(pushed)
+        self.pushed.extend(pushed)
         return iter(unsupported)
 
     def _params(self) -> dict[str, Any]:
-        params: dict[str, Any] = {"pageSize": self.page_size}
-        if self.conjuncts:
-            params["filter.advanced"] = " AND ".join(self.conjuncts)
-        if self.fields:
-            params["fields"] = self.fields
-        return params
+        if not self.pushed:
+            return self.params
+        conjuncts = [self.params.get("filter.advanced"), *self.pushed]
+        return {**self.params, "filter.advanced": " AND ".join(c for c in conjuncts if c)}
 
     def partitions(self) -> list[InputPartition]:
         if self.indexed:
@@ -255,21 +263,12 @@ class RestStudiesReader(DataSourceReader):
         return [PagePartition(0)]  # opaque-token mode: sequential walk
 
     def read(self, partition: PagePartition) -> Iterator[tuple]:
-        transport = self.transport
         params = self._params()
         if self.indexed:
-            page = transport(params, partition.page)
-            for study in page.get("studies", []):
-                yield (json.dumps(study, sort_keys=True),)
+            yield from _page_rows(self.transport(params, partition.page))
             return
-        token: Any = None
-        for _ in range(self.max_pages):  # reference page cap, etl.py:156
-            page = transport(params, token)
-            for study in page.get("studies", []):
-                yield (json.dumps(study, sort_keys=True),)
-            token = page.get("nextPageToken")
-            if not token:  # etl.py:147-150
-                return
+        for page, _ in _token_walk(self.transport, params, None, self.max_pages):
+            yield from _page_rows(page)
 
 
 class RestStudiesStreamReader(SimpleDataSourceStreamReader):
@@ -292,28 +291,8 @@ class RestStudiesStreamReader(SimpleDataSourceStreamReader):
     """
 
     def __init__(self, options: dict[str, str]):
-        self.page_size = int(options.get("page_size", DEFAULT_PAGE_SIZE))
-        self.max_pages = int(options.get("max_pages", DEFAULT_MAX_PAGES))
-        self.timeout_s = float(options.get("timeout_s", DEFAULT_TIMEOUT_S))
+        self.transport, self.params, self.max_pages = _page_reader(options)
         self.pages_per_batch = int(options.get("pages_per_batch", 1))
-        self.url = options.get("url", "")
-        factory = options.get("transport_factory")
-        if factory:
-            args = json.loads(options.get("transport_args", "[]"))
-            self.transport = resolve_transport_factory(factory)(*args)
-        else:
-            self.transport = _http_transport(self.url, self.timeout_s)
-        self.transport = with_retries(
-            self.transport,
-            int(options.get("max_retries", 0)),
-            float(options.get("backoff_s", 0.5)),
-        )
-        adv = options.get("filter_advanced")
-        self._params: dict[str, Any] = {"pageSize": self.page_size}
-        if adv:
-            self._params["filter.advanced"] = adv
-        if options.get("fields"):  # server-side projection, as in batch
-            self._params["fields"] = options["fields"]
 
     def initialOffset(self) -> dict:
         return {"token": None, "page": 0, "done": False}
@@ -321,19 +300,14 @@ class RestStudiesStreamReader(SimpleDataSourceStreamReader):
     def _walk(self, start: dict, n_pages: int) -> tuple[list[tuple], dict]:
         rows: list[tuple] = []
         token, page, done = start.get("token"), start["page"], start.get("done", False)
-        for _ in range(n_pages):
-            if done or page >= self.max_pages:
-                done = True
-                break
-            pg = self.transport(self._params, token)
-            rows.extend(
-                (json.dumps(s, sort_keys=True),) for s in pg.get("studies", [])
-            )
-            token = pg.get("nextPageToken")
-            page += 1
-            if not token:
-                done = True
-                break
+        if not done:
+            # pages left under the cap; asking past it marks the walk done
+            budget = max(min(n_pages, self.max_pages - page), 0)
+            for pg, token in _token_walk(self.transport, self.params, token, budget):
+                rows.extend(_page_rows(pg))
+                page += 1
+                done = not token
+            done = done or n_pages > budget
         return rows, {"token": token, "page": page, "done": done}
 
     def read(self, start: dict) -> tuple[Iterator[tuple], dict]:

@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import time
 
+import pytest
+
 from ctgov_ai_etl_spark.operators.llm import (
     NA,
     KeywordRuleClient,
@@ -41,17 +43,35 @@ def test_classify_appends_column_and_fills_na(spark):
     assert got["2"] == "NOT MENTIONED"
 
 
-def test_classify_error_to_na(spark):
+@pytest.mark.parametrize(
+    "governor",
+    [{}, {"max_rows": 3, "order_cols": ["id"]},
+     {"per_bucket_cap": 3, "bucket_key": "id", "n_buckets": 2, "order_cols": ["id"]}],
+    ids=["plain", "max_rows", "per_bucket_cap"],
+)
+def test_classify_error_to_na(spark, governor):
+    """Every cost governor labels rows the same way: a raising client
+    and a template key missing from the row both end as 'N/A'."""
     class Exploding(KeywordRuleClient):
         def classify(self, prompt):
-            raise RuntimeError("boom")
+            if "boom" in prompt:
+                raise RuntimeError("boom")
+            return super().classify(prompt)
 
-    df = spark.createDataFrame([("1", "text")], "id string, criteria string")
-    out = llm_classify(
-        df, "{criteria}", out_col="label",
-        client_factory=lambda: Exploding(rules=()),
+    df = spark.createDataFrame(
+        [("1", "boom", {"arm": "a"}), ("2", "must be pregnant", {}),
+         ("3", "must be pregnant", {"arm": "b"})],
+        "id string, criteria string, meta map<string,string>",
     )
-    assert out.collect()[0].label == NA  # error → null → 'N/A' (R12/R14)
+    out = llm_classify(
+        df, "{criteria} {meta[arm]}", out_col="label",
+        client_factory=lambda: Exploding(rules=PREGNANCY_RULES.rules),
+        **governor,
+    )
+    got = {r.id: r.label for r in out.collect()}
+    assert got["1"] == NA  # error → null → 'N/A' (R12/R14)
+    assert got["2"] == NA  # missing template key → skipped (R11)
+    assert got["3"] == "ONLY_PREGNANCY"
 
 
 def test_cost_cap_and_remainder_passthrough(spark):
@@ -99,8 +119,6 @@ def test_per_bucket_cap_quota_and_determinism(spark):
 
 
 def test_per_bucket_cap_parameter_validation(spark):
-    import pytest
-
     df = spark.createDataFrame([(1, "x")], "id long, criteria string")
     with pytest.raises(ValueError, match="alternative cost governors"):
         llm_classify(
@@ -135,10 +153,16 @@ def test_token_bucket_rate():
 def test_config_pluggable_client_factory(spark):
     """gemini.client_factory resolves a module:function factory (the
     reference's config-swappable live client, etl.py:236-273) and the
-    resolved client — not the default mock — runs inside the worker
-    tasks: custom rules relabel every classified row."""
+    resolved client — not the pregnancy rules — runs inside the worker
+    tasks: custom rules relabel every classified row.  Without a named
+    factory the default keyword-rule factory applies the same rules."""
     from ctgov_ai_etl_spark.plans.pipeline import run_pipeline
 
+    gemini = {
+        "rules": [["pregnan", "CUSTOM_LABEL"]],
+        "default_label": "CUSTOM_DEFAULT",
+        "row_prompt_template": "Criteria: {criteria}",
+    }
     cfg = {
         "ctgov": {
             "api_url": "https://example.invalid/api/v2/studies",
@@ -146,14 +170,10 @@ def test_config_pluggable_client_factory(spark):
             "transport_factory": "ctgov_ai_etl_spark.fixtures:mock_ctgov_transport",
             "transport_args": "[20, 10]",
         },
-        "gemini": {
-            "client_factory": "ctgov_ai_etl_spark.operators.llm:keyword_rule_client_factory",
-            "rules": [["pregnan", "CUSTOM_LABEL"]],
-            "default_label": "CUSTOM_DEFAULT",
-            "row_prompt_template": "Criteria: {criteria}",
-        },
         "ai_processing": {"enabled": True, "column_name": "ai_determined_value"},
     }
-    labels = {r["ai_determined_value"] for r in run_pipeline(spark, cfg).collect()}
-    assert labels <= {"CUSTOM_LABEL", "CUSTOM_DEFAULT", "N/A"}
-    assert "CUSTOM_LABEL" in labels or "CUSTOM_DEFAULT" in labels
+    named = dict(gemini, client_factory="ctgov_ai_etl_spark.operators.llm:keyword_rule_client_factory")
+    for gem in (named, gemini):
+        out = run_pipeline(spark, dict(cfg, gemini=gem))
+        labels = {r["ai_determined_value"] for r in out.collect()}
+        assert labels == {"CUSTOM_LABEL", "CUSTOM_DEFAULT"}, gem

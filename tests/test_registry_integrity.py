@@ -44,17 +44,3 @@ def test_bench_headline_names_are_registered(registry):
     unknown = [n for n in bench.HEADLINE if n not in registry]
     assert unknown == []
 
-
-def test_priority_block_names_are_registered(registry):
-    from ctgov_ai_etl_spark.queries import _PRIORITY
-
-    unknown = [n for n in _PRIORITY if n not in registry]
-    assert unknown == [], f"phantom priority names: {unknown}"
-    assert len(set(_PRIORITY)) == len(_PRIORITY), "duplicate priority entries"
-
-
-def test_registry_order_puts_priority_first(registry):
-    from ctgov_ai_etl_spark.queries import _PRIORITY
-
-    names = list(registry)
-    assert names[: len(_PRIORITY)] == list(_PRIORITY)

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.datasource import (
     EqualTo,
@@ -236,8 +237,6 @@ def test_retry_backoff_completes_flaky_read(spark):
     on the third attempt (VERDICT r3 item 5); without opting in, the
     same flaky transport aborts the read — the reference's
     abort-on-error semantics stay the default."""
-    import pytest
-
     df = _read(
         spark,
         transport_factory="tests.test_rest_source:flaky_transport_factory",
@@ -269,8 +268,6 @@ def test_with_retries_gives_up_on_persistent_and_nontransient_errors():
     def bad_request(params, token):
         calls["n"] += 1
         raise ValueError("400 bad essie expression")
-
-    import pytest
 
     with pytest.raises(TransientPageError):
         with_retries(always_503, max_retries=2, backoff_s=0.001)({}, None)
@@ -388,3 +385,53 @@ def test_fields_projection_preserves_flatten_parity(spark):
     full = _read(spark, **FIXTURE_OPTS)
     pruned = _read(spark, **FIXTURE_OPTS, fields=flatten_fields(extended=True))
     assert flat(pruned) == flat(full)
+
+
+def _stream_rows(spark, opts, ckpt):
+    """Every row a fresh stream over ``opts`` delivers, batch by batch."""
+    rest.register(spark)
+    reader = spark.readStream.format("ctgov_rest")
+    for k, v in opts.items():
+        reader = reader.option(k, v)
+    rows: list[str] = []
+    q = (
+        reader.load()
+        .writeStream.foreachBatch(lambda df, _: rows.extend(r[0] for r in df.collect()))
+        .option("checkpointLocation", ckpt)
+        .trigger(processingTime="0 seconds")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return rows
+
+
+@pytest.mark.parametrize("cap", [None, 4], ids=["uncapped", "max_pages_4"])
+def test_batch_and_stream_walk_the_same_pages_once(spark, tmp_path, cap):
+    """Token mode, indexed mode and the stream reader return the same
+    rows from one corpus, fetching each page exactly once, with and
+    without a page cap below the corpus's 6 pages."""
+    from collections import Counter
+
+    from ctgov_ai_etl_spark.fixtures import make_raw_studies_json
+
+    pages = cap or 6
+    expected = Counter(make_raw_studies_json(57)[: pages * 10])
+    for mode in ("token", "indexed", "stream"):
+        log = str(tmp_path / f"{mode}.log")
+        opts = dict(FIXTURE_OPTS, transport_args=json.dumps([57, 10, mode == "indexed", log]))
+        if mode == "indexed":  # one partition per page, up to max_pages
+            opts.update(paging="indexed", max_pages=str(pages))
+        elif cap:
+            opts["max_pages"] = str(cap)
+        if mode == "stream":
+            opts["pages_per_batch"] = "2"
+            rows = _stream_rows(spark, opts, str(tmp_path / "ckpt"))
+        else:
+            rows = [r[0] for r in _read(spark, **opts).collect()]
+        assert Counter(rows) == expected, mode
+        with open(log) as fh:
+            served = sorted(map(int, fh.read().split()))
+        assert served == ([10] * cap if cap else [7] + [10] * 5), mode
