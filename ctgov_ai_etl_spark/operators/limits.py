@@ -8,12 +8,17 @@ distributed collection without an order, so the engine requires an
 explicit ordering column (SURVEY.md §7 'positional limit').
 
 Scale note: the naive formulation — ``row_number()`` over an
-unpartitioned window — funnels every row through ONE reducer.  This
-module instead computes the global rank in two parallel phases
-(range-partition on the order key → per-partition local rank → add
-per-partition row-count offsets), the standard distributed ranking
-layout.  The only driver-side data is one (partition_id, count) row
-per partition.
+unpartitioned window — funnels every row through ONE reducer.  The
+positional split needs no rank at all: one top-N probe of the narrow
+key projection (per-partition bottom-N, merged on the driver, no
+shuffle) finds the keys of rows N and N+1, and the split is a
+``<= boundary`` filter and its complement, both map-side over the
+pinned input.  Only when those two keys tie (or the key type or a
+NULL boundary rules the filter out) does it fall back to the global
+rank, computed in two parallel phases (range-partition on the order
+key → per-partition local rank → add per-partition row-count
+offsets), the standard distributed ranking layout.  The only
+driver-side data is one (partition_id, count) row per partition.
 """
 
 from __future__ import annotations
@@ -166,19 +171,62 @@ def global_rank_with_count(
 def deterministic_split(
     df: DataFrame, n: int, order_cols: Iterable[str]
 ) -> tuple[DataFrame, DataFrame]:
-    """(head, remainder) of the first ``n`` rows under ``order_cols``.
+    """(head, remainder) of the first ``n`` rows under ``order_cols``
+    (ascending, NULLs first).
 
     The remainder is KEPT, matching the reference's pass-through of
     unprocessed rows (etl.py:364, 411-414) — a cost governor, not a
-    filter.  Both halves derive from the same ranked frame; cache the
-    input if recomputing its lineage is expensive (the split itself
-    adds one counts job plus the rank shuffles, all parallel).
+    filter.  For key types in ``_RANK_DRIVER_KEY_TYPES`` (whose
+    comparisons a literal reproduces exactly) the input is pinned
+    (memory-and-disk) and ONE job runs here:
+    ``orderBy(order_cols).offset(n-1).limit(2)`` over the key
+    projection, planned as a TakeOrderedAndProject (per-partition
+    bottom-(n+1), merged on the driver: no shuffle, no window), which
+    also fills the pin.  The keys of rows n and n+1 then split the
+    pinned rows by a lexicographic NULLS-FIRST ``<= boundary`` filter
+    and its complement; both halves keep the input's partition order.
+    When the two keys tie, the boundary key holds a NULL, or a key
+    has another type, the halves come from :func:`global_rank`
+    instead.
     """
     order_cols = list(order_cols)
+    if n <= 0:
+        return df.filter(F.lit(False)), df
+    if all(
+        isinstance(df.schema[c].dataType, _RANK_DRIVER_KEY_TYPES)
+        for c in order_cols
+    ):
+        df = track(df.persist(StorageLevel.MEMORY_AND_DISK))
+        probe = [
+            tuple(r)
+            for r in df.select(*order_cols).orderBy(*order_cols)
+            .offset(n - 1).limit(2).collect()
+        ]
+        if len(probe) < 2:  # n >= row count: every row is in the head
+            return df, df.filter(F.lit(False))
+        boundary, after = probe
+        if boundary != after and None not in boundary:
+            head = _le_nulls_first(df, order_cols, boundary)
+            return df.filter(head), df.filter(~head)
     ranked = global_rank(df, order_cols)
     head = ranked.filter(F.col(_RANK_COL) <= n).drop(_RANK_COL)
     rest = ranked.filter(F.col(_RANK_COL) > n).drop(_RANK_COL)
     return head, rest
+
+
+def _le_nulls_first(
+    df: DataFrame, order_cols: list[str], boundary: tuple
+) -> "F.Column":
+    """``(order_cols) <= boundary`` in ascending NULLS-FIRST order, for
+    a boundary without NULLs; never NULL itself, so its negation is the
+    exact complement."""
+    cond = None
+    for c, v in reversed(list(zip(order_cols, boundary))):
+        col = F.col(c)
+        lit = F.lit(v).cast(df.schema[c].dataType)
+        cmp = col <= lit if cond is None else (col < lit) | ((col == lit) & cond)
+        cond = col.isNull() | cmp
+    return cond
 
 
 def id_set_split(

@@ -26,6 +26,8 @@ so the operator is DuckDB-oracle-checkable (CASE WHEN ... LIKE).
 
 from __future__ import annotations
 
+import re
+import string
 import time
 from collections.abc import Callable, Iterable, Iterator
 from dataclasses import dataclass
@@ -138,6 +140,30 @@ def format_prompt(template: str, row: dict) -> str | None:
         return None
 
 
+def template_fields(template: str) -> set[str] | None:
+    """The root names ``template.format(**row)`` looks up (``criteria``
+    for ``{criteria!r:>{width}}`` — with ``width`` from its nested spec
+    — or ``meta`` for ``{meta[arm]}``), or None when the template does
+    not parse, so the caller formats with every column and fails the
+    way ``str.format`` does.  Positional fields (``{0}``, ``{}``) are
+    kept: no row dict satisfies them, so they skip the row either way."""
+    try:
+        parsed = list(string.Formatter().parse(template))
+    except ValueError:
+        return None
+    fields: set[str] = set()
+    for _, name, spec, _ in parsed:
+        if name is None:
+            continue
+        fields.add(re.match(r"[^.\[]*", name).group())
+        if spec:
+            nested = template_fields(spec)
+            if nested is None:
+                return None
+            fields |= nested
+    return fields
+
+
 def label_row(
     client: LLMClient, limiter: TokenBucket | None, template: str, row: dict
 ) -> str | None:
@@ -178,9 +204,12 @@ def llm_classify(
     Two alternative cost governors (SCALE.md 'llm_classify' note):
 
     - ``max_rows`` + ``order_cols`` — the reference's EXACT positional
-      semantics (etl.py:355-364): a distributed global rank splits the
-      first N rows from the remainder.  The rank is parallel but still
-      a coordination point (range shuffle + offsets collect).
+      semantics (etl.py:355-364): the input is pinned, one top-N probe
+      of the order key finds the key of row N, and a ``<= boundary``
+      filter and its complement split the first N rows from the
+      remainder — one driver-merged job, no shuffle, both halves in
+      input order (:func:`~ctgov_ai_etl_spark.operators.limits.deterministic_split`;
+      a tie at the boundary falls back to the distributed global rank).
     - ``per_bucket_cap`` + ``bucket_key`` + ``order_cols`` — the
       extreme-scale form: rows are md5-bucketed by ``bucket_key`` into
       ``n_buckets`` deterministic buckets, each bucket classifies only
@@ -195,6 +224,12 @@ def llm_classify(
     ship_package(df.sparkSession)
 
     in_cols = df.columns
+    # The row dicts hold only the columns the prompt reads (plus the
+    # bucket the per-bucket quota reads), not every column of the row.
+    fields = template_fields(prompt_template)
+    row_cols = [c for c in in_cols if fields is None or c in fields]
+    if per_bucket_cap is not None:
+        row_cols.append("__bucket")
     out_schema = ", ".join(
         [f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields]
         + [f"`{out_col}` string"]
@@ -206,7 +241,8 @@ def llm_classify(
         spent: dict[int, int] = {}  # per_bucket_cap: bucket -> rows seen
         for pdf in batches:
             labels = []
-            for row in pdf.to_dict("records"):
+            rows = pdf[row_cols].to_dict("records") if row_cols else [{}] * len(pdf)
+            for row in rows:
                 if per_bucket_cap is not None:
                     b = row["__bucket"]
                     spent[b] = spent.get(b, 0) + 1
@@ -216,7 +252,6 @@ def llm_classify(
                 labels.append(label_row(client, limiter, prompt_template, row))
             if per_bucket_cap is not None:
                 pdf = pdf.drop(columns=["__bucket"])
-            pdf = pdf.copy()
             pdf[out_col] = pd.Series(labels, index=pdf.index, dtype="object")
             yield pdf
 

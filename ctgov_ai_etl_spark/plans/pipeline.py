@@ -34,6 +34,7 @@ def read_studies(spark: SparkSession, cfg: dict[str, Any]) -> DataFrame:
         spark.read.format("ctgov_rest")
         .option("page_size", str(ctgov.get("page_size", rest.DEFAULT_PAGE_SIZE)))
         .option("url", ctgov.get("api_url", ""))
+        .option("parallelism", str(spark.sparkContext.defaultParallelism))
     )
     adv = conjuncts_from_config(cfg)
     if adv:

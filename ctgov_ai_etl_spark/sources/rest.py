@@ -8,8 +8,14 @@ server as ``filter.advanced`` (etl.py:97-105).  Here the same source
 is a ``DataSource`` so it participates in a Spark plan:
 
 - **partition planning = pagination.**  When the backend supports
-  numbered pages (``paging=indexed``), each page becomes an
-  ``InputPartition`` and executors fetch in parallel.  The public
+  numbered pages (``paging=indexed``), the pages are cut into
+  ``min(max_pages, parallelism)`` contiguous page ranges, one
+  ``InputPartition`` each, and executors fetch them in parallel; a
+  range's task pays the source and downstream Python-worker set-up
+  once for all its pages, and partition order stays page order.
+  ``parallelism`` is a reader option (the pipeline passes the
+  session's ``defaultParallelism``); without it each page is its own
+  range.  The public
   CTGov v2 API only hands out opaque ``nextPageToken``s
   (etl.py:146-152), which serializes page *discovery*; in that mode
   the source walks tokens in one partition (documented limitation,
@@ -234,14 +240,31 @@ def _page_rows(page: dict[str, Any]) -> Iterator[tuple]:
 
 
 @dataclass
-class PagePartition(InputPartition):
-    page: int = 0
+class PageRange(InputPartition):
+    """Pages ``start`` .. ``stop - 1`` (indexed paging), read in order."""
+
+    start: int = 0
+    stop: int = 1
+
+
+def page_ranges(n_pages: int, parallelism: int) -> list[PageRange]:
+    """``min(n_pages, parallelism)`` contiguous ranges covering pages
+    0 .. n_pages - 1 in order, their sizes differing by at most one."""
+    n_parts = max(min(n_pages, parallelism), 1)
+    size, extra = divmod(n_pages, n_parts)
+    ranges, start = [], 0
+    for i in range(n_parts):
+        stop = start + size + (i < extra)
+        ranges.append(PageRange(start, stop))
+        start = stop
+    return ranges
 
 
 class RestStudiesReader(DataSourceReader):
     def __init__(self, options: dict[str, str]):
         self.transport, self.params, self.max_pages = _page_reader(options)
         self.indexed = options.get("paging", "token") == "indexed"
+        self.parallelism = int(options.get("parallelism", self.max_pages))
         self.pushed: list[str] = []
 
     def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
@@ -257,15 +280,16 @@ class RestStudiesReader(DataSourceReader):
 
     def partitions(self) -> list[InputPartition]:
         if self.indexed:
-            # page count is discoverable → one partition per page,
+            # page count is discoverable → contiguous page ranges,
             # fetched in parallel by executors
-            return [PagePartition(i) for i in range(self.max_pages)]
-        return [PagePartition(0)]  # opaque-token mode: sequential walk
+            return page_ranges(self.max_pages, self.parallelism)
+        return [PageRange(0, self.max_pages)]  # opaque-token mode: sequential walk
 
-    def read(self, partition: PagePartition) -> Iterator[tuple]:
+    def read(self, partition: PageRange) -> Iterator[tuple]:
         params = self._params()
         if self.indexed:
-            yield from _page_rows(self.transport(params, partition.page))
+            for page in range(partition.start, partition.stop):
+                yield from _page_rows(self.transport(params, page))
             return
         for page, _ in _token_walk(self.transport, params, None, self.max_pages):
             yield from _page_rows(page)

@@ -9,10 +9,12 @@ import pytest
 from ctgov_ai_etl_spark.operators.llm import (
     NA,
     KeywordRuleClient,
+    LLMClient,
     PREGNANCY_RULES,
     TokenBucket,
     format_prompt,
     llm_classify,
+    template_fields,
 )
 
 
@@ -30,6 +32,32 @@ def test_keyword_rules_precedence():
 def test_format_prompt_missing_key_skips():
     assert format_prompt("{a} {b}", {"a": 1}) is None  # KeyError → skip (R11)
     assert format_prompt("{a}!", {"a": "x"}) == "x!"
+
+
+@pytest.mark.parametrize(
+    "template",
+    ["{criteria} {meta[arm]}", "{0}", "{missing}", "no fields", "{criteria!r}",
+     "{criteria:>{width}}"],
+)
+def test_prompt_from_template_fields_matches_full_row(spark, template):
+    """The row dicts hold only the template's root fields, and each
+    prompt equals the one formatted from the full row dict (an echo
+    client returns the prompt as its label)."""
+    class Echo(LLMClient):
+        def classify(self, prompt):
+            return prompt
+
+    df = spark.createDataFrame(
+        [("1", "must be pregnant", {"arm": "a"}, 20, 1.5),
+         ("2", "healthy adults", {}, 3, None)],
+        "id string, criteria string, meta map<string,string>, width int, x double",
+    )
+    out = llm_classify(df, template, out_col="label", client_factory=Echo)
+    got = {r.id: r.label for r in out.collect()}
+    full = {r.id: r.asDict() for r in df.collect()}
+    want = {i: format_prompt(template, row) or NA for i, row in full.items()}
+    assert got == want
+    assert template_fields("{criteria:>{width}}") == {"criteria", "width"}
 
 
 def test_classify_appends_column_and_fills_na(spark):

@@ -254,8 +254,9 @@ def test_csv_sink_splice_orders_parts_by_partition_id(tmp_path):
         ({}, {}),
         ({"paging": "indexed", "max_pages": 6}, {}),
         ({}, {"max_rows": 30}),
+        ({"paging": "indexed", "max_pages": 6}, {"max_rows": 30}),
     ],
-    ids=["token", "indexed", "cost_cap"],
+    ids=["token", "indexed", "cost_cap", "indexed_cost_cap"],
 )
 def test_pipeline_with_csv_reads_each_page_once(spark, tmp_path, ctgov, ai):
     """57 studies in pages of 10: a pipeline that writes the CSV fetches
@@ -280,6 +281,28 @@ def test_pipeline_with_csv_reads_each_page_once(spark, tmp_path, ctgov, ai):
     assert len(pages) == 6 and sum(map(int, pages)) == 57
     with open(out_csv, newline="", encoding="utf-8") as fh:
         assert len(list(csv.DictReader(fh))) == 57
+
+
+def test_token_and_indexed_pipeline_csvs_are_byte_identical(spark, tmp_path):
+    """Indexed paging reads its page ranges in parallel, yet the CSV
+    holds the same bytes as the sequential token walk's."""
+    from ctgov_ai_etl_spark.plans.pipeline import run_pipeline
+
+    out = {}
+    for mode in ("token", "indexed"):
+        ctgov = {
+            "page_size": 10,
+            "transport_factory": "ctgov_ai_etl_spark.fixtures:mock_ctgov_transport",
+            "transport_args": json.dumps([57, 10, mode == "indexed"]),
+        }
+        if mode == "indexed":
+            ctgov.update(paging="indexed", max_pages=6)
+        path = os.path.join(tmp_path, f"{mode}.csv")
+        run_pipeline(spark, {"ctgov": ctgov}, csv_path=path)
+        with open(path, "rb") as fh:
+            out[mode] = fh.read()
+    assert out["token"].count(b"\nNCT") > 0
+    assert out["token"] == out["indexed"]
 
 
 def _ctgov_tmp_dirs():

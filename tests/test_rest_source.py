@@ -78,6 +78,30 @@ def test_indexed_paging_parallel_partitions(spark):
     assert df.count() == 57
 
 
+def test_page_ranges_are_contiguous_and_cover_every_page():
+    assert [(r.start, r.stop) for r in rest.page_ranges(6, 4)] == [
+        (0, 2), (2, 4), (4, 5), (5, 6)
+    ]
+    assert [(r.start, r.stop) for r in rest.page_ranges(6, 1)] == [(0, 6)]
+    assert [(r.start, r.stop) for r in rest.page_ranges(3, 8)] == [(0, 1), (1, 2), (2, 3)]
+
+
+@pytest.mark.parametrize("parallelism, parts", [(1, 1), (4, 4), (16, 6)])
+def test_indexed_paging_page_ranges(spark, tmp_path, parallelism, parts):
+    """With ``parallelism`` the six pages are read as min(6, parallelism)
+    page ranges: each page is served once, and rows arrive in page
+    order."""
+    from ctgov_ai_etl_spark.fixtures import make_raw_studies_json
+
+    log = str(tmp_path / "pages.log")
+    opts = dict(FIXTURE_OPTS, transport_args=json.dumps([57, 10, True, log]))
+    df = _read(spark, **opts, paging="indexed", max_pages="6", parallelism=str(parallelism))
+    assert df.rdd.getNumPartitions() == parts
+    assert [r[0] for r in df.collect()] == make_raw_studies_json(57)
+    with open(log) as fh:
+        assert sorted(map(int, fh.read().split())) == [7] + [10] * 5
+
+
 def test_config_conjuncts_reach_params(spark):
     # the transport asserts on filter.advanced via a factory that
     # records params into the rows it serves
