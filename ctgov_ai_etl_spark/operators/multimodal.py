@@ -2,23 +2,30 @@
 (SURVEY.md §2.3 'multimodal columns'; NS mandate).
 
 Design: media travels as an opaque ``binary`` column plus a typed
-metadata struct; per-modality ops (decode, feature-extract, resize,
-frame-sample) are Arrow-batched ``mapInPandas`` stages so each task
-amortizes codec init and the bytes never round-trip through Python
-row objects.  "No keyed shuffle" throughout this module means: the
+metadata struct; every per-modality op (render, decode,
+feature-extract, resize, frame-sample, container walk) is one
+Arrow-batched ``mapInPandas`` stage built by :func:`_python_stage`, so
+each task amortizes codec init and the bytes never round-trip through
+Python row objects.  A kernel is its per-row function plus its output
+DDL: the row function maps one (id, payload) pair to its output
+tuples — one for a per-row kernel, any number for an exploding walk
+(frames, records, members), so a multi-GB stream never materializes
+as one row.  The choice of Python boundary (``mapInPandas`` today,
+``mapInArrow`` or SQL fusion per kernel profile) therefore sits in
+one place.  "No keyed shuffle" throughout this module means: the
 codec path never hash-partitions (codec work has no key); the ONLY
-exchange is the renderers' opt-in ``spread`` (below).  Four REAL
-image codecs back the seam in pure Python —
-netpbm (P5/P6) and 8-bit PNG with all five scanline filters
-(``functions/imagecodec.py``), baseline AND progressive JPEG with
-canonical Huffman, restart markers, successive approximation, and
-the 8x8 IDCT (``functions/jpegcodec.py``, rounds 10-11), and
-animated GIF with real LZW and interlacing
-(``functions/gifcodec.py``, round 11) — dispatched by magic bytes in
+exchange is the renderers' opt-in ``spread`` (below).
+
+Five REAL image codecs back the seam in pure Python — netpbm (P5/P6),
+PNG with all five scanline filters and BMP (``functions/imagecodec.py``),
+baseline AND progressive JPEG with canonical Huffman, restart markers,
+successive approximation, and the 8x8 IDCT (``functions/jpegcodec.py``),
+and animated GIF with real LZW and interlacing
+(``functions/gifcodec.py``) — dispatched by magic bytes in
 ``decode_image_real``; formats with no pure-Python decoder (H.264
 slice data, MP3 PCM, AVIF ...) still raise ``NotImplementedError``
 from the dispatcher, keeping the seam honest — but their METADATA
-layers are parsed for real since r14: MP3 frame headers + ID3v2
+layers are parsed for real: MP3 frame headers + ID3v2
 (``functions/mp3meta.py``), H.264 Annex-B NAL walk + Exp-Golomb SPS
 (``functions/h264meta.py``), and WARC/1.0 record framing
 (``functions/warc.py``), each with a closed-form byte-layout oracle.
@@ -42,13 +49,87 @@ from per-query A/B timings.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+import math
+from collections.abc import Callable, Iterable, Iterator
+from typing import Any
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
 
 from ctgov_ai_etl_spark.operators.limits import spread_to_parallelism
+
+RowFn = Callable[[Any, Any], Iterable[tuple]]
+
+
+def _python_stage(
+    df: DataFrame,
+    id_col: str,
+    in_col: str,
+    out_ddl: str,
+    row_fn: RowFn,
+    spread: bool = False,
+    carry: bool = False,
+) -> DataFrame:
+    """The module's one Python stage.  Selects ``id_col`` and
+    ``in_col`` (``spread`` repartitions that source, see the module
+    docstring) and runs one Arrow-batched ``mapInPandas`` stage in
+    which ``row_fn(rid, value)`` returns the output tuples of one
+    input row, laid out as ``out_ddl``.  The stage declares
+    ``"{id_col} long, " + out_ddl``; with ``carry`` it instead passes
+    every other column of ``df`` through, in ``df``'s order and with
+    its source type, ahead of ``out_ddl``."""
+    from ctgov_ai_etl_spark.session import ship_package
+
+    ship_package(df.sparkSession)
+    if carry:
+        keys = [c for c in df.columns if c != in_col]
+        src = df.select(*keys, in_col)
+        key_ddl = ", ".join(
+            f"{f.name} {f.dataType.simpleString()}"
+            for f in src.schema.fields[:-1]
+        )
+    else:
+        keys = [id_col]
+        src = df.select(id_col, in_col)
+        key_ddl = f"{id_col} long"
+    if spread:
+        src = spread_to_parallelism(src)
+    names = DataType.fromDDL(out_ddl).fieldNames()
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            pos, rows = [], []
+            for i, (rid, value) in enumerate(zip(pdf[id_col], pdf[in_col])):
+                for r in row_fn(rid, value):
+                    pos.append(i)
+                    rows.append(r)
+            cols = list(zip(*rows)) if rows else [()] * len(names)
+            yield pdf[keys].iloc[pos].reset_index(drop=True).assign(
+                **{n: list(c) for n, c in zip(names, cols)}
+            )
+
+    return src.mapInPandas(run, schema=f"{key_ddl}, {out_ddl}")
+
+
+def _md5(text: Any) -> bytes:
+    """md5 of the text's UTF-8 bytes: the engine-portable seed every
+    fixture renderer derives its parameters from, so a SQL oracle
+    replays them."""
+    return hashlib.md5(str(text).encode("utf-8")).digest()
+
+
+def _parsed_fields(parse: Callable[[bytes], dict], out_ddl: str) -> RowFn:
+    """Row function for a parser that returns one dict per payload:
+    the dict's values in ``out_ddl``'s column order."""
+    fields = DataType.fromDDL(out_ddl).fieldNames()
+
+    def row(rid: Any, data: Any) -> Iterator[tuple]:
+        meta = parse(bytes(data))
+        yield tuple(meta[k] for k in fields)
+
+    return row
 
 
 def attach_blob(df: DataFrame, src_col: str, blob_col: str = "blob") -> DataFrame:
@@ -76,41 +157,22 @@ def render_test_images(
     PNG whose scanline filters cycle through all five types — a wrong
     Sub/Up/Average/Paeth predictor in the decoder corrupts the raster
     and fails the oracle.  Raster byte j = (v + j) % 256."""
-    import hashlib as _hl
-
     from ctgov_ai_etl_spark.functions.imagecodec import encode_png, encode_ppm
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, text_col)
-    if spread:  # see the module docstring
-        src = spread_to_parallelism(src)
+    def row(rid: Any, text: Any) -> Iterator[tuple]:
+        dig = _md5(text)
+        w, h, v = 1 + dig[0] % 16, 1 + dig[1] % 16, dig[2]
+        if int(rid) % 2 == 0:
+            raster = bytes((v + j) % 256 for j in range(w * h * 3))
+            yield "ppm", encode_ppm(w, h, raster)
+        else:
+            raster = bytes((v + j) % 256 for j in range(w * h))
+            yield "png", encode_png(
+                w, h, raster, color_type=0, filter_per_row=lambda y: y % 5
+            )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, fmts, blobs = [], [], []
-            for rid, text in zip(pdf[id_col], pdf[text_col]):
-                dig = _hl.md5(str(text).encode("utf-8")).digest()
-                w, h, v = 1 + dig[0] % 16, 1 + dig[1] % 16, dig[2]
-                if int(rid) % 2 == 0:
-                    raster = bytes((v + j) % 256 for j in range(w * h * 3))
-                    blob, fmt = encode_ppm(w, h, raster), "ppm"
-                else:
-                    raster = bytes((v + j) % 256 for j in range(w * h))
-                    blob, fmt = (
-                        encode_png(
-                            w, h, raster, color_type=0,
-                            filter_per_row=lambda y: y % 5,
-                        ),
-                        "png",
-                    )
-                ids.append(rid)
-                fmts.append(fmt)
-                blobs.append(blob)
-            yield pd.DataFrame({id_col: ids, "fmt": fmts, "blob": blobs})
-
-    return src.mapInPandas(
-        run, schema=f"{id_col} long, fmt string, blob binary"
+    return _python_stage(
+        df, id_col, text_col, "fmt string, blob binary", row, spread
     )
 
 
@@ -124,7 +186,7 @@ PNG_MATRIX_PALETTE = [
 def render_png_matrix(
     df: DataFrame, id_col: str, text_col: str = "text", spread: bool = False
 ) -> DataFrame:
-    """Synthesize the FULL-SPEC PNG matrix (round 13) deterministically
+    """Synthesize the FULL-SPEC PNG matrix deterministically
     from a text column — the fixture generator for the generalized
     decoder: variant = id % 6 renders
     0: 8-bit palette, Adam7 interlaced;  1: 16-bit greyscale;
@@ -139,7 +201,6 @@ def render_png_matrix(
     target) and a different series in the low byte so a decoder that
     read the wrong byte fails the oracle; alpha bytes likewise differ
     from the grey series so a decoder that averaged alpha in fails."""
-    import hashlib as _hl
     import struct as _st
     import zlib as _zl
 
@@ -148,12 +209,7 @@ def render_png_matrix(
         _chunk,
         encode_png,
     )
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, text_col)
-    if spread:  # see the module docstring
-        src = spread_to_parallelism(src)
     pal = PNG_MATRIX_PALETTE
 
     def _grey4(w: int, h: int, v: int) -> bytes:
@@ -176,55 +232,60 @@ def render_png_matrix(
             + _chunk(b"IEND", b"")
         )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, variants, blobs = [], [], []
-            for rid, text in zip(pdf[id_col], pdf[text_col]):
-                dig = _hl.md5(str(text).encode("utf-8")).digest()
-                w, h, v = 1 + dig[0] % 16, 1 + dig[1] % 16, dig[2]
-                variant = int(rid) % 6
-                cyc = lambda y: y % 5  # noqa: E731
-                if variant in (0, 4):
-                    idx = bytes((v + j) % 16 for j in range(w * h))
-                    blob = encode_png(
-                        w, h, idx, palette=pal,
-                        interlace=(variant == 0), filter_per_row=cyc,
-                    )
-                elif variant == 1:
-                    raw = b"".join(
-                        bytes(((v + j) % 256, (v + 5 * j) % 256))
-                        for j in range(w * h)
-                    )
-                    blob = encode_png(
-                        w, h, raw, 0, bit_depth=16, filter_per_row=cyc
-                    )
-                elif variant == 2:
-                    raw = b"".join(
-                        bytes(((v + j) % 256, (v + 5 * j) % 256))
-                        for j in range(w * h * 3)
-                    )
-                    blob = encode_png(
-                        w, h, raw, 2, bit_depth=16, interlace=True,
-                        filter_per_row=cyc,
-                    )
-                elif variant == 3:
-                    raw = b"".join(
-                        bytes(((v + j) % 256, (v + 3 * j + 1) % 256))
-                        for j in range(w * h)
-                    )
-                    blob = encode_png(w, h, raw, 4, filter_per_row=cyc)
-                else:
-                    blob = _grey4(w, h, v)
-                ids.append(rid)
-                variants.append(variant)
-                blobs.append(blob)
-            yield pd.DataFrame(
-                {id_col: ids, "variant": variants, "blob": blobs}
+    def row(rid: Any, text: Any) -> Iterator[tuple]:
+        dig = _md5(text)
+        w, h, v = 1 + dig[0] % 16, 1 + dig[1] % 16, dig[2]
+        variant = int(rid) % 6
+        cyc = lambda y: y % 5  # noqa: E731
+        if variant in (0, 4):
+            idx = bytes((v + j) % 16 for j in range(w * h))
+            blob = encode_png(
+                w, h, idx, palette=pal,
+                interlace=(variant == 0), filter_per_row=cyc,
             )
+        elif variant == 1:
+            raw = b"".join(
+                bytes(((v + j) % 256, (v + 5 * j) % 256))
+                for j in range(w * h)
+            )
+            blob = encode_png(w, h, raw, 0, bit_depth=16, filter_per_row=cyc)
+        elif variant == 2:
+            raw = b"".join(
+                bytes(((v + j) % 256, (v + 5 * j) % 256))
+                for j in range(w * h * 3)
+            )
+            blob = encode_png(
+                w, h, raw, 2, bit_depth=16, interlace=True,
+                filter_per_row=cyc,
+            )
+        elif variant == 3:
+            raw = b"".join(
+                bytes(((v + j) % 256, (v + 3 * j + 1) % 256))
+                for j in range(w * h)
+            )
+            blob = encode_png(w, h, raw, 4, filter_per_row=cyc)
+        else:
+            blob = _grey4(w, h, v)
+        yield variant, blob
 
-    return src.mapInPandas(
-        run, schema=f"{id_col} long, variant int, blob binary"
+    return _python_stage(
+        df, id_col, text_col, "variant int, blob binary", row, spread
     )
+
+
+def _block_jpeg(
+    encode: Callable[..., bytes], w8: int, h8: int, v: int, step: int,
+    rst: int,
+) -> bytes:
+    """A w8 x h8 grid of constant 8x8 blocks, block b = (v + step*b)
+    % 256, encoded grayscale with restart interval ``rst``."""
+    import numpy as np
+
+    arr = np.zeros((h8 * 8, w8 * 8), dtype=np.uint8)
+    for b in range(w8 * h8):
+        by, bx = divmod(b, w8)
+        arr[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (v + step * b) % 256
+    return encode(w8 * 8, h8 * 8, arr.tobytes(), restart_interval=rst)
 
 
 def render_test_jpegs(
@@ -245,51 +306,21 @@ def render_test_jpegs(
     ids — a restart marker after every MCU (predictor resets make the
     differentials restart too; a decoder that missed the reset would
     corrupt every post-RST block)."""
-    import hashlib as _hl
-
     from ctgov_ai_etl_spark.functions.jpegcodec import encode_jpeg_baseline
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, text_col)
-    if spread:  # see the module docstring
-        src = spread_to_parallelism(src)
+    def row(rid: Any, text: Any) -> Iterator[tuple]:
+        dig = _md5(text)
+        # abs() so odd-ness matches the oracle's `doc_id % 2 <> 0`
+        # under DuckDB's sign-following modulo: -3 % 2 is 1 in
+        # Python, -1 in DuckDB — both sides must agree on negative ids
+        rst = 1 if abs(int(rid)) % 2 else 0
+        yield rst, _block_jpeg(
+            encode_jpeg_baseline, 1 + dig[0] % 4, 1 + dig[1] % 4, dig[2],
+            17, rst,
+        )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            ids, rsts, blobs = [], [], []
-            for rid, text in zip(pdf[id_col], pdf[text_col]):
-                dig = _hl.md5(str(text).encode("utf-8")).digest()
-                w8, h8, v = 1 + dig[0] % 4, 1 + dig[1] % 4, dig[2]
-                arr = np.zeros((h8 * 8, w8 * 8), dtype=np.uint8)
-                for b in range(w8 * h8):
-                    by, bx = divmod(b, w8)
-                    arr[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (
-                        v + 17 * b
-                    ) % 256
-                # abs() so odd-ness matches the oracle's
-                # `doc_id % 2 <> 0` under DuckDB's sign-following
-                # modulo (ADVICE r10: -3 % 2 is 1 in Python, -1 in
-                # DuckDB — both sides must agree on negative ids)
-                rst = 1 if abs(int(rid)) % 2 else 0
-                blobs.append(
-                    encode_jpeg_baseline(
-                        w8 * 8,
-                        h8 * 8,
-                        arr.tobytes(),
-                        restart_interval=rst,
-                    )
-                )
-                ids.append(rid)
-                rsts.append(rst)
-            yield pd.DataFrame(
-                {id_col: ids, "rst": rsts, "blob": blobs}
-            )
-
-    return src.mapInPandas(
-        run, schema=f"{id_col} long, rst int, blob binary"
+    return _python_stage(
+        df, id_col, text_col, "rst int, blob binary", row, spread
     )
 
 
@@ -307,51 +338,22 @@ def render_test_jpegs_progressive(
     (runs span the whole image), and ids with abs(id) % 3 == 1 add a
     restart marker per unit, resetting predictors and EOB runs
     inside every scan."""
-    import hashlib as _hl
-
     from ctgov_ai_etl_spark.functions.jpegcodec import (
         encode_jpeg_progressive,
     )
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, text_col)
-    if spread:  # see the module docstring
-        src = spread_to_parallelism(src)
+    def row(rid: Any, text: Any) -> Iterator[tuple]:
+        dig = _md5(text)
+        # abs() keeps the parity rule aligned with DuckDB's
+        # sign-following modulo on negative ids
+        rst = 1 if abs(int(rid)) % 3 == 1 else 0
+        yield rst, _block_jpeg(
+            encode_jpeg_progressive, 1 + dig[3] % 4, 1 + dig[4] % 4, dig[5],
+            23, rst,
+        )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            ids, rsts, blobs = [], [], []
-            for rid, text in zip(pdf[id_col], pdf[text_col]):
-                dig = _hl.md5(str(text).encode("utf-8")).digest()
-                w8, h8, v = 1 + dig[3] % 4, 1 + dig[4] % 4, dig[5]
-                arr = np.zeros((h8 * 8, w8 * 8), dtype=np.uint8)
-                for b in range(w8 * h8):
-                    by, bx = divmod(b, w8)
-                    arr[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (
-                        v + 23 * b
-                    ) % 256
-                # abs() keeps the parity rule aligned with DuckDB's
-                # sign-following modulo on negative ids
-                rst = 1 if abs(int(rid)) % 3 == 1 else 0
-                blobs.append(
-                    encode_jpeg_progressive(
-                        w8 * 8,
-                        h8 * 8,
-                        arr.tobytes(),
-                        restart_interval=rst,
-                    )
-                )
-                ids.append(rid)
-                rsts.append(rst)
-            yield pd.DataFrame(
-                {id_col: ids, "rst": rsts, "blob": blobs}
-            )
-
-    return src.mapInPandas(
-        run, schema=f"{id_col} long, rst int, blob binary"
+    return _python_stage(
+        df, id_col, text_col, "rst int, blob binary", row, spread
     )
 
 
@@ -375,55 +377,30 @@ def decode_image_real(
         decode_ppm,
     )
     from ctgov_ai_etl_spark.functions.jpegcodec import decode_jpeg
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    keep = [c for c in df.columns if c != blob_col]
-    src = df.select(*keep, blob_col)
+    def row(rid: Any, data: Any) -> Iterator[tuple]:
+        b = bytes(data)
+        if b[:8] == b"\x89PNG\r\n\x1a\n":
+            yield decode_png(b)
+        elif b[:2] in (b"P5", b"P6"):
+            yield decode_ppm(b)
+        elif b[:3] == b"\xff\xd8\xff":
+            yield decode_jpeg(b)
+        elif b[:4] == b"GIF8":
+            yield decode_gif(b)
+        elif b[:2] == b"BM":
+            yield decode_bmp(b)
+        else:
+            raise NotImplementedError(
+                "no pure-Python codec for this payload — "
+                "install an image library on the executors "
+                "and extend the dispatch"
+            )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ws, hs, sums, ns = [], [], [], []
-            for data in pdf[blob_col]:
-                b = bytes(data)
-                if b[:8] == b"\x89PNG\r\n\x1a\n":
-                    w, h, s, n = decode_png(b)
-                elif b[:2] in (b"P5", b"P6"):
-                    w, h, s, n = decode_ppm(b)
-                elif b[:3] == b"\xff\xd8\xff":
-                    w, h, s, n = decode_jpeg(b)
-                elif b[:4] == b"GIF8":
-                    w, h, s, n = decode_gif(b)
-                elif b[:2] == b"BM":
-                    w, h, s, n = decode_bmp(b)
-                else:
-                    raise NotImplementedError(
-                        "no pure-Python codec for this payload — "
-                        "install an image library on the executors "
-                        "and extend the dispatch"
-                    )
-                ws.append(w)
-                hs.append(h)
-                sums.append(s)
-                ns.append(n)
-            out = pdf[keep].copy()
-            out["width"] = ws
-            out["height"] = hs
-            out["luma_sum"] = sums
-            out["n_samples"] = ns
-            yield out
-
-    keep_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in src.schema.fields
-        if f.name != blob_col
-    )
-    return src.mapInPandas(
-        run,
-        schema=(
-            f"{keep_schema}, width int, height int, "
-            "luma_sum long, n_samples long"
-        ),
+    return _python_stage(
+        df, id_col, blob_col,
+        "width int, height int, luma_sum long, n_samples long",
+        row, carry=True,
     )
 
 
@@ -447,25 +424,10 @@ def decode_image_features(
     iterator form initializes the (stub) codec once per task and
     processes Arrow record batches — the exact layout a real decoder
     needs."""
-    from ctgov_ai_etl_spark.session import ship_package
-
-    ship_package(df.sparkSession)
-    src = df.select(id_col, blob_col)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        decode = _fake_decode  # codec init happens here, once per task
-        for pdf in batches:
-            feats = [decode(b) for b in pdf[blob_col]]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "width": [f[0] for f in feats],
-                    "height": [f[1] for f in feats],
-                    "mean_luma": [f[2] for f in feats],
-                }
-            )
-
-    return src.mapInPandas(run, schema=f"{id_col} long, width int, height int, mean_luma double")
+    return _python_stage(
+        df, id_col, blob_col, "width int, height int, mean_luma double",
+        lambda rid, data: (_fake_decode(data),),
+    )
 
 
 def frame_sample(
@@ -475,26 +437,15 @@ def frame_sample(
     (here: deterministic fake frames keyed by byte offsets). Output
     explodes inside mapInPandas so a 2-hour video never materializes
     as one row in memory."""
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, blob_col)
+    def row(rid: Any, data: Any) -> Iterator[tuple]:
+        for i in range(max(1, len(data) // every_n)):
+            chunk = bytes(data[i * every_n : (i + 1) * every_n])
+            yield i, hashlib.sha256(chunk).hexdigest()[:16]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_ids, out_idx, out_hash = [], [], []
-            for rid, data in zip(pdf[id_col], pdf[blob_col]):
-                n = max(1, len(data) // every_n)
-                for i in range(n):
-                    chunk = bytes(data[i * every_n : (i + 1) * every_n])
-                    out_ids.append(rid)
-                    out_idx.append(i)
-                    out_hash.append(hashlib.sha256(chunk).hexdigest()[:16])
-            yield pd.DataFrame(
-                {id_col: out_ids, "frame_idx": out_idx, "frame_sig": out_hash}
-            )
-
-    return src.mapInPandas(run, schema=f"{id_col} long, frame_idx int, frame_sig string")
+    return _python_stage(
+        df, id_col, blob_col, "frame_idx int, frame_sig string", row
+    )
 
 
 def render_test_audio(
@@ -508,33 +459,19 @@ def render_test_audio(
     ((v·131 + j·7919) mod 65536) − 32768 — full int16 range,
     byte-order sensitive (a wrong endianness or chunk walk corrupts
     the decoded sum)."""
-    import hashlib as _hl
     import struct as _st
 
     from ctgov_ai_etl_spark.functions.imagecodec import encode_wav
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, text_col)
-    if spread:  # see the module docstring
-        src = spread_to_parallelism(src)
+    def row(rid: Any, text: Any) -> Iterator[tuple]:
+        dig = _md5(text)
+        ch = 1 + dig[0] % 2
+        n = (50 + dig[1]) * ch
+        v = dig[2]
+        vals = [((v * 131 + j * 7919) % 65536) - 32768 for j in range(n)]
+        yield (encode_wav(8000, ch, _st.pack(f"<{n}h", *vals)),)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for rid, text in zip(pdf[id_col], pdf[text_col]):
-                dig = _hl.md5(str(text).encode("utf-8")).digest()
-                ch = 1 + dig[0] % 2
-                n_frames = 50 + dig[1]
-                v = dig[2]
-                n = n_frames * ch
-                vals = [((v * 131 + j * 7919) % 65536) - 32768 for j in range(n)]
-                blob = encode_wav(8000, ch, _st.pack(f"<{n}h", *vals))
-                ids.append(rid)
-                blobs.append(blob)
-            yield pd.DataFrame({id_col: ids, "blob": blobs})
-
-    return src.mapInPandas(run, schema=f"{id_col} long, blob binary")
+    return _python_stage(df, id_col, text_col, "blob binary", row, spread)
 
 
 def decode_audio_real(
@@ -546,36 +483,11 @@ def decode_audio_real(
     fixed-order division downstream — hash-checkable end to end
     (mm_decode_audio)."""
     from ctgov_ai_etl_spark.functions.imagecodec import decode_wav
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, blob_col)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            chs, rates, frames, sums = [], [], [], []
-            for data in pdf[blob_col]:
-                ch, rate, nf, s = decode_wav(bytes(data))
-                chs.append(ch)
-                rates.append(rate)
-                frames.append(nf)
-                sums.append(s)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "channels": chs,
-                    "sample_rate": rates,
-                    "n_frames": frames,
-                    "abs_sum": sums,
-                }
-            )
-
-    return src.mapInPandas(
-        run,
-        schema=(
-            f"{id_col} long, channels int, sample_rate int,"
-            " n_frames int, abs_sum long"
-        ),
+    return _python_stage(
+        df, id_col, blob_col,
+        "channels int, sample_rate int, n_frames int, abs_sum long",
+        lambda rid, data: (decode_wav(bytes(data)),),
     )
 
 
@@ -590,45 +502,25 @@ def audio_features_real(
     divisions are single fixed-order expressions a SQL oracle
     replays.  One Arrow-batched mapInPandas stage, one output row
     per (clip, channel), no keyed shuffle."""
+    import numpy as np
+
     from ctgov_ai_etl_spark.functions.imagecodec import decode_wav_samples
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, blob_col)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            ids, chans, frames, zcrs, sqs = [], [], [], [], []
-            for rid, data in zip(pdf[id_col], pdf[blob_col]):
-                ch, _rate, samples = decode_wav_samples(bytes(data))
-                arr = np.asarray(samples, dtype=np.int64)
-                nf = len(arr) // ch
-                for c in range(ch):
-                    sc = arr[c::ch]
-                    nonneg = sc >= 0
-                    ids.append(rid)
-                    chans.append(c)
-                    frames.append(nf)
-                    zcrs.append(int(np.sum(nonneg[1:] != nonneg[:-1])))
-                    sqs.append(int(np.sum(sc * sc)))
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "channel": chans,
-                    "n_frames": frames,
-                    "zcr": zcrs,
-                    "sq_sum": sqs,
-                }
+    def row(rid: Any, data: Any) -> Iterator[tuple]:
+        ch, _rate, samples = decode_wav_samples(bytes(data))
+        arr = np.asarray(samples, dtype=np.int64)
+        nf = len(arr) // ch
+        for c in range(ch):
+            sc = arr[c::ch]
+            nonneg = sc >= 0
+            yield (
+                c, nf, int(np.sum(nonneg[1:] != nonneg[:-1])),
+                int(np.sum(sc * sc)),
             )
 
-    return src.mapInPandas(
-        run,
-        schema=(
-            f"{id_col} long, channel int, n_frames int,"
-            " zcr long, sq_sum long"
-        ),
+    return _python_stage(
+        df, id_col, blob_col,
+        "channel int, n_frames int, zcr long, sq_sum long", row,
     )
 
 
@@ -640,34 +532,20 @@ def render_test_video(
     even dimensions, frame count, and luma pattern derive from
     md5(text).  Y byte at (frame f, index j) = (v + f·17 + j) % 256 —
     a closed form a SQL oracle replays without touching bytes."""
-    import hashlib as _hl
-
     from ctgov_ai_etl_spark.functions.imagecodec import encode_y4m
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, text_col)
-    if spread:  # see the module docstring
-        src = spread_to_parallelism(src)
+    def row(rid: Any, text: Any) -> Iterator[tuple]:
+        dig = _md5(text)
+        w = 2 * (1 + dig[0] % 8)
+        h = 2 * (1 + dig[1] % 8)
+        v = dig[2]
+        frames = [
+            bytes((v + f * 17 + j) % 256 for j in range(w * h))
+            for f in range(1 + dig[3] % 6)
+        ]
+        yield (encode_y4m(w, h, frames),)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for rid, text in zip(pdf[id_col], pdf[text_col]):
-                dig = _hl.md5(str(text).encode("utf-8")).digest()
-                w = 2 * (1 + dig[0] % 8)
-                h = 2 * (1 + dig[1] % 8)
-                nf = 1 + dig[3] % 6
-                v = dig[2]
-                frames = [
-                    bytes((v + f * 17 + j) % 256 for j in range(w * h))
-                    for f in range(nf)
-                ]
-                ids.append(rid)
-                blobs.append(encode_y4m(w, h, frames))
-            yield pd.DataFrame({id_col: ids, "blob": blobs})
-
-    return src.mapInPandas(run, schema=f"{id_col} long, blob binary")
+    return _python_stage(df, id_col, text_col, "blob binary", row, spread)
 
 
 def decode_video_real(
@@ -679,36 +557,11 @@ def decode_video_real(
     n_frames) — the per-stream loudness/brightness statistic a SQL
     oracle replays (mm_decode_video)."""
     from ctgov_ai_etl_spark.functions.imagecodec import decode_y4m
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, blob_col)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ws, hs, nfs, sums = [], [], [], []
-            for data in pdf[blob_col]:
-                w, h, nf, s = decode_y4m(bytes(data))
-                ws.append(w)
-                hs.append(h)
-                nfs.append(nf)
-                sums.append(s)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "width": ws,
-                    "height": hs,
-                    "n_frames": nfs,
-                    "luma_sum": sums,
-                }
-            )
-
-    return src.mapInPandas(
-        run,
-        schema=(
-            f"{id_col} long, width int, height int,"
-            " n_frames int, luma_sum long"
-        ),
+    return _python_stage(
+        df, id_col, blob_col,
+        "width int, height int, n_frames int, luma_sum long",
+        lambda rid, data: (decode_y4m(bytes(data)),),
     )
 
 
@@ -727,40 +580,16 @@ def resize_image_real(
         decode_image_pixels,
         resize_nearest,
     )
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    keep = [c for c in df.columns if c != blob_col]
-    src = df.select(*keep, blob_col)
+    def row(rid: Any, data: Any) -> Iterator[tuple]:
+        w, h, ch, raster = decode_image_pixels(bytes(data))
+        wo, ho, out = resize_nearest(w, h, ch, raster, factor)
+        yield wo, ho, sum(out), len(out)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            wos, hos, sums, ns = [], [], [], []
-            for data in pdf[blob_col]:
-                w, h, ch, raster = decode_image_pixels(bytes(data))
-                wo, ho, out = resize_nearest(w, h, ch, raster, factor)
-                wos.append(wo)
-                hos.append(ho)
-                sums.append(sum(out))
-                ns.append(len(out))
-            res = pdf[keep].copy()
-            res["width_out"] = wos
-            res["height_out"] = hos
-            res["luma_sum"] = sums
-            res["n_samples"] = ns
-            yield res
-
-    keep_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in src.schema.fields
-        if f.name != blob_col
-    )
-    return src.mapInPandas(
-        run,
-        schema=(
-            f"{keep_schema}, width_out int, height_out int, "
-            "luma_sum long, n_samples long"
-        ),
+    return _python_stage(
+        df, id_col, blob_col,
+        "width_out int, height_out int, luma_sum long, n_samples long",
+        row, carry=True,
     )
 
 
@@ -774,38 +603,15 @@ def sample_video_frames_real(
     task, so a multi-GB stream never materializes as a single row.
     One Arrow-batched ``mapInPandas`` stage, no keyed shuffle."""
     from ctgov_ai_etl_spark.functions.imagecodec import decode_y4m_frames
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, blob_col)
+    def row(rid: Any, data: Any) -> Iterator[tuple]:
+        w, h, frames = decode_y4m_frames(bytes(data))
+        for i in range(0, len(frames), every_n):
+            yield i, w, h, frames[i]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, ws, hs, sums = [], [], [], [], []
-            for rid, data in zip(pdf[id_col], pdf[blob_col]):
-                w, h, frames = decode_y4m_frames(bytes(data))
-                for i in range(0, len(frames), every_n):
-                    ids.append(rid)
-                    idxs.append(i)
-                    ws.append(w)
-                    hs.append(h)
-                    sums.append(frames[i])
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "frame_idx": idxs,
-                    "width": ws,
-                    "height": hs,
-                    "luma_sum": sums,
-                }
-            )
-
-    return src.mapInPandas(
-        run,
-        schema=(
-            f"{id_col} long, frame_idx int, width int, height int, "
-            "luma_sum long"
-        ),
+    return _python_stage(
+        df, id_col, blob_col,
+        "frame_idx int, width int, height int, luma_sum long", row,
     )
 
 
@@ -819,46 +625,23 @@ def downsample_audio_real(
     sample rate — the audio leg of the resize/frame-sample kernel
     family.  One Arrow-batched ``mapInPandas`` stage, no keyed shuffle."""
     from ctgov_ai_etl_spark.functions.imagecodec import decode_wav_samples
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, blob_col)
+    def row(rid: Any, data: Any) -> Iterator[tuple]:
+        ch, rate, vals = decode_wav_samples(bytes(data))
+        abs_sum = 0
+        kept = 0
+        for f in range(0, len(vals) // ch, every_n):
+            base = f * ch
+            for c in range(ch):
+                v = vals[base + c]
+                abs_sum += v if v >= 0 else -v
+            kept += 1
+        yield ch, rate // every_n, kept, abs_sum
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, chs, rates, nfs, sums = [], [], [], [], []
-            for rid, data in zip(pdf[id_col], pdf[blob_col]):
-                ch, rate, vals = decode_wav_samples(bytes(data))
-                n_frames = len(vals) // ch
-                abs_sum = 0
-                kept = 0
-                for f in range(0, n_frames, every_n):
-                    base = f * ch
-                    for c in range(ch):
-                        v = vals[base + c]
-                        abs_sum += v if v >= 0 else -v
-                    kept += 1
-                ids.append(rid)
-                chs.append(ch)
-                rates.append(rate // every_n)
-                nfs.append(kept)
-                sums.append(abs_sum)
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "channels": chs,
-                    "sample_rate_out": rates,
-                    "n_frames_out": nfs,
-                    "abs_sum": sums,
-                }
-            )
-
-    return src.mapInPandas(
-        run,
-        schema=(
-            f"{id_col} long, channels int, sample_rate_out int, "
-            "n_frames_out int, abs_sum long"
-        ),
+    return _python_stage(
+        df, id_col, blob_col,
+        "channels int, sample_rate_out int, n_frames_out int, abs_sum long",
+        row,
     )
 
 
@@ -876,26 +659,10 @@ def dhash_images_real(
         decode_image_pixels,
         dhash_bits,
     )
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, blob_col)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, his, los = [], [], []
-            for rid, data in zip(pdf[id_col], pdf[blob_col]):
-                w, h, ch, raster = decode_image_pixels(bytes(data))
-                hi, lo = dhash_bits(w, h, ch, raster)
-                ids.append(rid)
-                his.append(hi)
-                los.append(lo)
-            yield pd.DataFrame(
-                {id_col: ids, "hash_hi": his, "hash_lo": los}
-            )
-
-    return src.mapInPandas(
-        run, schema=f"{id_col} long, hash_hi long, hash_lo long"
+    return _python_stage(
+        df, id_col, blob_col, "hash_hi long, hash_lo long",
+        lambda rid, data: (dhash_bits(*decode_image_pixels(bytes(data))),),
     )
 
 
@@ -917,67 +684,32 @@ def render_and_decode_test_gifs(
     + frame-walk path end to end).  Emits exact integers so the
     closed-form SQL oracle replays the palette sums without touching
     bytes.  One Arrow-batched mapInPandas stage, no keyed shuffle."""
-    import hashlib as _hl
-
     from ctgov_ai_etl_spark.functions.gifcodec import (
         decode_gif_frames,
         encode_gif,
     )
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, text_col)
-    if spread:  # see the module docstring
-        src = spread_to_parallelism(src)
+    def row(rid: Any, text: Any) -> Iterator[tuple]:
+        dig = _md5(text)
+        w = 1 + dig[6] % 24
+        h = 1 + dig[7] % 24
+        v = dig[8]
+        nf = 1 + dig[9] % 3
+        pal = [((v + 13 * c) % 256,) * 3 for c in range(16)]
+        frames = [bytes((j + f) % 16 for j in range(w * h)) for f in range(nf)]
+        blob = encode_gif(
+            w, h, frames, pal,
+            interlace=bool(abs(int(rid)) % 2),
+            delay_cs=5 if nf > 1 else None,
+        )
+        W, H, dec = decode_gif_frames(blob)
+        yield W, H, len(dec), sum(dec[0]), sum(dec[-1]), W * H * 3
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ws, hs, nfs, s0, sl, ns = [], [], [], [], [], [], []
-            for rid, text in zip(pdf[id_col], pdf[text_col]):
-                dig = _hl.md5(str(text).encode("utf-8")).digest()
-                w = 1 + dig[6] % 24
-                h = 1 + dig[7] % 24
-                v = dig[8]
-                nf = 1 + dig[9] % 3
-                pal = [((v + 13 * c) % 256,) * 3 for c in range(16)]
-                frames = [
-                    bytes((j + f) % 16 for j in range(w * h))
-                    for f in range(nf)
-                ]
-                blob = encode_gif(
-                    w,
-                    h,
-                    frames,
-                    pal,
-                    interlace=bool(abs(int(rid)) % 2),
-                    delay_cs=5 if nf > 1 else None,
-                )
-                W, H, dec = decode_gif_frames(blob)
-                ids.append(rid)
-                ws.append(W)
-                hs.append(H)
-                nfs.append(len(dec))
-                s0.append(sum(dec[0]))
-                sl.append(sum(dec[-1]))
-                ns.append(W * H * 3)
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "width": pd.array(ws, dtype="int32"),
-                    "height": pd.array(hs, dtype="int32"),
-                    "n_frames": pd.array(nfs, dtype="int32"),
-                    "luma0_sum": pd.array(s0, dtype="int64"),
-                    "luma_last_sum": pd.array(sl, dtype="int64"),
-                    "n_samples": pd.array(ns, dtype="int64"),
-                }
-            )
-
-    return src.mapInPandas(
-        run,
-        schema=(
-            f"{id_col} long, width int, height int, n_frames int, "
-            "luma0_sum long, luma_last_sum long, n_samples long"
-        ),
+    return _python_stage(
+        df, id_col, text_col,
+        "width int, height int, n_frames int, "
+        "luma0_sum long, luma_last_sum long, n_samples long",
+        row, spread,
     )
 
 
@@ -992,28 +724,14 @@ def render_test_bmps(
     (for the padding) shift the sum.  One Arrow-batched mapInPandas
     stage; decode flows through the magic-byte dispatcher like every
     other format."""
-    import hashlib as _hl
-
     from ctgov_ai_etl_spark.functions.imagecodec import encode_bmp
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, text_col)
-    if spread:  # see the module docstring
-        src = spread_to_parallelism(src)
+    def row(rid: Any, text: Any) -> Iterator[tuple]:
+        dig = _md5(text)
+        w, h, v = 1 + dig[10] % 16, 1 + dig[11] % 16, dig[12]
+        yield (encode_bmp(w, h, bytes((v + 7 * j) % 256 for j in range(w * h * 3))),)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for rid, text in zip(pdf[id_col], pdf[text_col]):
-                dig = _hl.md5(str(text).encode("utf-8")).digest()
-                w, h, v = 1 + dig[10] % 16, 1 + dig[11] % 16, dig[12]
-                raster = bytes((v + 7 * j) % 256 for j in range(w * h * 3))
-                ids.append(rid)
-                blobs.append(encode_bmp(w, h, raster))
-            yield pd.DataFrame({id_col: ids, "blob": blobs})
-
-    return src.mapInPandas(run, schema=f"{id_col} long, blob binary")
+    return _python_stage(df, id_col, text_col, "blob binary", row, spread)
 
 
 # 8-point DFT coefficient tables in MILLI units: round(cos/−sin of
@@ -1021,14 +739,12 @@ def render_test_bmps(
 # AND the SQL oracle's literal lists both derive from these, so the
 # two sides cannot drift.  Milli (not micro) keeps the bin energy
 # re² + im² under int64 at full int16 amplitude (|re| ≤ 8·32768·1000).
-import math as _math
-
 DFT8_COS = [
-    [round(_math.cos(2 * _math.pi * m * k / 8) * 1000) for k in range(8)]
+    [round(math.cos(2 * math.pi * m * k / 8) * 1000) for k in range(8)]
     for m in range(5)
 ]
 DFT8_SIN = [
-    [round(-_math.sin(2 * _math.pi * m * k / 8) * 1000) for k in range(8)]
+    [round(-math.sin(2 * math.pi * m * k / 8) * 1000) for k in range(8)]
     for m in range(5)
 ]
 
@@ -1044,49 +760,31 @@ def audio_dft8_real(
     closed-form.  (A production pipeline strides this window across
     the clip and averages per bin — same algebra, same exactness.)
     One Arrow-batched mapInPandas stage, no keyed shuffle."""
+    import numpy as np
+
     from ctgov_ai_etl_spark.functions.imagecodec import decode_wav_samples
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, blob_col)
+    cos = np.asarray(DFT8_COS, dtype=np.int64)
+    sin = np.asarray(DFT8_SIN, dtype=np.int64)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def row(rid: Any, data: Any) -> Iterator[tuple]:
+        ch, _rate, samples = decode_wav_samples(bytes(data))
+        arr = np.asarray(samples, dtype=np.int64)
+        for c in range(ch):
+            x = arr[c::ch][:8]
+            if x.size < 8:
+                # zero-pad short clips: the DFT of a zero-padded frame
+                # is well-defined, and the fixed (5,8) table would
+                # otherwise raise a shape mismatch in the executor
+                x = np.pad(x, (0, 8 - x.size))
+            re = cos @ x
+            im = sin @ x
+            e = re * re + im * im
+            for m in range(5):
+                yield c, m, int(e[m])
 
-        cos = np.asarray(DFT8_COS, dtype=np.int64)
-        sin = np.asarray(DFT8_SIN, dtype=np.int64)
-        for pdf in batches:
-            ids, chans, bins, energies = [], [], [], []
-            for rid, data in zip(pdf[id_col], pdf[blob_col]):
-                ch, _rate, samples = decode_wav_samples(bytes(data))
-                arr = np.asarray(samples, dtype=np.int64)
-                for c in range(ch):
-                    x = arr[c::ch][:8]
-                    if x.size < 8:
-                        # zero-pad short clips: the DFT of a
-                        # zero-padded frame is well-defined, and the
-                        # fixed (5,8) table would otherwise raise a
-                        # shape mismatch in the executor (ADVICE r12)
-                        x = np.pad(x, (0, 8 - x.size))
-                    re = cos @ x
-                    im = sin @ x
-                    e = re * re + im * im
-                    for m in range(5):
-                        ids.append(rid)
-                        chans.append(c)
-                        bins.append(m)
-                        energies.append(int(e[m]))
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "channel": chans,
-                    "bin": bins,
-                    "energy": energies,
-                }
-            )
-
-    return src.mapInPandas(
-        run, schema=f"{id_col} long, channel int, bin int, energy long"
+    return _python_stage(
+        df, id_col, blob_col, "channel int, bin int, energy long", row
     )
 
 
@@ -1100,43 +798,32 @@ def render_test_mp3(
     form): bitrate index 1+d0%14, sample-rate index d1%3, frame count
     5+d2%20, padding seed d3 (frame j padded iff (d3+j)%2==1), ID3v2
     present iff d4%2==0 with a d5-byte opaque payload."""
-    import hashlib as _hl
-
     from ctgov_ai_etl_spark.functions.mp3meta import encode_mp3_cbr
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, text_col)
-    if spread:  # see the module docstring
-        src = spread_to_parallelism(src)
+    def row(rid: Any, text: Any) -> Iterator[tuple]:
+        dig = _md5(text)
+        id3 = (
+            bytes((17 * i) % 256 for i in range(dig[5]))
+            if dig[4] % 2 == 0
+            else None
+        )
+        yield (
+            encode_mp3_cbr(
+                bitrate_index=1 + dig[0] % 14,
+                sample_rate_index=dig[1] % 3,
+                n_frames=5 + dig[2] % 20,
+                pad_seed=dig[3],
+                id3_payload=id3,
+            ),
+        )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    return _python_stage(df, id_col, text_col, "blob binary", row, spread)
 
-        for pdf in batches:
-            ids, blobs = [], []
-            for rid, text in zip(pdf[id_col], pdf[text_col]):
-                dig = _hl.md5(str(text).encode("utf-8")).digest()
-                id3 = (
-                    ((17 * np.arange(dig[5], dtype=np.int64)) % 256)
-                    .astype(np.uint8)
-                    .tobytes()
-                    if dig[4] % 2 == 0
-                    else None
-                )
-                blobs.append(
-                    encode_mp3_cbr(
-                        bitrate_index=1 + dig[0] % 14,
-                        sample_rate_index=dig[1] % 3,
-                        n_frames=5 + dig[2] % 20,
-                        pad_seed=dig[3],
-                        id3_payload=id3,
-                    )
-                )
-                ids.append(rid)
-            yield pd.DataFrame({id_col: ids, "blob": blobs})
 
-    return src.mapInPandas(run, schema=f"{id_col} long, blob binary")
+_MP3_META_DDL = (
+    "id3_bytes int, n_frames int, bitrate_kbps int, sample_rate int,"
+    " total_bytes int, n_padded int, duration_us long"
+)
 
 
 def mp3_meta_real(
@@ -1148,41 +835,33 @@ def mp3_meta_real(
     the closed-form oracle hash-checks the whole walk — frame-length
     math, padding bits, envelope skip — end to end.  Zero shuffle."""
     from ctgov_ai_etl_spark.functions.mp3meta import parse_mp3_meta
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, blob_col)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {
-                k: []
-                for k in (
-                    id_col,
-                    "id3_bytes",
-                    "n_frames",
-                    "bitrate_kbps",
-                    "sample_rate",
-                    "total_bytes",
-                    "n_padded",
-                    "duration_us",
-                )
-            }
-            for rid, data in zip(pdf[id_col], pdf[blob_col]):
-                m = parse_mp3_meta(bytes(data))
-                rows[id_col].append(rid)
-                for k, v in m.items():
-                    rows[k].append(v)
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(
-        run,
-        schema=(
-            f"{id_col} long, id3_bytes int, n_frames int,"
-            " bitrate_kbps int, sample_rate int, total_bytes int,"
-            " n_padded int, duration_us long"
-        ),
+    return _python_stage(
+        df, id_col, blob_col, _MP3_META_DDL,
+        _parsed_fields(parse_mp3_meta, _MP3_META_DDL),
     )
+
+
+def _warc_records(rid: Any, text: Any) -> list[tuple[str, str, str, bytes]]:
+    """The (warc_type, record_id, target_uri, content) records of one
+    document, shared by the WARC and ``.warc.gz`` renderers: n =
+    2+d0%4 records; record j is an HTTP 'response' iff (d1+j)%3>0
+    (else a raw 'resource'), status [200,301,404,503][(d2+j)%4], and
+    its body is the text slice [j*23, j*23 + 17+((d3+j)%11))."""
+    from ctgov_ai_etl_spark.functions.warc import http_envelope
+
+    t = str(text)
+    d = _md5(t)
+    recs = []
+    for j in range(2 + d[0] % 4):
+        body = t[j * 23 : j * 23 + 17 + ((d[3] + j) % 11)].encode()
+        if (d[1] + j) % 3 > 0:
+            wtype = "response"
+            body = http_envelope((200, 301, 404, 503)[(d[2] + j) % 4]) + body
+        else:
+            wtype = "resource"
+        recs.append((wtype, f"urn:doc{rid}-{j}", f"http://ex.com/{rid}/{j}", body))
+    return recs
 
 
 def render_test_warc(
@@ -1195,45 +874,13 @@ def render_test_warc(
     body is the text slice [j*23, j*23 + 17+((d3+j)%11)) — ASCII, so a
     SQL oracle computes every body length (including the truncated and
     empty overflow cases) closed-form."""
-    import hashlib as _hl
+    from ctgov_ai_etl_spark.functions.warc import build_warc
 
-    from ctgov_ai_etl_spark.functions.warc import build_warc, http_envelope
-    from ctgov_ai_etl_spark.session import ship_package
-
-    ship_package(df.sparkSession)
-    src = df.select(id_col, text_col)
-    if spread:  # see the module docstring
-        src = spread_to_parallelism(src)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for rid, text in zip(pdf[id_col], pdf[text_col]):
-                t = str(text)
-                d = _hl.md5(t.encode("utf-8")).digest()
-                recs = []
-                for j in range(2 + d[0] % 4):
-                    body = t[j * 23 : j * 23 + 17 + ((d[3] + j) % 11)]
-                    if (d[1] + j) % 3 > 0:
-                        status = (200, 301, 404, 503)[(d[2] + j) % 4]
-                        wtype = "response"
-                        content = http_envelope(status) + body.encode()
-                    else:
-                        wtype = "resource"
-                        content = body.encode()
-                    recs.append(
-                        (
-                            wtype,
-                            f"urn:doc{rid}-{j}",
-                            f"http://ex.com/{rid}/{j}",
-                            content,
-                        )
-                    )
-                ids.append(rid)
-                blobs.append(build_warc(recs))
-            yield pd.DataFrame({id_col: ids, "blob": blobs})
-
-    return src.mapInPandas(run, schema=f"{id_col} long, blob binary")
+    return _python_stage(
+        df, id_col, text_col, "blob binary",
+        lambda rid, text: ((build_warc(_warc_records(rid, text)),),),
+        spread,
+    )
 
 
 def warc_records_real(
@@ -1247,42 +894,19 @@ def warc_records_real(
     byte layout.  Arrow-batched, no keyed shuffle: CDX-style index
     extraction distributes embarrassingly over a 100 TB crawl."""
     from ctgov_ai_etl_spark.functions.warc import parse_warc_records
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, blob_col)
+    def row(rid: Any, data: Any) -> Iterator[tuple]:
+        for j, r in enumerate(parse_warc_records(bytes(data))):
+            yield (
+                j, r["offset"], r["warc_type"], r["target_uri"],
+                r["http_status"], r["content_length"],
+            )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                k: []
-                for k in (
-                    id_col,
-                    "rec_idx",
-                    "offset",
-                    "warc_type",
-                    "target_uri",
-                    "http_status",
-                    "content_length",
-                )
-            }
-            for rid, data in zip(pdf[id_col], pdf[blob_col]):
-                for j, rec in enumerate(parse_warc_records(bytes(data))):
-                    rows[id_col].append(rid)
-                    rows["rec_idx"].append(j)
-                    rows["offset"].append(rec["offset"])
-                    rows["warc_type"].append(rec["warc_type"])
-                    rows["target_uri"].append(rec["target_uri"])
-                    rows["http_status"].append(rec["http_status"])
-                    rows["content_length"].append(rec["content_length"])
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(
-        run,
-        schema=(
-            f"{id_col} long, rec_idx int, offset int, warc_type string,"
-            " target_uri string, http_status int, content_length int"
-        ),
+    return _python_stage(
+        df, id_col, blob_col,
+        "rec_idx int, offset int, warc_type string, target_uri string,"
+        " http_status int, content_length int",
+        row,
     )
 
 
@@ -1297,8 +921,6 @@ def render_test_h264(
     correctness is isolated to the framing logic the query checks).
     The SPS itself DOES exercise emulation prevention when its
     Exp-Golomb zeros pack into 00 00 0x runs."""
-    import hashlib as _hl
-
     from ctgov_ai_etl_spark.functions.h264meta import (
         NAL_IDR,
         NAL_NON_IDR,
@@ -1307,43 +929,32 @@ def render_test_h264(
         build_annexb,
         build_sps,
     )
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, text_col)
-    if spread:  # see the module docstring
-        src = spread_to_parallelism(src)
+    def row(rid: Any, text: Any) -> Iterator[tuple]:
+        d = _md5(text)
+        sps = build_sps(
+            width_mbs=1 + d[0] % 16,
+            height_mbs=1 + d[1] % 16,
+            level_idc=(10, 20, 30, 40, 50)[d[2] % 5],
+            crop_right=d[3] % 2,
+            crop_bottom=d[4] % 2,
+        )
+        nals = [(NAL_SPS, sps), (NAL_PPS, b"\xc8\x42")]
+        for j in range(1 + d[5] % 3):
+            nals.append(
+                (NAL_IDR,
+                 bytes(17 + ((j * 29 + k * 11) % 200)
+                       for k in range(6 + (d[7] + j) % 9)))
+            )
+        for j in range(d[6] % 4):
+            nals.append(
+                (NAL_NON_IDR,
+                 bytes(17 + ((j * 31 + k * 13) % 200)
+                       for k in range(6 + (d[7] + j) % 9)))
+            )
+        yield (build_annexb(nals),)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for rid, text in zip(pdf[id_col], pdf[text_col]):
-                d = _hl.md5(str(text).encode("utf-8")).digest()
-                sps = build_sps(
-                    width_mbs=1 + d[0] % 16,
-                    height_mbs=1 + d[1] % 16,
-                    level_idc=(10, 20, 30, 40, 50)[d[2] % 5],
-                    crop_right=d[3] % 2,
-                    crop_bottom=d[4] % 2,
-                )
-                nals = [(NAL_SPS, sps), (NAL_PPS, b"\xc8\x42")]
-                for j in range(1 + d[5] % 3):
-                    nals.append(
-                        (NAL_IDR,
-                         bytes(17 + ((j * 29 + k * 11) % 200)
-                               for k in range(6 + (d[7] + j) % 9)))
-                    )
-                for j in range(d[6] % 4):
-                    nals.append(
-                        (NAL_NON_IDR,
-                         bytes(17 + ((j * 31 + k * 13) % 200)
-                               for k in range(6 + (d[7] + j) % 9)))
-                    )
-                ids.append(rid)
-                blobs.append(build_annexb(nals))
-            yield pd.DataFrame({id_col: ids, "blob": blobs})
-
-    return src.mapInPandas(run, schema=f"{id_col} long, blob binary")
+    return _python_stage(df, id_col, text_col, "blob binary", row, spread)
 
 
 def h264_meta_real(
@@ -1360,43 +971,22 @@ def h264_meta_real(
         NAL_NON_IDR,
         parse_annexb,
     )
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, blob_col)
+    def row(rid: Any, data: Any) -> Iterator[tuple]:
+        recs = parse_annexb(bytes(data))
+        sps = next(r for r in recs if "width" in r)
+        yield (
+            sps["profile_idc"], sps["level_idc"], sps["width"],
+            sps["height"], len(recs),
+            sum(1 for r in recs if r["nal_type"] == NAL_IDR),
+            sum(1 for r in recs if r["nal_type"] == NAL_NON_IDR),
+        )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                k: []
-                for k in (
-                    id_col, "profile_idc", "level_idc", "width",
-                    "height", "n_nals", "n_idr", "n_non_idr",
-                )
-            }
-            for rid, data in zip(pdf[id_col], pdf[blob_col]):
-                recs = parse_annexb(bytes(data))
-                sps = next(r for r in recs if "width" in r)
-                rows[id_col].append(rid)
-                rows["profile_idc"].append(sps["profile_idc"])
-                rows["level_idc"].append(sps["level_idc"])
-                rows["width"].append(sps["width"])
-                rows["height"].append(sps["height"])
-                rows["n_nals"].append(len(recs))
-                rows["n_idr"].append(
-                    sum(1 for r in recs if r["nal_type"] == NAL_IDR)
-                )
-                rows["n_non_idr"].append(
-                    sum(1 for r in recs if r["nal_type"] == NAL_NON_IDR)
-                )
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(
-        run,
-        schema=(
-            f"{id_col} long, profile_idc int, level_idc int, width int,"
-            " height int, n_nals int, n_idr int, n_non_idr int"
-        ),
+    return _python_stage(
+        df, id_col, blob_col,
+        "profile_idc int, level_idc int, width int, height int,"
+        " n_nals int, n_idr int, n_non_idr int",
+        row,
     )
 
 
@@ -1410,44 +1000,38 @@ def render_test_mp4(
     optional second (audio) trak, and the 64-bit largesize mdat
     framing on half the corpus.  Real box framing, filler payload —
     exactly what a container walk is and isn't sensitive to."""
-    import hashlib as _hl
-
     from ctgov_ai_etl_spark.functions.mp4meta import (
         LANG_CHOICES,
         TIMESCALE_CHOICES,
         build_mp4,
     )
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, text_col)
-    if spread:  # see the module docstring
-        src = spread_to_parallelism(src)
+    def row(rid: Any, text: Any) -> Iterator[tuple]:
+        d = _md5(text)
+        yield (
+            build_mp4(
+                movie_timescale=TIMESCALE_CHOICES[d[0] % 4],
+                duration=1 + ((d[1] << 8) | d[2]) % 100000,
+                width=(1 + d[3] % 64) * 16,
+                height=(1 + d[4] % 64) * 16,
+                n_samples=1 + d[5] % 50,
+                sample_size=100 + d[6] % 156,
+                mdat_large=bool(d[7] % 2),
+                free_pad=d[8] % 32,
+                n_traks=1 + d[9] % 2,
+                lang=LANG_CHOICES[d[10] % 5],
+                version=1 if d[11] % 4 == 0 else 0,
+            ),
+        )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for rid, text in zip(pdf[id_col], pdf[text_col]):
-                d = _hl.md5(str(text).encode("utf-8")).digest()
-                ids.append(rid)
-                blobs.append(
-                    build_mp4(
-                        movie_timescale=TIMESCALE_CHOICES[d[0] % 4],
-                        duration=1 + ((d[1] << 8) | d[2]) % 100000,
-                        width=(1 + d[3] % 64) * 16,
-                        height=(1 + d[4] % 64) * 16,
-                        n_samples=1 + d[5] % 50,
-                        sample_size=100 + d[6] % 156,
-                        mdat_large=bool(d[7] % 2),
-                        free_pad=d[8] % 32,
-                        n_traks=1 + d[9] % 2,
-                        lang=LANG_CHOICES[d[10] % 5],
-                        version=1 if d[11] % 4 == 0 else 0,
-                    )
-                )
-            yield pd.DataFrame({id_col: ids, "blob": blobs})
+    return _python_stage(df, id_col, text_col, "blob binary", row, spread)
 
-    return src.mapInPandas(run, schema=f"{id_col} long, blob binary")
+
+_MP4_META_DDL = (
+    "n_boxes int, n_traks int, box_version int, movie_timescale int,"
+    " movie_duration_ms long, width int, height int, media_lang string,"
+    " mdat_bytes long, mdat_large int, total_bytes long"
+)
 
 
 def mp4_meta_real(
@@ -1461,34 +1045,10 @@ def mp4_meta_real(
     geometry, language, payload size — all exact integers.  Zero
     shuffle."""
     from ctgov_ai_etl_spark.functions.mp4meta import parse_mp4_meta
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, blob_col)
-    fields = (
-        "n_boxes", "n_traks", "box_version", "movie_timescale",
-        "movie_duration_ms", "width", "height", "media_lang",
-        "mdat_bytes", "mdat_large", "total_bytes",
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in (id_col, *fields)}
-            for rid, data in zip(pdf[id_col], pdf[blob_col]):
-                meta = parse_mp4_meta(bytes(data))
-                rows[id_col].append(rid)
-                for k in fields:
-                    rows[k].append(meta[k])
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(
-        run,
-        schema=(
-            f"{id_col} long, n_boxes int, n_traks int, box_version int,"
-            " movie_timescale int, movie_duration_ms long, width int,"
-            " height int, media_lang string, mdat_bytes long,"
-            " mdat_large int, total_bytes long"
-        ),
+    return _python_stage(
+        df, id_col, blob_col, _MP4_META_DDL,
+        _parsed_fields(parse_mp4_meta, _MP4_META_DDL),
     )
 
 
@@ -1502,39 +1062,33 @@ def render_test_wav(
     rule), and a filler data payload.  Real chunk framing, fake
     samples — exactly what container triage is and isn't sensitive
     to."""
-    import hashlib as _hl
-
     from ctgov_ai_etl_spark.functions.wavmeta import (
         BITS_CHOICES,
         RATE_CHOICES,
         build_wav,
     )
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, text_col)
-    if spread:  # see the module docstring
-        src = spread_to_parallelism(src)
+    def row(rid: Any, text: Any) -> Iterator[tuple]:
+        d = _md5(text)
+        yield (
+            build_wav(
+                sample_rate=RATE_CHOICES[d[0] % 5],
+                channels=1 + d[1] % 2,
+                bits=BITS_CHOICES[d[2] % 4],
+                n_samples=1 + ((d[3] << 8) | d[4]) % 20000,
+                info_len=1 + d[5] % 40,
+                with_fact=bool(d[6] % 2),
+            ),
+        )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for rid, text in zip(pdf[id_col], pdf[text_col]):
-                d = _hl.md5(str(text).encode("utf-8")).digest()
-                ids.append(rid)
-                blobs.append(
-                    build_wav(
-                        sample_rate=RATE_CHOICES[d[0] % 5],
-                        channels=1 + d[1] % 2,
-                        bits=BITS_CHOICES[d[2] % 4],
-                        n_samples=1 + ((d[3] << 8) | d[4]) % 20000,
-                        info_len=1 + d[5] % 40,
-                        with_fact=bool(d[6] % 2),
-                    )
-                )
-            yield pd.DataFrame({id_col: ids, "blob": blobs})
+    return _python_stage(df, id_col, text_col, "blob binary", row, spread)
 
-    return src.mapInPandas(run, schema=f"{id_col} long, blob binary")
+
+_WAV_META_DDL = (
+    "n_chunks int, channels int, sample_rate int, bits_per_sample int,"
+    " block_align int, byte_rate int, n_samples long, data_bytes long,"
+    " duration_us long, total_bytes long"
+)
 
 
 def wav_meta_real(
@@ -1547,34 +1101,10 @@ def wav_meta_real(
     rate / depth / exact integer-microsecond duration — all before
     any sample is touched.  Zero shuffle."""
     from ctgov_ai_etl_spark.functions.wavmeta import parse_wav_meta
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, blob_col)
-    fields = (
-        "n_chunks", "channels", "sample_rate", "bits_per_sample",
-        "block_align", "byte_rate", "n_samples", "data_bytes",
-        "duration_us", "total_bytes",
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in (id_col, *fields)}
-            for rid, data in zip(pdf[id_col], pdf[blob_col]):
-                meta = parse_wav_meta(bytes(data))
-                rows[id_col].append(rid)
-                for k in fields:
-                    rows[k].append(meta[k])
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(
-        run,
-        schema=(
-            f"{id_col} long, n_chunks int, channels int, sample_rate int,"
-            " bits_per_sample int, block_align int, byte_rate int,"
-            " n_samples long, data_bytes long, duration_us long,"
-            " total_bytes long"
-        ),
+    return _python_stage(
+        df, id_col, blob_col, _WAV_META_DDL,
+        _parsed_fields(parse_wav_meta, _WAV_META_DDL),
     )
 
 
@@ -1587,37 +1117,31 @@ def render_test_pdf(
     lengths, a fixed-width xref table whose offsets are real, and a
     trailer.  Every parameter is fixed-width by construction so the
     whole byte layout is closed-form for the oracle."""
-    import hashlib as _hl
-
     from ctgov_ai_etl_spark.functions.pdfmeta import build_pdf
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, text_col)
-    if spread:  # see the module docstring
-        src = spread_to_parallelism(src)
+    def row(rid: Any, text: Any) -> Iterator[tuple]:
+        d = _md5(text)
+        k = 1 + d[0] % 3
+        yield (
+            build_pdf(
+                n_pages=k,
+                width=100 + ((d[1] << 8) | d[2]) % 900,
+                height=100 + ((d[3] << 8) | d[4]) % 900,
+                lengths=[
+                    100 + ((d[5 + 2 * i] << 8) | d[6 + 2 * i]) % 900
+                    for i in range(k)
+                ],
+            ),
+        )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for rid, text in zip(pdf[id_col], pdf[text_col]):
-                d = _hl.md5(str(text).encode("utf-8")).digest()
-                k = 1 + d[0] % 3
-                ids.append(rid)
-                blobs.append(
-                    build_pdf(
-                        n_pages=k,
-                        width=100 + ((d[1] << 8) | d[2]) % 900,
-                        height=100 + ((d[3] << 8) | d[4]) % 900,
-                        lengths=[
-                            100 + ((d[5 + 2 * i] << 8) | d[6 + 2 * i]) % 900
-                            for i in range(k)
-                        ],
-                    )
-                )
-            yield pd.DataFrame({id_col: ids, "blob": blobs})
+    return _python_stage(df, id_col, text_col, "blob binary", row, spread)
 
-    return src.mapInPandas(run, schema=f"{id_col} long, blob binary")
+
+_PDF_META_DDL = (
+    "pdf_version string, n_objects int, n_pages int, media_w int,"
+    " media_h int, total_content_bytes long, xref_offset long,"
+    " total_bytes long"
+)
 
 
 def pdf_meta_real(
@@ -1630,32 +1154,10 @@ def pdf_meta_real(
     emits the document triage row — pages / geometry / content
     volume / structural integrity.  Zero shuffle."""
     from ctgov_ai_etl_spark.functions.pdfmeta import parse_pdf_meta
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, blob_col)
-    fields = (
-        "pdf_version", "n_objects", "n_pages", "media_w", "media_h",
-        "total_content_bytes", "xref_offset", "total_bytes",
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in (id_col, *fields)}
-            for rid, data in zip(pdf[id_col], pdf[blob_col]):
-                meta = parse_pdf_meta(bytes(data))
-                rows[id_col].append(rid)
-                for k in fields:
-                    rows[k].append(meta[k])
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(
-        run,
-        schema=(
-            f"{id_col} long, pdf_version string, n_objects int,"
-            " n_pages int, media_w int, media_h int,"
-            " total_content_bytes long, xref_offset long, total_bytes long"
-        ),
+    return _python_stage(
+        df, id_col, blob_col, _PDF_META_DDL,
+        _parsed_fields(parse_pdf_meta, _PDF_META_DDL),
     )
 
 
@@ -1670,36 +1172,22 @@ def warc_response_texts(
     response records only; other records and statuses are triaged out
     here, before any curation cost.  Arrow-batched, no keyed shuffle."""
     from ctgov_ai_etl_spark.functions.warc import parse_warc_records
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, blob_col)
+    def row(rid: Any, data: Any) -> Iterator[tuple]:
+        recs = parse_warc_records(bytes(data), include_body=True)
+        for j, rec in enumerate(recs):
+            if rec["http_status"] == 200:
+                # UTF-8, matching body.encode() in the WARC renderer.
+                # NOTE the closed-form length oracles equate DuckDB
+                # character length(text) with the Content-Length BYTE
+                # count, which holds only for ASCII corpora (the
+                # generated documents table is verified ASCII-only);
+                # non-ASCII text would desync char-vs-byte lengths in
+                # the oracle, not crash here.
+                yield j, rec["body"].decode("utf-8")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, bodies = [], [], []
-            for rid, data in zip(pdf[id_col], pdf[blob_col]):
-                for j, rec in enumerate(
-                    parse_warc_records(bytes(data), include_body=True)
-                ):
-                    if rec["http_status"] == 200:
-                        ids.append(rid)
-                        idxs.append(j)
-                        # UTF-8, matching body.encode() in the WARC
-                        # renderer.  NOTE the closed-form length
-                        # oracles equate DuckDB character length(text)
-                        # with the Content-Length BYTE count, which
-                        # holds only for ASCII corpora (the generated
-                        # documents table is verified ASCII-only);
-                        # non-ASCII text would desync char-vs-byte
-                        # lengths in the oracle, not crash here.
-                        bodies.append(rec["body"].decode("utf-8"))
-            yield pd.DataFrame(
-                {id_col: ids, "rec_idx": idxs, "body": bodies}
-            )
-
-    return src.mapInPandas(
-        run, schema=f"{id_col} long, rec_idx int, body string"
+    return _python_stage(
+        df, id_col, blob_col, "rec_idx int, body string", row
     )
 
 
@@ -1714,37 +1202,21 @@ def render_test_tar(
     cases) and a 1-byte ``.cls`` member carrying label (d2+k)%10.
     Every header field, data-block pad, and the end-of-archive marker
     are real — the SQL oracle replays the whole block layout."""
-    import hashlib as _hl
-
     from ctgov_ai_etl_spark.functions.tarmeta import build_tar
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, text_col)
-    if spread:  # see the module docstring
-        src = spread_to_parallelism(src)
+    def row(rid: Any, text: Any) -> Iterator[tuple]:
+        t = str(text)
+        d = _md5(t)
+        members = []
+        for k in range(2 + d[0] % 3):
+            body = t[k * 31 : k * 31 + 13 + ((d[1] + k) % 9)]
+            members.append((f"{int(rid):05d}-{k}.txt", body.encode()))
+            members.append(
+                (f"{int(rid):05d}-{k}.cls", str((d[2] + k) % 10).encode())
+            )
+        yield (build_tar(members),)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for rid, text in zip(pdf[id_col], pdf[text_col]):
-                t = str(text)
-                d = _hl.md5(t.encode("utf-8")).digest()
-                members = []
-                for k in range(2 + d[0] % 3):
-                    body = t[k * 31 : k * 31 + 13 + ((d[1] + k) % 9)]
-                    members.append(
-                        (f"{int(rid):05d}-{k}.txt", body.encode())
-                    )
-                    members.append(
-                        (f"{int(rid):05d}-{k}.cls",
-                         str((d[2] + k) % 10).encode())
-                    )
-                ids.append(rid)
-                blobs.append(build_tar(members))
-            yield pd.DataFrame({id_col: ids, "blob": blobs})
-
-    return src.mapInPandas(run, schema=f"{id_col} long, blob binary")
+    return _python_stage(df, id_col, text_col, "blob binary", row, spread)
 
 
 def tar_members_real(
@@ -1757,32 +1229,14 @@ def tar_members_real(
     (512 + 512*ceil(size/512) per predecessor) hash-checks the whole
     shard layout.  Arrow-batched, no keyed shuffle."""
     from ctgov_ai_etl_spark.functions.tarmeta import parse_tar_members
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, blob_col)
+    def row(rid: Any, data: Any) -> Iterator[tuple]:
+        for j, r in enumerate(parse_tar_members(bytes(data))):
+            yield j, r["name"], r["size"], r["offset"]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                k: [] for k in (id_col, "member_idx", "name", "size",
-                                "offset")
-            }
-            for rid, data in zip(pdf[id_col], pdf[blob_col]):
-                for j, rec in enumerate(parse_tar_members(bytes(data))):
-                    rows[id_col].append(rid)
-                    rows["member_idx"].append(j)
-                    rows["name"].append(rec["name"])
-                    rows["size"].append(rec["size"])
-                    rows["offset"].append(rec["offset"])
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(
-        run,
-        schema=(
-            f"{id_col} long, member_idx int, name string, size int,"
-            " offset int"
-        ),
+    return _python_stage(
+        df, id_col, blob_col,
+        "member_idx int, name string, size int, offset int", row,
     )
 
 
@@ -1802,52 +1256,26 @@ def wds_samples_real(
         parse_tar_members,
         sample_key,
     )
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, blob_col)
+    def row(rid: Any, data: Any) -> Iterator[tuple]:
+        # key -> [n_parts, payload_bytes, txt_len, label], in first-seen order
+        samples: dict[str, list] = {}
+        for rec in parse_tar_members(bytes(data), include_content=True):
+            s = samples.setdefault(sample_key(rec["name"]), [0, 0, 0, None])
+            s[0] += 1
+            s[1] += rec["size"]
+            if rec["name"].endswith(".txt"):
+                s[2] = rec["size"]
+            elif rec["name"].endswith(".cls"):
+                s[3] = int(rec["content"].decode("ascii"))
+        for key, s in samples.items():
+            yield (key, *s)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                k: []
-                for k in (id_col, "sample_id", "n_parts", "payload_bytes",
-                          "txt_len", "label")
-            }
-            for rid, data in zip(pdf[id_col], pdf[blob_col]):
-                samples: dict[str, dict] = {}
-                order: list[str] = []
-                for rec in parse_tar_members(bytes(data),
-                                             include_content=True):
-                    key = sample_key(rec["name"])
-                    if key not in samples:
-                        samples[key] = {
-                            "n": 0, "bytes": 0, "txt": 0, "label": None,
-                        }
-                        order.append(key)
-                    s = samples[key]
-                    s["n"] += 1
-                    s["bytes"] += rec["size"]
-                    if rec["name"].endswith(".txt"):
-                        s["txt"] = rec["size"]
-                    elif rec["name"].endswith(".cls"):
-                        s["label"] = int(rec["content"].decode("ascii"))
-                for key in order:
-                    s = samples[key]
-                    rows[id_col].append(rid)
-                    rows["sample_id"].append(key)
-                    rows["n_parts"].append(s["n"])
-                    rows["payload_bytes"].append(s["bytes"])
-                    rows["txt_len"].append(s["txt"])
-                    rows["label"].append(s["label"])
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(
-        run,
-        schema=(
-            f"{id_col} long, sample_id string, n_parts int,"
-            " payload_bytes int, txt_len int, label int"
-        ),
+    return _python_stage(
+        df, id_col, blob_col,
+        "sample_id string, n_parts int, payload_bytes int, txt_len int,"
+        " label int",
+        row,
     )
 
 
@@ -1860,46 +1288,14 @@ def render_test_warcgz(
     the members concatenated — the ISO 28500 annex framing actual web
     archives use so records are seekable without inflating the whole
     file.  functions/gzipmeta.py + functions/warc.py."""
-    import hashlib as _hl
-
     from ctgov_ai_etl_spark.functions.gzipmeta import build_gzip_members
-    from ctgov_ai_etl_spark.functions.warc import build_record, http_envelope
-    from ctgov_ai_etl_spark.session import ship_package
+    from ctgov_ai_etl_spark.functions.warc import build_record
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, text_col)
-    if spread:  # see the module docstring
-        src = spread_to_parallelism(src)
+    def row(rid: Any, text: Any) -> Iterator[tuple]:
+        recs = _warc_records(rid, text)
+        yield (build_gzip_members([build_record(*r) for r in recs]),)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for rid, text in zip(pdf[id_col], pdf[text_col]):
-                t = str(text)
-                d = _hl.md5(t.encode("utf-8")).digest()
-                recs = []
-                for j in range(2 + d[0] % 4):
-                    body = t[j * 23 : j * 23 + 17 + ((d[3] + j) % 11)]
-                    if (d[1] + j) % 3 > 0:
-                        status = (200, 301, 404, 503)[(d[2] + j) % 4]
-                        content = http_envelope(status) + body.encode()
-                        wtype = "response"
-                    else:
-                        content = body.encode()
-                        wtype = "resource"
-                    recs.append(
-                        build_record(
-                            wtype,
-                            f"urn:doc{rid}-{j}",
-                            f"http://ex.com/{rid}/{j}",
-                            content,
-                        )
-                    )
-                ids.append(rid)
-                blobs.append(build_gzip_members(recs))
-            yield pd.DataFrame({id_col: ids, "blob": blobs})
-
-    return src.mapInPandas(run, schema=f"{id_col} long, blob binary")
+    return _python_stage(df, id_col, text_col, "blob binary", row, spread)
 
 
 def warcgz_records_real(
@@ -1916,45 +1312,26 @@ def warcgz_records_real(
     compression layer.  Arrow-batched, no keyed shuffle."""
     from ctgov_ai_etl_spark.functions.gzipmeta import parse_gzip_members
     from ctgov_ai_etl_spark.functions.warc import WarcError, parse_warc_records
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, blob_col)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                k: []
-                for k in (
-                    id_col, "member_idx", "warc_type", "target_uri",
-                    "http_status", "content_length", "record_bytes",
+    def row(rid: Any, data: Any) -> Iterator[tuple]:
+        for j, m in enumerate(parse_gzip_members(bytes(data))):
+            recs = parse_warc_records(m["body"])
+            if len(recs) != 1:
+                raise WarcError(
+                    f"gzip member {j} holds {len(recs)} WARC "
+                    "records; .warc.gz requires exactly one"
                 )
-            }
-            for rid, data in zip(pdf[id_col], pdf[blob_col]):
-                for j, m in enumerate(parse_gzip_members(bytes(data))):
-                    recs = parse_warc_records(m["body"])
-                    if len(recs) != 1:
-                        raise WarcError(
-                            f"gzip member {j} holds {len(recs)} WARC "
-                            "records; .warc.gz requires exactly one"
-                        )
-                    r = recs[0]
-                    rows[id_col].append(rid)
-                    rows["member_idx"].append(j)
-                    rows["warc_type"].append(r["warc_type"])
-                    rows["target_uri"].append(r["target_uri"])
-                    rows["http_status"].append(r["http_status"])
-                    rows["content_length"].append(r["content_length"])
-                    rows["record_bytes"].append(m["n_bytes"])
-            yield pd.DataFrame(rows)
+            r = recs[0]
+            yield (
+                j, r["warc_type"], r["target_uri"], r["http_status"],
+                r["content_length"], m["n_bytes"],
+            )
 
-    return src.mapInPandas(
-        run,
-        schema=(
-            f"{id_col} long, member_idx int, warc_type string,"
-            " target_uri string, http_status int, content_length int,"
-            " record_bytes int"
-        ),
+    return _python_stage(
+        df, id_col, blob_col,
+        "member_idx int, warc_type string, target_uri string,"
+        " http_status int, content_length int, record_bytes int",
+        row,
     )
 
 
@@ -1967,34 +1344,22 @@ def render_test_zip(
     [k*27, k*27 + 14+((d1+k)%12)) including truncated/empty overflow
     cases — local headers, central directory, EOCD, and real CRC-32s
     all written byte-exactly so the SQL oracle replays the layout."""
-    import hashlib as _hl
-
     from ctgov_ai_etl_spark.functions.zipmeta import build_zip
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, text_col)
-    if spread:  # see the module docstring
-        src = spread_to_parallelism(src)
+    def row(rid: Any, text: Any) -> Iterator[tuple]:
+        t = str(text)
+        d = _md5(t)
+        yield (
+            build_zip([
+                (
+                    f"{int(rid):05d}-{k}.txt",
+                    t[k * 27 : k * 27 + 14 + ((d[1] + k) % 12)].encode(),
+                )
+                for k in range(2 + d[0] % 4)
+            ]),
+        )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for rid, text in zip(pdf[id_col], pdf[text_col]):
-                t = str(text)
-                d = _hl.md5(t.encode("utf-8")).digest()
-                entries = [
-                    (
-                        f"{int(rid):05d}-{k}.txt",
-                        t[k * 27 : k * 27 + 14 + ((d[1] + k) % 12)].encode(),
-                    )
-                    for k in range(2 + d[0] % 4)
-                ]
-                ids.append(rid)
-                blobs.append(build_zip(entries))
-            yield pd.DataFrame({id_col: ids, "blob": blobs})
-
-    return src.mapInPandas(run, schema=f"{id_col} long, blob binary")
+    return _python_stage(df, id_col, text_col, "blob binary", row, spread)
 
 
 def zip_entries_real(
@@ -2007,31 +1372,12 @@ def zip_entries_real(
     running sum (STORED members make the layout closed-form).
     Arrow-batched, no keyed shuffle."""
     from ctgov_ai_etl_spark.functions.zipmeta import parse_zip_entries
-    from ctgov_ai_etl_spark.session import ship_package
 
-    ship_package(df.sparkSession)
-    src = df.select(id_col, blob_col)
+    def row(rid: Any, data: Any) -> Iterator[tuple]:
+        for j, r in enumerate(parse_zip_entries(bytes(data))):
+            yield j, r["name"], r["n_bytes"], r["local_offset"]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                k: []
-                for k in (id_col, "entry_idx", "name", "n_bytes",
-                          "local_offset")
-            }
-            for rid, data in zip(pdf[id_col], pdf[blob_col]):
-                for j, rec in enumerate(parse_zip_entries(bytes(data))):
-                    rows[id_col].append(rid)
-                    rows["entry_idx"].append(j)
-                    rows["name"].append(rec["name"])
-                    rows["n_bytes"].append(rec["n_bytes"])
-                    rows["local_offset"].append(rec["local_offset"])
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(
-        run,
-        schema=(
-            f"{id_col} long, entry_idx int, name string, n_bytes int,"
-            " local_offset int"
-        ),
+    return _python_stage(
+        df, id_col, blob_col,
+        "entry_idx int, name string, n_bytes int, local_offset int", row,
     )

@@ -353,8 +353,9 @@ def stream_upsert_snapshot(
     (file-stream batch order is not a contract) and of replays.  Each
     merge writes a NEW versioned snapshot directory (copy-on-write,
     the lakehouse layout) rather than overwriting in place — one
-    read→write pass per batch, no defensive materialization, history
-    retained (the seam cdc time travel reads through).
+    read→write pass per batch, no defensive materialization.  Once the
+    stream stops, the shards, the checkpoint and every superseded
+    version are removed: the returned frame reads only the latest.
     """
     from ctgov_ai_etl_spark.operators.merge import merge_upsert_versioned
     from ctgov_ai_etl_spark.tables import load_table
@@ -379,7 +380,7 @@ def stream_upsert_snapshot(
     # format uses) instead of overwriting in place — so the merge
     # streams straight from read to write in ONE pass, with no
     # persist+count materialization to protect a self-referential
-    # overwrite, and every historical version stays readable.
+    # overwrite.
     latest: list[str] = []
 
     def upsert_batch(batch_df: DataFrame, epoch_id: int) -> None:
@@ -396,16 +397,32 @@ def stream_upsert_snapshot(
         latest.append(vdir)
 
     ckpt = os.path.join(work, "ckpt")
-    with _stream_shuffle_parts(spark):
-        q = (
-            stream.writeStream.foreachBatch(upsert_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    _capture_stream_plan(q)
+    try:
+        with _stream_shuffle_parts(spark):
+            q = (
+                stream.writeStream.foreachBatch(upsert_batch)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+        _capture_stream_plan(q)
+    finally:
+        # Nothing reaches the shards, the checkpoint or a superseded
+        # version once the stream has stopped; they would stay on tmpfs
+        # for the life of the host.
+        for d in (src_dir, ckpt, *latest[:-1]):
+            shutil.rmtree(d, ignore_errors=True)
     return spark.read.parquet(latest[-1])
+
+
+def _table_dropping_view(spark: SparkSession, name: str) -> DataFrame:
+    """The memory sink's result, with its temp view dropped so a long
+    session does not accumulate them: the returned frame's analyzed
+    plan holds the sink's data, not the view name."""
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
 
 
 def run_stream_to_memory_until_done(
@@ -436,10 +453,10 @@ def run_stream_to_memory_until_done(
             finally:
                 q.stop()
     finally:
-        # In a finally (ADVICE r15): an exception mid-run must not
-        # leak the single-run checkpoint onto tmpfs.
+        # In a finally: an exception mid-run must not leak the
+        # single-run checkpoint onto tmpfs.
         shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name)
+    return _table_dropping_view(spark, name)
 
 
 def run_stream_to_memory(
@@ -473,10 +490,10 @@ def run_stream_to_memory(
         # The memory sink holds the results; the single-run checkpoint
         # is dead weight once the query terminated — drop it so long
         # catalog sessions don't accumulate hundreds of scratch dirs on
-        # tmpfs.  In a finally (ADVICE r15): an exception mid-run must
-        # not leak it either.
+        # tmpfs.  In a finally: an exception mid-run must not leak it
+        # either.
         shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name)
+    return _table_dropping_view(spark, name)
 
 
 def stateful_capped_sessions(

@@ -681,3 +681,79 @@ def test_png_subbyte_palette_with_sub_filter():
     W, H, CH, r = decode_png_pixels(g)
     want = b"".join(bytes(pal[i]) for row in idx_rows for i in row)
     assert (W, H, CH) == (w, h, 3) and r == want
+
+
+# --- every kernel's declared output schema --------------------------------
+# (kernel, the kernel that feeds it or None for the text frame, the
+# exact schema).  Exact types, not type families: the oracle harness
+# treats int and long as one family, so a Python stage that widened a
+# column would still pass every oracle.
+KERNEL_SCHEMAS = [
+    ("render_test_images", None, "struct<doc_id:bigint,fmt:string,blob:binary>"),
+    ("render_png_matrix", None, "struct<doc_id:bigint,variant:int,blob:binary>"),
+    ("render_test_jpegs", None, "struct<doc_id:bigint,rst:int,blob:binary>"),
+    ("render_test_jpegs_progressive", None, "struct<doc_id:bigint,rst:int,blob:binary>"),
+    ("render_test_audio", None, "struct<doc_id:bigint,blob:binary>"),
+    ("render_test_video", None, "struct<doc_id:bigint,blob:binary>"),
+    ("render_and_decode_test_gifs", None, "struct<doc_id:bigint,width:int,height:int,n_frames:int,luma0_sum:bigint,luma_last_sum:bigint,n_samples:bigint>"),
+    ("render_test_bmps", None, "struct<doc_id:bigint,blob:binary>"),
+    ("render_test_mp3", None, "struct<doc_id:bigint,blob:binary>"),
+    ("render_test_warc", None, "struct<doc_id:bigint,blob:binary>"),
+    ("render_test_h264", None, "struct<doc_id:bigint,blob:binary>"),
+    ("render_test_mp4", None, "struct<doc_id:bigint,blob:binary>"),
+    ("render_test_wav", None, "struct<doc_id:bigint,blob:binary>"),
+    ("render_test_pdf", None, "struct<doc_id:bigint,blob:binary>"),
+    ("render_test_tar", None, "struct<doc_id:bigint,blob:binary>"),
+    ("render_test_warcgz", None, "struct<doc_id:bigint,blob:binary>"),
+    ("render_test_zip", None, "struct<doc_id:bigint,blob:binary>"),
+    ("decode_image_real", "render_test_images", "struct<doc_id:bigint,fmt:string,width:int,height:int,luma_sum:bigint,n_samples:bigint>"),
+    ("decode_image_features", "attach_blob", "struct<doc_id:bigint,width:int,height:int,mean_luma:double>"),
+    ("frame_sample", "attach_blob", "struct<doc_id:bigint,frame_idx:int,frame_sig:string>"),
+    ("decode_audio_real", "render_test_audio", "struct<doc_id:bigint,channels:int,sample_rate:int,n_frames:int,abs_sum:bigint>"),
+    ("audio_features_real", "render_test_audio", "struct<doc_id:bigint,channel:int,n_frames:int,zcr:bigint,sq_sum:bigint>"),
+    ("decode_video_real", "render_test_video", "struct<doc_id:bigint,width:int,height:int,n_frames:int,luma_sum:bigint>"),
+    ("resize_image_real", "render_png_matrix", "struct<doc_id:bigint,variant:int,width_out:int,height_out:int,luma_sum:bigint,n_samples:bigint>"),
+    ("sample_video_frames_real", "render_test_video", "struct<doc_id:bigint,frame_idx:int,width:int,height:int,luma_sum:bigint>"),
+    ("downsample_audio_real", "render_test_audio", "struct<doc_id:bigint,channels:int,sample_rate_out:int,n_frames_out:int,abs_sum:bigint>"),
+    ("dhash_images_real", "render_test_images", "struct<doc_id:bigint,hash_hi:bigint,hash_lo:bigint>"),
+    ("audio_dft8_real", "render_test_audio", "struct<doc_id:bigint,channel:int,bin:int,energy:bigint>"),
+    ("mp3_meta_real", "render_test_mp3", "struct<doc_id:bigint,id3_bytes:int,n_frames:int,bitrate_kbps:int,sample_rate:int,total_bytes:int,n_padded:int,duration_us:bigint>"),
+    ("warc_records_real", "render_test_warc", "struct<doc_id:bigint,rec_idx:int,offset:int,warc_type:string,target_uri:string,http_status:int,content_length:int>"),
+    ("h264_meta_real", "render_test_h264", "struct<doc_id:bigint,profile_idc:int,level_idc:int,width:int,height:int,n_nals:int,n_idr:int,n_non_idr:int>"),
+    ("mp4_meta_real", "render_test_mp4", "struct<doc_id:bigint,n_boxes:int,n_traks:int,box_version:int,movie_timescale:int,movie_duration_ms:bigint,width:int,height:int,media_lang:string,mdat_bytes:bigint,mdat_large:int,total_bytes:bigint>"),
+    ("wav_meta_real", "render_test_wav", "struct<doc_id:bigint,n_chunks:int,channels:int,sample_rate:int,bits_per_sample:int,block_align:int,byte_rate:int,n_samples:bigint,data_bytes:bigint,duration_us:bigint,total_bytes:bigint>"),
+    ("pdf_meta_real", "render_test_pdf", "struct<doc_id:bigint,pdf_version:string,n_objects:int,n_pages:int,media_w:int,media_h:int,total_content_bytes:bigint,xref_offset:bigint,total_bytes:bigint>"),
+    ("warc_response_texts", "render_test_warc", "struct<doc_id:bigint,rec_idx:int,body:string>"),
+    ("tar_members_real", "render_test_tar", "struct<doc_id:bigint,member_idx:int,name:string,size:int,offset:int>"),
+    ("wds_samples_real", "render_test_tar", "struct<doc_id:bigint,sample_id:string,n_parts:int,payload_bytes:int,txt_len:int,label:int>"),
+    ("warcgz_records_real", "render_test_warcgz", "struct<doc_id:bigint,member_idx:int,warc_type:string,target_uri:string,http_status:int,content_length:int,record_bytes:int>"),
+    ("zip_entries_real", "render_test_zip", "struct<doc_id:bigint,entry_idx:int,name:string,n_bytes:int,local_offset:int>"),
+]
+
+
+@pytest.mark.parametrize(
+    "kernel,source,schema", KERNEL_SCHEMAS, ids=[k for k, _, _ in KERNEL_SCHEMAS]
+)
+def test_kernel_output_schema(spark, kernel, source, schema):
+    from ctgov_ai_etl_spark.operators import multimodal as mm
+
+    d = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
+    if source == "attach_blob":
+        d = mm.attach_blob(d, "text")
+    elif source is not None:
+        d = getattr(mm, source)(d, "doc_id")
+    assert getattr(mm, kernel)(d, "doc_id").schema.simpleString() == schema
+
+
+def test_kernel_schema_table_covers_every_kernel():
+    import inspect
+
+    from ctgov_ai_etl_spark.operators import multimodal as mm
+
+    kernels = {
+        n for n, f in vars(mm).items()
+        if inspect.isfunction(f) and f.__module__ == mm.__name__
+        and not n.startswith("_") and n != "attach_blob"
+    }
+    assert kernels == {k for k, _, _ in KERNEL_SCHEMAS}
+    assert len(KERNEL_SCHEMAS) == 39

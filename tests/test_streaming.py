@@ -852,3 +852,46 @@ def test_failed_stream_run_restores_shuffle_parts(spark, session_parts):
     with pytest.raises(Exception):
         run_stream_to_memory(failing)
     assert spark.conf.get(_PARTS) == session_parts
+
+
+# --- stream runner resource hygiene --------------------------------------
+
+
+def test_stream_catalog_leaves_no_memory_views(spark):
+    """Both memory-sink runners (``stream_run_rest_source`` drives
+    ``run_stream_to_memory_until_done``, the rest
+    ``run_stream_to_memory``) drop their view once they have the
+    result, and the result, derived further by most queries, still
+    collects after the drop: its plan holds the sink's data, not the
+    view name."""
+    from ctgov_ai_etl_spark.queries import load_all
+
+    def views():
+        return sorted(t.name for t in spark.catalog.listTables())
+
+    before = views()
+    registry = load_all()
+    names = [n for n in registry if n.startswith("stream_run_")]
+    assert names
+    for name in names:
+        registry[name].fn(spark, SF_SMALL).collect()
+        assert views() == before, name
+
+
+def test_upsert_snapshot_keeps_only_latest_version(spark):
+    """Once the stream stops, the scratch directory holds only the
+    snapshot version the returned frame reads."""
+    import os
+    from urllib.parse import urlparse
+
+    from ctgov_ai_etl_spark.streaming.events import stream_upsert_snapshot
+
+    snap = stream_upsert_snapshot(spark, SF_SMALL)
+    files = {os.path.dirname(urlparse(f).path) for f in snap.inputFiles()}
+    assert len(files) == 1
+    version = files.pop()
+    target = os.path.dirname(version)
+    work = os.path.dirname(target)
+    assert os.listdir(work) == ["target"]
+    assert os.listdir(target) == [os.path.basename(version)]
+    assert snap.count() > 0

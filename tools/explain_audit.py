@@ -572,8 +572,10 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
         # before the exchange — assert the two-key partitioning
         ("stage 1 shuffles on (segment, salt) — skew spread",
          r"hashpartitioning\(c_mktsegment#\d+, _w0#\d+L?,"),
+        # the query sets no partition count: {shuffle_parts} is filled
+        # in at audit time with the session's spark.sql.shuffle.partitions
         ("stage 2 re-ranks survivors per segment",
-         r"hashpartitioning\(c_mktsegment#\d+, 32"),
+         r"hashpartitioning\(c_mktsegment#\d+, {shuffle_parts}\)"),
         ("no nested loop", r"\A(?!.*BroadcastNestedLoopJoin)"),
     ],
     "join_temporal_scd2": [
@@ -941,6 +943,7 @@ def main() -> int:
         "",
     ]
     failures = 0
+    shuffle_parts = spark.conf.get("spark.sql.shuffle.partitions")
     for name, checks in CHECKS.items():
         df = registry[name].fn(spark, SF)
         # Size budget gates the PRE-execution formatted plan — the
@@ -963,6 +966,7 @@ def main() -> int:
         print(f"{'PASS' if size_ok else 'FAIL'}  {name}: "
               f"plan size {nlines} lines")
         for prop, pattern in checks:
+            pattern = pattern.replace("{shuffle_parts}", shuffle_parts)
             ok = re.search(pattern, plan, re.MULTILINE | re.DOTALL) is not None
             mark = "✅" if ok else "✗"
             if not ok:
