@@ -10,7 +10,18 @@ push down, broadcast, and re-plan with AQE; Arrow-batched pandas UDFs
 at the Python boundary; Structured Streaming for event data.
 """
 
+import os
+
 from ctgov_ai_etl_spark.session import get_spark
 from ctgov_ai_etl_spark.tables import load_table, register_views
 
 __all__ = ["get_spark", "load_table", "register_views"]
+
+# Every engine stage that runs Python imports this package in its
+# worker (cloudpickle resolves the engine's functions and classes by
+# module), so a reused worker installs the backport before its second
+# task's ``importlib.invalidate_caches()``.
+if os.environ.get("SPARK_REUSE_WORKER"):
+    from ctgov_ai_etl_spark import pyworker
+
+    pyworker.install()

@@ -1363,75 +1363,81 @@ def stream_run_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     state.  Oracle: the plain batch LEFT range-join, valid because
     the sentinels close every real window."""
     import os
+    import shutil
 
     from ctgov_ai_etl_spark.streaming.events import run_stream_to_memory, scratch_dir
     from ctgov_ai_etl_spark.tables import load_table
 
     ev = load_table(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
     stage = scratch_dir("ssjo_")
-    b1 = os.path.join(stage, "batch1")
-    # ONE file → ONE trigger for the whole real-event slice.  With
-    # the default multi-file write, maxFilesPerTrigger=1 turned every
-    # task's output file into its own micro-batch, and each extra
-    # trigger re-paid the full state-store round-trip — 14 s of
-    # harness cost at sf0.1 for evidence that three triggers (events,
-    # sentinel 1, sentinel 2) already carry: the watermark closure
-    # and the cross-batch null flush live in the sentinel triggers,
-    # not in how many pieces batch 1 arrives (VERDICT r9 #2).
-    ev.coalesce(1).write.mode("overwrite").parquet(b1)
-    max_us = ev.agg(F.max(F.unix_micros("ts"))).first()[0]
-    for i, gap_h in enumerate((3, 6), start=1):
-        # Build the 2-row sentinel JVM-side (range + literals):
-        # a local-rows createDataFrame plan spins up a Python worker
-        # per write job — ~5 s each, 10 s of pure harness cost at any
-        # SF (measured r10; this was most of the query's 14 s bill).
-        us = max_us + gap_h * 3_600_000_000
-        sent = spark.range(2).select(
-            (F.lit(-2 * i) - F.col("id")).cast("long").alias("event_id"),
-            F.timestamp_micros(F.lit(us)).alias("ts"),
-            F.lit(-1).cast("long").alias("user_id"),
-            F.when(F.col("id") == 0, "click")
-            .otherwise("purchase")
-            .alias("event_type"),
-            F.lit(0.0).alias("value"),
-            F.lit("{}").alias("props"),
+    try:
+        b1 = os.path.join(stage, "batch1")
+        # ONE file → ONE trigger for the whole real-event slice.  With
+        # the default multi-file write, maxFilesPerTrigger=1 turned every
+        # task's output file into its own micro-batch, and each extra
+        # trigger re-paid the full state-store round-trip — 14 s of
+        # harness cost at sf0.1 for evidence that three triggers (events,
+        # sentinel 1, sentinel 2) already carry: the watermark closure
+        # and the cross-batch null flush live in the sentinel triggers,
+        # not in how many pieces batch 1 arrives (VERDICT r9 #2).
+        ev.coalesce(1).write.mode("overwrite").parquet(b1)
+        max_us = ev.agg(F.max(F.unix_micros("ts"))).first()[0]
+        for i, gap_h in enumerate((3, 6), start=1):
+            # Build the 2-row sentinel JVM-side (range + literals):
+            # a local-rows createDataFrame plan spins up a Python worker
+            # per write job — ~5 s each, 10 s of pure harness cost at any
+            # SF (measured r10; this was most of the query's 14 s bill).
+            us = max_us + gap_h * 3_600_000_000
+            sent = spark.range(2).select(
+                (F.lit(-2 * i) - F.col("id")).cast("long").alias("event_id"),
+                F.timestamp_micros(F.lit(us)).alias("ts"),
+                F.lit(-1).cast("long").alias("user_id"),
+                F.when(F.col("id") == 0, "click")
+                .otherwise("purchase")
+                .alias("event_type"),
+                F.lit(0.0).alias("value"),
+                F.lit("{}").alias("props"),
+            )
+            sent.coalesce(1).write.mode("overwrite").parquet(
+                os.path.join(stage, f"sentinel{i}")
+            )
+        schema = spark.read.parquet(b1).schema
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(os.path.join(stage, "*"))
         )
-        sent.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(stage, f"sentinel{i}")
+        clicks = (
+            stream.filter(F.col("event_type") == "click")
+            .select(
+                F.col("event_id").alias("click_id"),
+                F.col("user_id"),
+                F.col("ts").alias("c_ts"),
+            )
+            .withWatermark("c_ts", "1 hour")
         )
-    schema = spark.read.parquet(b1).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(stage, "*"))
-    )
-    clicks = (
-        stream.filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id"),
-            F.col("ts").alias("c_ts"),
+        purchases = (
+            stream.filter(F.col("event_type") == "purchase")
+            .select(
+                F.col("event_id").alias("purchase_id"),
+                F.col("user_id").alias("p_user_id"),
+                F.col("ts").alias("p_ts"),
+            )
+            .withWatermark("p_ts", "1 hour")
         )
-        .withWatermark("c_ts", "1 hour")
-    )
-    purchases = (
-        stream.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("p_ts"),
+        joined = clicks.join(
+            purchases,
+            F.expr(
+                "user_id = p_user_id AND p_ts >= c_ts "
+                "AND p_ts <= c_ts + INTERVAL 30 MINUTES"
+            ),
+            "left_outer",
         )
-        .withWatermark("p_ts", "1 hour")
-    )
-    joined = clicks.join(
-        purchases,
-        F.expr(
-            "user_id = p_user_id AND p_ts >= c_ts "
-            "AND p_ts <= c_ts + INTERVAL 30 MINUTES"
-        ),
-        "left_outer",
-    )
-    out = run_stream_to_memory(joined, mode="append")
+        out = run_stream_to_memory(joined, mode="append")
+    finally:
+        # The memory sink holds the result; the staged files are not
+        # read again once the run has returned.
+        shutil.rmtree(stage, ignore_errors=True)
     return out.filter(F.col("click_id") >= 0).select(
         "click_id",
         "purchase_id",

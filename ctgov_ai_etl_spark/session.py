@@ -10,6 +10,7 @@ to the parallelism at hand rather than the 200 default.
 
 from __future__ import annotations
 
+import atexit
 import os
 import shutil
 import tempfile
@@ -51,12 +52,18 @@ def ship_package(spark: SparkSession) -> None:
     harness's) won't have the repo on PYTHONPATH — shipping a zip via
     ``addPyFile`` is the mechanism that works on any cluster, not
     just local mode.  Idempotent per session.
+
+    The zip's temp directory is removed at interpreter exit, not after
+    ``addPyFile``: Spark serves the file to executors from that path
+    until the context stops.  Workers that import the package install
+    :mod:`ctgov_ai_etl_spark.pyworker`'s lazy zip invalidation.
     """
     key = id(spark)
     if key in _SHIPPED_SESSIONS:
         return
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     tmp = tempfile.mkdtemp(prefix="ctgov_pkg_")
+    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
     zip_base = os.path.join(tmp, "ctgov_ai_etl_spark_pkg")
     root = os.path.dirname(pkg_dir)
     archive = shutil.make_archive(zip_base, "zip", root_dir=root, base_dir="ctgov_ai_etl_spark")

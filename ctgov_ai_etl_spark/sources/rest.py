@@ -236,7 +236,7 @@ def _token_walk(
 
 
 def _page_rows(page: dict[str, Any]) -> Iterator[tuple]:
-    return ((json.dumps(study, sort_keys=True),) for study in page.get("studies", []))
+    return ((json.dumps(study),) for study in page.get("studies", []))
 
 
 @dataclass

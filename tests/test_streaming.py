@@ -270,6 +270,20 @@ def test_stream_semantic_admission_equals_batch_twin(spark):
     assert got == want and len(want) > 0
 
 
+def test_stream_join_outer_removes_its_staged_batches(spark, tmp_path, monkeypatch):
+    """The outer stream-stream join stages its events and sentinels in
+    a scratch directory; the memory-sink result does not read them, so
+    the run removes them and the result still collects."""
+    from ctgov_ai_etl_spark.queries.stream_batch import (
+        stream_run_stream_join_outer,
+    )
+
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path))
+    rows = stream_run_stream_join_outer(spark, SF_SMALL).collect()
+    assert rows and all(r.click_id >= 0 for r in rows)
+    assert not list(tmp_path.glob("ssjo_*"))
+
+
 def test_stream_admission_across_multiple_microbatches(spark, tmp_path):
     """MULTI-batch streaming admission: the incoming corpus is split
     into 3 files consumed one per micro-batch (maxFilesPerTrigger=1),
