@@ -469,66 +469,3 @@ def spread_to_parallelism(df: DataFrame) -> DataFrame:
         return df.repartition(par)
     return df
 
-
-def uniform_hash_rank(
-    df: DataFrame,
-    hash_col: str,
-    tie_cols: Iterable[str],
-) -> tuple[DataFrame, int]:
-    """1-based global rank ``__pos`` under ``(hash_col, *tie_cols)``
-    where ``hash_col`` is a UNIFORM hex hash (md5 and friends) — the
-    cheap sibling of :func:`global_rank_with_count`.
-
-    The general distributed rank must SAMPLE the key distribution to
-    place range boundaries (repartitionByRange: a sampling job, a
-    persist to pin the partitioning, an offsets job).  A uniform hash
-    key needs none of that: its most-significant hex prefix IS a
-    balanced range partitioner whose boundaries are known a priori.
-    Bucket = first two hex chars — the count is FIXED at 256 (the
-    prefix width determines it; a configurable count that didn't also
-    change the prefix would silently drop rows at the offsets join).
-    Rank locally per bucket (one window over the bucket shuffle —
-    prefix order is most-significant, so bucket boundaries align with
-    the global order), shift by the cumulative counts of lower
-    buckets (one 256-row aggregate collected to the driver and
-    broadcast back).  TWO jobs total, no sampling, no
-    skew risk beyond hash uniformity itself.
-
-    The bucketed frame is persisted (memory-and-disk) before the
-    counts collect, mirroring :func:`global_rank_with_count`: the
-    counts job and the ranking window are SEPARATE jobs, and a
-    nondeterministic upstream (sample / limit / first-wins dedup)
-    recomputed between them would make the offsets disagree with the
-    window counts — duplicate or gapped ranks.  The persist pins one
-    row set across both jobs.
-
-    Returns (df + ``__pos``, total row count — free from the offsets
-    collect).  Ranks are exact and deterministic: ties under the full
-    ``(hash, *ties)`` ordering must not exist (pass a unique key)."""
-    from ctgov_ai_etl_spark.operators.cache import track
-
-    n_buckets = 256  # 2 hex chars; see docstring
-    b = F.conv(F.substring(F.col(hash_col), 1, 2), 16, 10).cast("int")
-    # track() registers the pin so long-lived sessions (repeated
-    # catalog sweeps) can drop it at their barrier via release_all()
-    # instead of accumulating MEMORY_AND_DISK blocks (ADVICE r9).
-    bucketed = track(
-        df.withColumn("__b", b).persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    counts = {
-        r["__b"]: r["cnt"]
-        for r in bucketed.groupBy("__b").agg(F.count("*").alias("cnt")).collect()
-    }
-    offsets, acc = [], 0
-    for i in range(n_buckets):
-        offsets.append((i, acc))
-        acc += counts.get(i, 0)
-    off_df = df.sparkSession.createDataFrame(
-        offsets, "__b int, __off long"
-    )
-    w = Window.partitionBy("__b").orderBy(hash_col, *tie_cols)
-    return (
-        bucketed.join(F.broadcast(off_df), "__b")
-        .withColumn("__pos", F.row_number().over(w) + F.col("__off"))
-        .drop("__b", "__off")
-    ), acc

@@ -504,7 +504,7 @@ def ivf_topk_partitioned(
     spark = corpus.sparkSession
     # The isin over the partition column is what prunes: the scan's
     # PartitionFilters lists it and only the probed directories are read
-    # (asserted in PLANS.md for sim_topk_ivf_partitioned).
+    # (asserted by tools/explain_audit.py for sim_topk_ivf_partitioned).
     inverted = spark.read.parquet(path).filter(F.col("cid").isin(probed_cids))
     cands = (
         inverted.join(F.broadcast(probes), "cid")
@@ -565,8 +565,8 @@ def _assign_frame(
     ``dot/(sqrt(fold)·sqrt(fold))``, so rounded sims hash-match the
     SQL replay unchanged.
 
-    r16 (guide §4.2, VERDICT r15 #3): the k raw dot products per row
-    — the dominant interpreted-expression cost of every consumer
+    The k raw dot products per row — the dominant
+    interpreted-expression cost of every consumer
     (k=64 centroids × 64 dims = 4096 interpreted multiply-adds/row;
     measured as ~the whole cost of the semantic dedup family at
     sf0.1) — moved to ONE vectorized numpy batch per Arrow chunk
@@ -677,8 +677,8 @@ def exact_cosine_pairs(
     memory cost along with the n² compute: beyond ~10M vectors the
     broadcast itself fails before the cartesian does.  That trade is
     deliberate — without the pin the planner may stream the
-    single-split side and run the whole pair loop on one core
-    (ADVICE r4); the blocked tier remains the only shape that scales.
+    single-split side and run the whole pair loop on one core; the
+    blocked tier remains the only shape that scales.
     """
     if not allow_quadratic:
         n_rows = df.count()
@@ -704,7 +704,7 @@ def exact_cosine_pairs(
     # Pin ``b`` as the broadcast build side: without the hint the
     # planner may flip the BNLJ and stream the single-split ``b``,
     # re-serializing the n² loop onto one core despite the
-    # repartition on ``a`` (ADVICE r4).
+    # repartition on ``a``.
     return (
         a.join(F.broadcast(b), F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b", sim.alias("cos_sim"))
@@ -837,9 +837,8 @@ def blocked_cosine_pairs(
         F.col(id_col).alias("id_b"), _as_double(F.col(vec_col)).alias("vb")
     ).select("id_b", "vb", norm(F.col("vb")).alias("nb"))
     # The verify dot stays a JVM fold: an Arrow/numpy batch variant
-    # (VERDICT r15 #3) was built and MEASURED in r16 — candidate
-    # volume after blocking is tiny at bench scale (981 pairs at
-    # sf0.1), so the Python stage's fixed boundary cost regressed
+    # was built and MEASURED — candidate volume after blocking is
+    # tiny at bench scale (981 pairs at sf0.1), so the Python stage's fixed boundary cost regressed
     # dedup_semantic_groups 3.7 → 4.7 s and was reverted; the
     # map-side ASSIGNMENT pass was the real cost and is vectorized
     # instead (see _assign_frame / _centroid_dots_udf).

@@ -305,7 +305,7 @@ def ts_clamped_cumsum_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
     return clamped_balance_chunked(ev, _BALANCE_CAP_CENTS)
 
 
-# Bench-slice cap (VERDICT r10 #3): orderkeys are dense 0..N-1, so
+# Bench-slice cap: orderkeys are dense 0..N-1, so
 # sf0.001/sf0.01 edge sets are BIT-IDENTICAL with or without the cap
 # (correctness evidence unchanged); only the sf0.1 bench stops paying
 # 10x the edge volume for the same BFS-layer evidence.
@@ -728,8 +728,7 @@ def sample_systematic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "pipeline_entity_resolution",
-    # Oracle notes (both replace r13's quadratic blow-ups, VERDICT r13
-    # item 4):
+    # Oracle notes (both replace earlier quadratic blow-ups):
     # * pairs: deletion-neighborhood blocking (each name joins on its
     #   distance-1 deletion variants, exact levenshtein re-verifies) —
     #   provably recall-exact for lev<=1 (module proof in
@@ -1654,10 +1653,10 @@ def tpch_q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6 shape (forecasting revenue change): one filtered scan,
     one global sum — the purest predicate-pushdown showcase (date
     range, discount band, quantity cap all reach the parquet reader;
-    PLANS.md asserts it).  Revenue = Σ price·discount computed as
-    exact integer cents × integer discount-percent (the discount
-    lands on a 1% grid — rounding to percent is exact), divided once
-    at the end."""
+    tools/explain_audit.py asserts it).  Revenue = Σ price·discount
+    computed as exact integer cents × integer discount-percent (the
+    discount lands on a 1% grid — rounding to percent is exact),
+    divided once at the end."""
     li = load_table(spark, sf_dir, "lineitem")
     disc_pct = F.round(F.col("l_discount") * 100).cast("long")
     filtered = li.filter(

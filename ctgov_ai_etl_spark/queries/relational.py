@@ -1124,8 +1124,8 @@ def join_interval_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
     join is an EQUI-join on the bin key (shuffle-partitionable,
     AQE-skew-splittable) with the exact lo <= ts < hi re-check as a
     residual filter.  The oracle runs the naive theta join — same
-    pairs, different physical plan.  PLANS.md asserts the equi-join
-    (no BNLJ node) on the Spark side."""
+    pairs, different physical plan.  tools/explain_audit.py asserts the
+    equi-join (no BNLJ node) on the Spark side."""
     from ctgov_ai_etl_spark.operators.intervals import interval_point_join
 
     ev = load_table(spark, sf_dir, "events")

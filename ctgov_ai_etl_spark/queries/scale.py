@@ -2,7 +2,7 @@
 
 The salted operators must be result-identical to their naive forms —
 the oracles run the NAIVE form, so any salting bug is a hash
-mismatch, and the plans (PLANS.md) show the redistributed shuffle.
+mismatch, and tools/explain_audit.py asserts the redistributed shuffle.
 """
 
 from __future__ import annotations
@@ -78,7 +78,8 @@ def skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def partition_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hive-style partitioned layout + partition pruning: write orders
     partitioned by order year, then aggregate one year — the scan
-    reads ONLY that year's directory (PartitionFilters in PLANS.md),
+    reads ONLY that year's directory (PartitionFilters, asserted by
+    tools/explain_audit.py),
     the mechanism that turns a 100 TB table into a 1-partition read."""
     o = load_table(spark, sf_dir, "orders")
     out = os.path.join(tempfile.mkdtemp(prefix="part_"), "orders_by_year")
@@ -183,11 +184,11 @@ def join_bucket_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``bucketBy(8, custkey).sortBy(custkey)`` and read back as bucketed
     tables, so the join AND the downstream per-customer aggregation
     reuse the storage partitioning — the executed plan contains NO
-    shuffle exchange at all (asserted in PLANS.md).  This is the
-    pre-shuffled layout a 100 TB fact⋈dim pipeline uses to pay the
-    exchange once at write time instead of on every query; the oracle
-    replays the plain (layout-free) join, proving bucketing changed
-    the plan, not the answer."""
+    shuffle exchange at all (asserted by tools/explain_audit.py).
+    This is the pre-shuffled layout a 100 TB fact⋈dim pipeline uses to
+    pay the exchange once at write time instead of on every query; the
+    oracle replays the plain (layout-free) join, proving bucketing
+    changed the plan, not the answer."""
     import os
     import tempfile
 
@@ -200,7 +201,7 @@ def join_bucket_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Metastore names are scoped to the temp dir's unique suffix so
     # concurrent sessions sharing a metastore can't race on a fixed
     # name, and each run drops ITS OWN previous table (none) rather
-    # than orphaning another run's bucketed files (ADVICE r4).
+    # than orphaning another run's bucketed files.
     root = tempfile.mkdtemp(prefix="bucketed_")
     run_id = os.path.basename(root).removeprefix("bucketed_").lower()
     tables = {}
@@ -233,9 +234,9 @@ def join_bucket_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bound to the bucketed HadoopFsRelation (bucket spec included) —
     # the catalog entries can drop NOW without breaking the lazy
     # result or its shuffle-free plan, and a shared/persistent
-    # metastore stops accumulating one orphan pair per run (ADVICE
-    # r5).  External tables: DROP leaves the temp-dir files for the
-    # pending scan; the tempdir reaper owns their lifetime.
+    # metastore stops accumulating one orphan pair per run.  External
+    # tables: DROP leaves the temp-dir files for the pending scan; the
+    # tempdir reaper owns their lifetime.
     for name in tables.values():
         spark.sql(f"DROP TABLE IF EXISTS {name}")
     return result

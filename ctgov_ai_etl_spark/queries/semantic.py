@@ -1162,7 +1162,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     passes ``allow_quadratic=True``.  The unbounded default of the
     one-signature operator (``embedding_near_dup``) is the blocked
     tier benchmarked by ``dedup_embedding_blocked``; this slice exists
-    to hash-verify the exact math end to end (VERDICT r3 item 1)."""
+    to hash-verify the exact math end to end."""
     e = load_table(spark, sf_dir, "embeddings")
     return embedding_near_dup(
         e.filter(F.col("vec_id") < 500), threshold=0.4, method="exact"
@@ -1428,7 +1428,7 @@ _IVF_NPROBE = 6
 # Spark plans and the SQL oracles — "train small once, serve big" with
 # the same replayability as the seeded quantizer.  The block count
 # follows the √n rule for the bench corpus (√5000 ≈ 70 → 64): seeded
-# k=8 left ~√(Σ block²) ≈ 300-row blocks at sf0.1 (VERDICT r3 item 2);
+# k=8 left ~√(Σ block²) ≈ 300-row blocks at sf0.1;
 # trained k=64 subdivides the fixture's 10 natural clusters into
 # balanced cells (measured max block 47 vs 293 at sf0.1).
 _QUANT_TRAIN_PARQUET = "/root/testdata/sf0.01/embeddings.parquet"
@@ -1826,7 +1826,7 @@ def sim_topk_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     in tests/test_semantic.py).  Because training happens at
     plan-authoring time the fitted centroids are literals in both the
     Spark plan and this oracle: the trained pipeline hash-checks end
-    to end exactly like the seeded one (VERDICT r3 item 6)."""
+    to end exactly like the seeded one."""
     e = load_table(spark, sf_dir, "embeddings")
     return ivf_topk(
         e,
@@ -3008,21 +3008,19 @@ def sample_negatives_ring(spark: SparkSession, sf_dir: str) -> DataFrame:
     gets exactly k negatives, and stride-j offsets mean negatives are
     shared across anchors only N/4 apart — no hot rows.
 
-    Scale: the ring position comes from uniform_hash_rank — the hash
-    key's hex prefix IS a balanced range partitioner with a-priori
-    boundaries, so the rank is one bucket-window pass + a 256-row
-    offsets collect (TWO jobs; the general global_rank pays sampling
-    + persist + offsets for keys whose distribution it cannot know).
-    Negatives resolve via an equi-join on the ring position (one
-    shuffle, k rows per anchor).  The oracle's row_number window
-    replays the same order on one thread."""
-    from ctgov_ai_etl_spark.operators.limits import uniform_hash_rank
+    Scale: the ring position comes from global_rank_with_count over
+    the unique (hash, doc_id) key — the bounded driver tier below its
+    cap, the range-partitioned distributed rank above it.  Negatives
+    resolve via an equi-join on the ring position (one shuffle, k rows
+    per anchor).  The oracle's row_number window replays the same
+    order on one thread."""
+    from ctgov_ai_etl_spark.operators.limits import global_rank_with_count
 
     d = load_table(spark, sf_dir, "documents")
     keyed = d.select(
         "doc_id", F.md5(F.col("doc_id").cast("string")).alias("__h")
     )
-    ranked, n = uniform_hash_rank(keyed, "__h", ["doc_id"])
+    ranked, n = global_rank_with_count(keyed, ["__h", "doc_id"])
     ranked = ranked.select("doc_id", F.col("__pos").alias("pos"))
     stride = n // 4
     js = F.explode(F.array(F.lit(1), F.lit(2), F.lit(3))).alias("j")

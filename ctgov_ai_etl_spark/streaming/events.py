@@ -12,6 +12,7 @@ batch-equivalence is the correctness story (run both, compare).
 
 from __future__ import annotations
 
+import atexit
 import contextlib
 import os
 import shutil
@@ -356,6 +357,8 @@ def stream_upsert_snapshot(
     read→write pass per batch, no defensive materialization.  Once the
     stream stops, the shards, the checkpoint and every superseded
     version are removed: the returned frame reads only the latest.
+    The work directory holding it is removed at interpreter exit, not
+    on return: the frame reads it lazily.
     """
     from ctgov_ai_etl_spark.operators.merge import merge_upsert_versioned
     from ctgov_ai_etl_spark.tables import load_table
@@ -363,6 +366,7 @@ def stream_upsert_snapshot(
     ensure_session_confs(spark)
     ev = load_table(spark, sf_dir, "events")
     work = scratch_dir("upsert_stream_")
+    atexit.register(shutil.rmtree, work, ignore_errors=True)
     src_dir = os.path.join(work, "shards")
     target_dir = os.path.join(work, "target")
     ev.repartition(n_shards).write.parquet(src_dir)

@@ -407,30 +407,6 @@ class TestIntervalFuzz:
         assert got == TestCappedSessions()._py_sessions(rows, gap_s, cap_s)
 
 
-class TestUniformHashRank:
-    def test_matches_general_global_rank(self, spark):
-        """uniform_hash_rank must produce exactly the ranks the
-        sampling-based global_rank produces for a uniform md5 key —
-        same total order, same 1-based positions, and the count rides
-        along free."""
-        from ctgov_ai_etl_spark.operators.limits import (
-            global_rank_with_count,
-            uniform_hash_rank,
-        )
-
-        df = spark.range(0, 700).select(
-            F.col("id"), F.md5(F.col("id").cast("string")).alias("h")
-        )
-        fast, n_fast = uniform_hash_rank(df, "h", ["id"])
-        slow, n_slow = global_rank_with_count(df, ["h", "id"])
-        assert n_fast == n_slow == 700
-        a = {r["id"]: r["__pos"] for r in fast.collect()}
-        b = {r["id"]: r["__pos"] for r in slow.collect()}
-        assert a == b
-        # positions are a 1..n bijection
-        assert sorted(a.values()) == list(range(1, 701))
-
-
 class TestSketchProperties:
     def test_cms_property_random_corpora(self, spark):
         """Hypothesis: over random corpora and widths, CMS never

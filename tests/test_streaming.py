@@ -909,3 +909,37 @@ def test_upsert_snapshot_keeps_only_latest_version(spark):
     assert os.listdir(work) == ["target"]
     assert os.listdir(target) == [os.path.basename(version)]
     assert snap.count() > 0
+
+
+def test_upsert_snapshot_work_dir_is_removed_at_exit(tmp_path):
+    """The returned frame reads the work directory lazily, so it stays
+    until interpreter exit, and no longer: the result collects, and
+    no ``upsert_stream_*`` directory survives the process."""
+    import os
+    import subprocess
+    import sys
+    import textwrap
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = f"""
+        from ctgov_ai_etl_spark.session import get_spark
+        from ctgov_ai_etl_spark.streaming.events import stream_upsert_snapshot
+
+        spark = get_spark("upsert_exit", cpus="2")
+        print(stream_upsert_snapshot(spark, {SF_SMALL!r}).count())
+        """
+    proc = subprocess.run(
+        [sys.executable, "-c", textwrap.dedent(code)],
+        env={
+            **os.environ,
+            "PYTHONPATH": repo,
+            "SPARK_GRAFT_SCRATCH": str(tmp_path),
+            "SPARK_GRAFT_DRIVER_MEM": "1g",
+        },
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert int(proc.stdout.split()[-1]) > 0
+    assert not [p for p in os.listdir(tmp_path) if p.startswith("upsert_stream_")]

@@ -40,13 +40,13 @@ _TYPE_FAMILY = {
 }
 
 
-# Oracle-portability guard (VERDICT r8 item 2): the only DuckDB result
-# types allowed in an oracle contract.  Anything outside this set (most
-# notably HUGEINT, which `sum(BIGINT)` and `BIGINT // HUGEINT` produce)
-# is evaluated/canonicalized differently across DuckDB versions and MUST
-# be CAST away in the oracle SQL — leaving it in turns "passes my DuckDB"
-# into "fails the driver's DuckDB" (exactly the r8 seq_transition_matrix /
-# dq_benford incident).
+# Oracle-portability guard: the only DuckDB result types allowed in an
+# oracle contract.  Anything outside this set (most notably HUGEINT,
+# which `sum(BIGINT)` and `BIGINT // HUGEINT` produce) is
+# evaluated/canonicalized differently across DuckDB versions and MUST
+# be CAST away in the oracle SQL — leaving it in turns "passes my
+# DuckDB" into "fails another DuckDB" (as seq_transition_matrix and
+# dq_benford once did).
 _PORTABLE_DUCK_TYPES = {
     "tinyint", "smallint", "integer", "bigint",
     "float", "double", "varchar", "boolean", "date",
@@ -179,45 +179,13 @@ def main() -> int:
     ap.add_argument(
         "--json",
         metavar="PATH",
-        help="also write the per-query results as a JSON object "
-        "(driver-CORRECTNESS-shaped: name -> {status, rows, ...}) — "
-        "the artifact the round checklist commits as "
-        "CORRECTNESS_FULL_local_r{N}.json",
-    )
-    ap.add_argument(
-        "--stalest",
-        type=int,
-        metavar="N",
-        help="instead of explicit names, re-verify the N queries whose "
-        "latest DRIVER evidence (CORRECTNESS_r0*.json) is oldest — the "
-        "age-based re-verification pass each round runs so nothing "
-        "drifts silently while the driver samples only new work "
-        "(VERDICT r8 item 8)",
+        help="also write the per-query results and the pass/fail "
+        "counts to PATH as one JSON object (name -> {status, rows, ...})",
     )
     args = ap.parse_args()
 
     registry = load_all()
-    if args.stalest:
-        import glob as _glob
-        import json as _json
-        import re as _re
-
-        last_seen: dict[str, int] = {}
-        # r01-r09 are zero-padded, r10+ are not — match both (the
-        # r0*-only glob silently ignored r10+ evidence and mis-ranked
-        # anything re-sampled since r9 as stale; found in r14).
-        for f in sorted(_glob.glob("CORRECTNESS_r[0-9]*.json")):
-            rnd = int(_re.search(r"_r0?(\d+)\.json$", f).group(1))
-            for n in _json.load(open(f)):
-                if n in registry:
-                    last_seen[n] = max(last_seen.get(n, 0), rnd)
-        ordered = sorted(last_seen.items(), key=lambda kv: (kv[1], kv[0]))
-        names = [n for n, _ in ordered[: args.stalest]]
-        print(f"stalest {len(names)} (driver evidence round shown):")
-        for n, r in ordered[: args.stalest]:
-            print(f"  r{r} {n}")
-    else:
-        names = args.names or list(registry)
+    names = args.names or list(registry)
     spark = get_spark("check_oracle")
     con = duckdb.connect()
     for t in TABLE_NAMES:

@@ -19,12 +19,11 @@ from ctgov_ai_etl_spark.session import get_spark  # noqa: E402
 
 SF = "/root/testdata/sf0.01"
 
-# Plan-size budget (VERDICT r12 item 2): a formatted physical plan
-# larger than this is treated as a lineage-control bug even when the
-# answers are correct — the two real offenders caught at r12 were
-# graph_hits (47,476 lines: un-truncated iterative loop) and
-# sample_kcenter_coreset (801,551 lines: persist-not-checkpoint in a
-# k-round traversal).  Every audited query is checked; `--sizes-all`
+# Plan-size budget: a formatted physical plan larger than this is
+# treated as a lineage-control bug even when the answers are correct —
+# the two real offenders it caught were graph_hits (47,476 lines:
+# un-truncated iterative loop) and sample_kcenter_coreset (801,551
+# lines: persist-not-checkpoint in a k-round traversal).  Every audited query is checked; `--sizes-all`
 # walks the ENTIRE registry (construction + formatted explain, no
 # execution) so new iterative operators can't regress silently.
 PLAN_LINE_BUDGET = 5_000
@@ -258,9 +257,9 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
     "dedup_semantic_prune": [
         ("pair/prune joins keyed (no cartesian)", r"\A(?!.*CartesianProduct)"),
         ("dominated-id anti-join", r"LeftAnti"),
-        # r16 (VERDICT r15 #3): the centroid-dot pass is DELIBERATELY a
-        # vectorized Arrow batch now (_centroid_dots_udf) — assert it
-        # IS there and that no row-at-a-time Python sneaks in.
+        # The centroid-dot pass is DELIBERATELY a vectorized Arrow
+        # batch (_centroid_dots_udf) — assert it IS there and that no
+        # row-at-a-time Python sneaks in.
         ("assignment dots vectorized (ArrowEvalPython)", r"ArrowEvalPython"),
         ("no row-at-a-time Python", r"\A(?!.*BatchEvalPython)"),
     ],
@@ -883,10 +882,8 @@ def sizes_all() -> int:
     """Walk the FULL registry; fail any query whose formatted plan
     exceeds PLAN_LINE_BUDGET lines, whose final schema carries a
     non-scalar (array/map/struct) column, or that fails to construct.
-    Writes PLANSIZE.json with the three failure modes kept separate
-    (errors vs over_budget vs nonportable)."""
-    import json
-
+    Prints the three failure modes separately (errors vs over_budget
+    vs nonportable)."""
     registry = load_all()
     spark = get_spark("explain_audit_sizes")
     sizes: dict[str, int] = {}
@@ -909,24 +906,10 @@ def sizes_all() -> int:
         if bad:
             nonportable[name] = bad
             print(f"NONPORTABLE  {name}: array/map/struct columns {bad}")
-    top = sorted(sizes.items(), key=lambda kv: -kv[1])[:10]
-    with open("PLANSIZE.json", "w") as fh:
-        json.dump(
-            {
-                "budget_lines": PLAN_LINE_BUDGET,
-                "queries": len(sizes),
-                "over_budget": over,
-                "errors": errors,
-                "nonportable": nonportable,
-                "top10": top,
-            },
-            fh,
-            indent=1,
-        )
+    largest = max(sizes.items(), key=lambda kv: kv[1], default=None)
     print(f"\n{len(sizes)} plans sized; {len(over)} over budget; "
           f"{len(errors)} construction errors; {len(nonportable)} "
-          f"non-portable schemas; largest: {top[0] if top else None}; "
-          f"PLANSIZE.json written")
+          f"non-portable schemas; largest: {largest}")
     return 1 if (over or errors or nonportable) else 0
 
 
@@ -1905,8 +1888,8 @@ CHECKS["pipeline_crawl_ingest"] = [
 ]
 
 
-# Top-50-by-cost coverage (VERDICT r14 #5): batch queries that were in
-# the r14 cost top-50 without per-plan assertions.
+# Top-50-by-cost coverage: batch queries among the 50 costliest of the
+# catalog sweep that had no per-plan assertions.
 CHECKS["dedup_components"] = [
     # r15: below the driver union-find cap the component map arrives
     # as one small local relation (the bounded-probe tier); past the
@@ -1951,7 +1934,7 @@ CHECKS["dedup_simhash"] = [
 
 
 # ---------------------------------------------------------------------------
-# Streaming executed-plan audit (VERDICT r14 #5): the stream_run_*
+# Streaming executed-plan audit: the stream_run_*
 # family is the most expensive, most host-sensitive tier of the
 # catalog, and the batch frame each query returns is just a
 # memory-sink scan — none of its streaming physical properties are

@@ -1,26 +1,22 @@
-"""One-command hygiene gate (VERDICT r12 item 8): every mechanical
-check that previously lived as COVERAGE prose, runnable before
-committing round artifacts.
+"""One-command hygiene gate: every mechanical check, runnable before
+committing.
 
-    python tools/preflight.py            # fast gates (~1 min)
+    python tools/preflight.py            # fast gates (seconds)
     python tools/preflight.py --full     # + full-registry plan sizes
-                                         #   and the stalest-N oracle
-                                         #   re-verification (~10 min)
+                                         #   and the full oracle sweep
 
 Gates:
 1. README/COVERAGE counts in sync with the registry
    (``tools/sync_counts.py --check``).
 2. Registry integrity: every query has an oracle (no rows-only
    entries), entry() importable.
-3. Plan-size + portable-output budget: ``--full`` sweeps the whole
+3. ``--full``: plan-size + portable-output budget over the whole
    registry via ``tools/explain_audit.py --sizes-all`` (5k-line plan
    budget; final schemas must be scalar-only — any array/map/struct
-   output column fails, since the driver harness cannot sort/hash
-   list cells: the fn_regex_family r13 incident); the fast path
-   re-checks the committed PLANSIZE.json for over-budget entries,
-   construction errors, and non-portable schemas.
-4. ``--full`` also re-verifies the 90 stalest-evidence queries
-   against the DuckDB oracle (``tools/check_oracle.py --stalest 90``).
+   output column fails, since a generic result harness cannot
+   sort/hash list cells, as fn_regex_family once showed).
+4. ``--full`` also re-verifies every registered query against its
+   DuckDB oracle at sf0.01 (``tools/check_oracle.py``).
 
 Exit code 0 = all gates green.  Each gate prints PASS/FAIL with the
 underlying tool's output on failure.
@@ -28,7 +24,6 @@ underlying tool's output on failure.
 
 from __future__ import annotations
 
-import json
 import os
 import subprocess
 import sys
@@ -65,31 +60,6 @@ def _gate_registry() -> bool:
     return ok
 
 
-def _gate_plansize_cached() -> bool:
-    path = os.path.join(HERE, "PLANSIZE.json")
-    if not os.path.exists(path):
-        print("FAIL  PLANSIZE.json missing — run "
-              "`python tools/explain_audit.py --sizes-all`")
-        return False
-    with open(path) as fh:
-        d = json.load(fh)
-    over = d.get("over_budget", [])
-    errors = d.get("errors", {})
-    nonportable = d.get("nonportable", {})
-    ok = not (over or errors or nonportable)
-    print(f"{'PASS' if ok else 'FAIL'}  plan sizes (cached): "
-          f"{d.get('queries')} plans, {len(over)} over "
-          f"{d.get('budget_lines')}-line budget, {len(errors)} errors, "
-          f"{len(nonportable)} non-portable schemas")
-    if over:
-        print(f"  over budget: {over}")
-    if errors:
-        print(f"  construction errors: {sorted(errors)}")
-    if nonportable:
-        print(f"  non-portable (array/map/struct) outputs: {nonportable}")
-    return ok
-
-
 def main() -> int:
     full = "--full" in sys.argv
     ok = True
@@ -99,11 +69,8 @@ def main() -> int:
     if full:
         ok &= _run("plan sizes (full registry sweep)",
                    [sys.executable, "tools/explain_audit.py", "--sizes-all"])
-        ok &= _run("oracle re-verification (stalest 90)",
-                   [sys.executable, "tools/check_oracle.py",
-                    "--stalest", "90"])
-    else:
-        ok &= _gate_plansize_cached()
+        ok &= _run("oracle sweep (full registry, sf0.01)",
+                   [sys.executable, "tools/check_oracle.py"])
     print(f"\npreflight: {'ALL GREEN' if ok else 'FAILURES ABOVE'}")
     return 0 if ok else 1
 

@@ -1,4 +1,4 @@
-"""sf1 scale rehearsal (VERDICT r10 #8): measured 10x evidence.
+"""sf1 scale rehearsal: measured 10x evidence.
 
 Generates a deterministic ~sf1 derivative of the test tables into
 ``spark-warehouse/sf1/`` (builder-owned — /root/testdata stays
@@ -55,9 +55,9 @@ _OFFSETS = {
     "part": {},
 }
 
-# Top-cost catalog queries (VERDICT r11 #4): the expensive dedup/
-# graph/streaming families are exactly where 100x-scale claims are
-# least tested by measurement — rehearse them at sf1 too.
+# Top-cost catalog queries: the expensive dedup/graph/streaming
+# families are exactly where 100x-scale claims are least tested by
+# measurement — rehearse them at sf1 too.
 EXPENSIVE = [
     "dedup_components",
     "dedup_semantic_groups",
@@ -78,9 +78,8 @@ NEW_WAVE = [
     "graph_personalized_pagerank",
 ]
 
-# Round-13 (VERDICT r12 item 6): the lineage-fixed iterative graph
-# family — rehearse post-fix so the checkpoint-truncated plans carry
-# measured 10x evidence too.
+# The lineage-fixed iterative graph family — rehearse it so the
+# checkpoint-truncated plans carry measured 10x evidence too.
 GRAPH_FIXED = [
     "graph_hits",
     "graph_triangle_count",
@@ -165,9 +164,9 @@ def run(spark, registry, sf_dir: str, names) -> tuple[dict, dict]:
     return times, spines
 
 
-# Pair-count observability (VERDICT r13 item 6): the super-linear
-# dedup entries (dedup_minhash_lsh 5.19x, dedup_semantic_groups 3.14x
-# at 10x data in r13) are CLAIMED duplicate-driven — the 10x-verbatim
+# Pair-count observability: the super-linear dedup entries
+# (dedup_minhash_lsh 5.19x, dedup_semantic_groups 3.14x at 10x data
+# when first rehearsed) are CLAIMED duplicate-driven — the 10x-verbatim
 # corpus has ~quadratically more real duplicate pairs, so more output
 # is more work with the same plan.  Measure it: per SF, count
 # (a) verbatim-duplicate pairs (Σ C(g,2) over identical-payload
@@ -263,8 +262,6 @@ def main() -> int:
         },
     }
     print(json.dumps(out))
-    with open("SCALE_REHEARSAL_r14.json", "w") as fh:
-        json.dump(out, fh, indent=1)
     return 0
 
 
