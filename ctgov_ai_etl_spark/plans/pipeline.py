@@ -4,7 +4,7 @@ The reference runs EXTRACT → TRANSFORM → AI → LOAD as four eager,
 fully-materialized driver stages.  Here the whole thing is ONE lazy
 Spark plan built from the same config shape
 (/root/reference/config.example.yaml): the REST source scans pages
-(filters pushed as Essie), ``from_json`` applies the nested schema,
+(filters pushed as Essie) straight into typed nested ``study`` rows,
 the flatten select and the llm_classify stage compose, and the action
 happens at the sink.  Stage boundaries become shuffle/UDF boundaries
 chosen by Catalyst, not ``list`` materializations.
@@ -16,18 +16,17 @@ from functools import partial
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ctgov_ai_etl_spark.config import conjuncts_from_config, resolve_factory
 from ctgov_ai_etl_spark.operators.flatten import flatten_studies
 from ctgov_ai_etl_spark.operators.llm import llm_classify
-from ctgov_ai_etl_spark.schemas import RAW_STUDY
 from ctgov_ai_etl_spark.sources import rest
 from ctgov_ai_etl_spark.sources.csv_sink import write_reference_csv
 
 
 def read_studies(spark: SparkSession, cfg: dict[str, Any]) -> DataFrame:
-    """EXTRACT: paginated REST scan → typed nested struct."""
+    """EXTRACT: paginated REST scan → one typed ``study`` column
+    (``schemas.RAW_STUDY``), built by the source page by page."""
     rest.register(spark)
     ctgov = cfg.get("ctgov", {})
     reader = (
@@ -42,8 +41,7 @@ def read_studies(spark: SparkSession, cfg: dict[str, Any]) -> DataFrame:
     for opt in ("transport_factory", "transport_args", "paging", "max_pages"):
         if opt in ctgov:
             reader = reader.option(opt, str(ctgov[opt]))
-    raw = reader.load()
-    return raw.select(F.from_json("raw_json", RAW_STUDY).alias("study"))
+    return reader.load()
 
 
 def run_pipeline(

@@ -172,7 +172,7 @@ def _e2e_oracle_sql() -> str:
 @query("ctgov_pipeline_e2e", oracle=_e2e_oracle_sql())
 def ctgov_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whole reference pipeline (R19): mock-paginated REST source →
-    from_json → flatten → pregnancy-rule llm_classify → final frame,
+    typed ``study`` rows → flatten → pregnancy-rule llm_classify → final frame,
     hash-checked end to end against a pure-SQL replay of the fixture
     corpus (the REST scan itself is exercised by the Spark side; the
     oracle inlines the same 57 studies as VALUES)."""
@@ -214,7 +214,7 @@ def stream_run_rest_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sources/rest.py RestStudiesStreamReader): the reference's
     token-pagination walk incrementalized to micro-batches (2 pages
     per trigger over the 57-study / 6-page fixture transport → 3
-    batches), each batch from_json-parsed and projected, driven to
+    batches of typed ``study`` rows), each batch projected, driven to
     completion with availableNow.  Offsets = the page cursor, persisted
     in the checkpoint — resumable ingestion the reference's one-shot
     loop cannot do.  Hash-checked against the inline-VALUES JSON replay
@@ -233,8 +233,7 @@ def stream_run_rest_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("pages_per_batch", 2)
         .load()
     )
-    study = F.from_json("raw_json", RAW_STUDY).alias("study")
-    flat = raw.select(study).select(
+    flat = raw.select(
         F.coalesce(
             F.col("study.protocolSection.identificationModule.nctId"), F.lit("N/A")
         ).alias("nct_id"),

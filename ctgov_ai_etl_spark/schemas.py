@@ -4,10 +4,10 @@ Testdata schemas mirror the parquet footers at /root/testdata (see
 FIXTURES.md §A).  The raw-study schema is the consumed subset of the
 ClinicalTrials.gov API v2 record that the reference navigates with
 defaulting ``.get()`` chains (/root/reference/etl.py:188-215); here it
-is an explicit nested StructType so Catalyst can prune columns and
-``from_json`` can parse permissively (missing fields become real
-NULLs, re-sentineled to 'N/A' only at the flatten operator —
-SURVEY.md §1.2).
+is an explicit nested StructType so Catalyst can prune columns, the
+REST source can build each page as typed Arrow and ``from_json`` can
+parse JSON text permissively (missing fields become real NULLs,
+re-sentineled to 'N/A' only at the flatten operator — SURVEY.md §1.2).
 """
 
 from __future__ import annotations

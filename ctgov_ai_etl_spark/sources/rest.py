@@ -30,9 +30,16 @@ is a ``DataSource`` so it participates in a Spark plan:
   aborts the whole extract on any non-200, etl.py:124-127,163-171);
   timeout/page-cap are options with the reference's defaults.
 
-Rows come back as JSON strings (one per study) so the downstream plan
-is ``from_json(RAW_STUDY) → flatten_studies`` — schema application is
-Spark's, not the transport's.
+- **typed pages.**  The source has one column, ``study``, of type
+  ``schemas.RAW_STUDY``, and each fetched page becomes one Arrow
+  record batch built straight from the page's study dicts, which
+  Spark takes as it is: no study is serialized back to JSON text,
+  converted row by row or re-parsed in the JVM.  Keys outside
+  ``RAW_STUDY`` are dropped and absent ones are NULL, the reference's
+  defaulting ``.get()`` chains (etl.py:188-215); a value whose JSON
+  type does not fit its leaf (say a number where a string is due)
+  aborts the read with an error naming the page, like any other page
+  error.
 
 Transports are pluggable via a ``transport_factory`` option holding a
 ``module:function`` path (importable in the Python workers); tests use
@@ -47,6 +54,7 @@ from collections.abc import Callable, Iterator
 from dataclasses import dataclass
 from typing import Any
 
+import pyarrow as pa
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -60,9 +68,11 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
     StringContains,
 )
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import StructField, StructType
 
 from ctgov_ai_etl_spark.config import resolve_factory
+from ctgov_ai_etl_spark.schemas import RAW_STUDY
 
 DEFAULT_PAGE_SIZE = 1000  # reference default, etl.py:103
 DEFAULT_MAX_PAGES = 100  # reference hard cap, etl.py:156-157
@@ -71,6 +81,10 @@ DEFAULT_TIMEOUT_S = 60.0  # reference timeout, etl.py:121
 # bigger set would expand into a query-string URL past typical server
 # request-line limits (~8 KB), so it stays a client-side residual.
 MAX_IN_PUSHDOWN = 50
+
+SCHEMA = StructType([StructField("study", RAW_STUDY)])
+ARROW_STUDY = to_arrow_type(RAW_STUDY)
+_ARROW_SCHEMA = pa.schema([pa.field("study", ARROW_STUDY)])
 
 # A transport takes (params, page_index_or_token) and returns the page
 # dict {"studies": [...], "nextPageToken": str|None}.
@@ -196,7 +210,7 @@ def _page_reader(options: dict[str, str]) -> tuple[Transport, dict[str, Any], in
     (etl.py:100).  ``fields`` is projection pushdown (SURVEY.md §4):
     the CTGov v2 API returns only the requested dotted study paths —
     the server-side analogue of parquet column pruning.  Catalyst can't
-    derive it (the source's schema is one RAW_STUDY json column), so
+    derive it (the source's schema is one opaque RAW_STUDY column), so
     it's an explicit option; operators/flatten.py:flatten_fields()
     yields the ~10 leaves the reference pipeline needs instead of the
     full study document (the reference always fetches whole studies,
@@ -235,8 +249,22 @@ def _token_walk(
             return
 
 
-def _page_rows(page: dict[str, Any]) -> Iterator[tuple]:
-    return ((json.dumps(study),) for study in page.get("studies", []))
+def _page_batch(page: dict[str, Any], where: str) -> Iterator[pa.RecordBatch]:
+    """The page's studies as one ``study`` record batch (none for an
+    empty page); ``where`` names the page in the error a study that
+    does not fit ``RAW_STUDY`` raises."""
+    studies = page.get("studies", [])
+    if not studies:
+        return
+    try:
+        column = pa.array(studies, type=ARROW_STUDY)
+    except (pa.ArrowInvalid, pa.ArrowTypeError) as exc:
+        raise ValueError(f"ctgov_rest {where}: a study does not fit RAW_STUDY: {exc}") from exc
+    yield pa.RecordBatch.from_arrays([column], schema=_ARROW_SCHEMA)
+
+
+def _token_page(n: int, token: Any) -> str:
+    return f"page {n} (token {token!r})"
 
 
 @dataclass
@@ -285,14 +313,16 @@ class RestStudiesReader(DataSourceReader):
             return page_ranges(self.max_pages, self.parallelism)
         return [PageRange(0, self.max_pages)]  # opaque-token mode: sequential walk
 
-    def read(self, partition: PageRange) -> Iterator[tuple]:
+    def read(self, partition: PageRange) -> Iterator[pa.RecordBatch]:
         params = self._params()
         if self.indexed:
-            for page in range(partition.start, partition.stop):
-                yield from _page_rows(self.transport(params, page))
+            for n in range(partition.start, partition.stop):
+                yield from _page_batch(self.transport(params, n), f"page {n}")
             return
-        for page, _ in _token_walk(self.transport, params, None, self.max_pages):
-            yield from _page_rows(page)
+        token = None
+        for n, (page, nxt) in enumerate(_token_walk(self.transport, params, None, self.max_pages)):
+            yield from _page_batch(page, _token_page(n, token))
+            token = nxt
 
 
 class RestStudiesStreamReader(SimpleDataSourceStreamReader):
@@ -321,26 +351,25 @@ class RestStudiesStreamReader(SimpleDataSourceStreamReader):
     def initialOffset(self) -> dict:
         return {"token": None, "page": 0, "done": False}
 
-    def _walk(self, start: dict, n_pages: int) -> tuple[list[tuple], dict]:
-        rows: list[tuple] = []
+    def _walk(self, start: dict, n_pages: int) -> tuple[list[pa.RecordBatch], dict]:
+        batches: list[pa.RecordBatch] = []
         token, page, done = start.get("token"), start["page"], start.get("done", False)
         if not done:
             # pages left under the cap; asking past it marks the walk done
             budget = max(min(n_pages, self.max_pages - page), 0)
-            for pg, token in _token_walk(self.transport, self.params, token, budget):
-                rows.extend(_page_rows(pg))
-                page += 1
-                done = not token
+            for pg, nxt in _token_walk(self.transport, self.params, token, budget):
+                batches.extend(_page_batch(pg, _token_page(page, token)))
+                token, page, done = nxt, page + 1, not nxt
             done = done or n_pages > budget
-        return rows, {"token": token, "page": page, "done": done}
+        return batches, {"token": token, "page": page, "done": done}
 
-    def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
-        rows, end = self._walk(start, self.pages_per_batch)
-        return iter(rows), end
+    def read(self, start: dict) -> tuple[Iterator[pa.RecordBatch], dict]:
+        batches, end = self._walk(start, self.pages_per_batch)
+        return iter(batches), end
 
-    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
-        rows, _ = self._walk(start, max(end["page"] - start["page"], 0))
-        return iter(rows)
+    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[pa.RecordBatch]:
+        batches, _ = self._walk(start, max(end["page"] - start["page"], 0))
+        return iter(batches)
 
 
 class RestStudiesDataSource(DataSource):
@@ -353,7 +382,7 @@ class RestStudiesDataSource(DataSource):
         return "ctgov_rest"
 
     def schema(self) -> StructType:
-        return StructType([StructField("raw_json", StringType())])
+        return SCHEMA
 
     def reader(self, schema: StructType) -> DataSourceReader:
         return RestStudiesReader(self.options)
@@ -362,10 +391,18 @@ class RestStudiesDataSource(DataSource):
         return RestStudiesStreamReader(self.options)
 
 
+_REGISTERED_SESSIONS: set[int] = set()
+
+
 def register(spark) -> None:
+    """Make ``ctgov_rest`` readable in ``spark``; idempotent per session
+    (re-registering replaces the source and logs a warning each time)."""
     from ctgov_ai_etl_spark.session import ship_package
     from ctgov_ai_etl_spark.tables import ensure_session_confs
 
     ensure_session_confs(spark)  # enables Python-source filter pushdown
     ship_package(spark)
-    spark.dataSource.register(RestStudiesDataSource)
+    key = id(spark)
+    if key not in _REGISTERED_SESSIONS:
+        spark.dataSource.register(RestStudiesDataSource)
+        _REGISTERED_SESSIONS.add(key)

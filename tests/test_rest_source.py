@@ -1,10 +1,13 @@
 """REST data source: pagination protocol, Essie filter pushdown
-translation, page cap (reference R2/R3/R4 semantics)."""
+translation, page cap (reference R2/R3/R4 semantics), typed ``study``
+pages."""
 
 from __future__ import annotations
 
 import json
+import re
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.datasource import (
@@ -15,7 +18,8 @@ from pyspark.sql.datasource import (
     StringContains,
 )
 
-from ctgov_ai_etl_spark.fixtures import make_raw_study
+from ctgov_ai_etl_spark.fixtures import make_raw_study, mock_ctgov_transport
+from ctgov_ai_etl_spark.schemas import RAW_STUDY
 from ctgov_ai_etl_spark.sources import rest
 
 
@@ -27,10 +31,22 @@ def _read(spark, **opts):
     return reader.load()
 
 
-def _canonical(raw_json_rows):
-    """Each row's study JSON with sorted keys: the source's key order
-    is not part of its contract, the study content and row order are."""
-    return [json.dumps(json.loads(r), sort_keys=True) for r in raw_json_rows]
+def _json_parsed(spark, studies):
+    """``from_json(json.dumps(s), RAW_STUDY)`` of each study dict, in
+    order: the rows the source produced when it served JSON text."""
+    raw = spark.createDataFrame([(json.dumps(s),) for s in studies], "raw_json string")
+    return raw.select(F.from_json("raw_json", RAW_STUDY).alias("study")).collect()
+
+
+def _served_studies(n_studies=57, page_size=10):
+    """Every study the fixture transport serves, in page order."""
+    transport, token, studies = mock_ctgov_transport(n_studies, page_size), None, []
+    while True:
+        page = transport({"pageSize": page_size}, token)
+        studies.extend(page["studies"])
+        token = page.get("nextPageToken")
+        if not token:
+            return studies
 
 
 FIXTURE_OPTS = dict(
@@ -46,10 +62,13 @@ def test_token_pagination_reads_all_pages(spark):
 
 
 def test_rows_are_parseable_study_json(spark):
+    """The first row is study 0, typed: exactly what parsing its JSON
+    document with RAW_STUDY gives."""
     df = _read(spark, **FIXTURE_OPTS)
-    first = json.loads(df.limit(1).collect()[0].raw_json)
-    assert "protocolSection" in first
-    assert first == make_raw_study(0)
+    assert df.columns == ["study"]
+    first = df.limit(1).collect()[0]
+    assert first.study.protocolSection.identificationModule.nctId == "NCT00000000"
+    assert first == _json_parsed(spark, [make_raw_study(0)])[0]
 
 
 def test_page_cap_limits_pages(spark):
@@ -97,13 +116,11 @@ def test_indexed_paging_page_ranges(spark, tmp_path, parallelism, parts):
     """With ``parallelism`` the six pages are read as min(6, parallelism)
     page ranges: each page is served once, and rows arrive in page
     order."""
-    from ctgov_ai_etl_spark.fixtures import make_raw_studies_json
-
     log = str(tmp_path / "pages.log")
     opts = dict(FIXTURE_OPTS, transport_args=json.dumps([57, 10, True, log]))
     df = _read(spark, **opts, paging="indexed", max_pages="6", parallelism=str(parallelism))
     assert df.rdd.getNumPartitions() == parts
-    assert _canonical(r[0] for r in df.collect()) == make_raw_studies_json(57)
+    assert df.collect() == _json_parsed(spark, _served_studies())
     with open(log) as fh:
         assert sorted(map(int, fh.read().split())) == [7] + [10] * 5
 
@@ -117,16 +134,20 @@ def test_config_conjuncts_reach_params(spark):
         transport_args="[]",
         filter_advanced="AREA[StudyType]INTERVENTIONAL AND SEARCH[Study]pregnant",
     )
-    row = json.loads(df.collect()[0].raw_json)
+    echo = df.collect()[0].study.protocolSection.descriptionModule.briefSummary
     assert (
-        row["echo"]["filter.advanced"]
+        json.loads(echo)["filter.advanced"]
         == "AREA[StudyType]INTERVENTIONAL AND SEARCH[Study]pregnant"
     )
 
 
 def echo_params_transport():
+    """Serves one study whose brief summary is the request's params as
+    JSON."""
+
     def transport(params, token):
-        return {"studies": [{"echo": params}]}
+        summary = {"descriptionModule": {"briefSummary": json.dumps(params)}}
+        return {"studies": [{"protocolSection": summary}]}
 
     return transport
 
@@ -215,7 +236,7 @@ def test_in_filter_pushdown_shrinks_served_rows():
         "page_size": "10",
     }
     full = rest.RestStudiesReader(dict(opts))
-    n_full = sum(1 for p in full.partitions() for _ in full.read(p))
+    n_full = sum(b.num_rows for p in full.partitions() for b in full.read(p))
 
     narrowed = rest.RestStudiesReader(dict(opts))
     leftover = list(
@@ -226,19 +247,20 @@ def test_in_filter_pushdown_shrinks_served_rows():
         narrowed._params()["filter.advanced"]
         == "(AREA[OverallStatus]RECRUITING OR AREA[OverallStatus]COMPLETED)"
     )
-    n_narrow = sum(1 for p in narrowed.partitions() for _ in narrowed.read(p))
+    n_narrow = sum(b.num_rows for p in narrowed.partitions() for b in narrowed.read(p))
     assert 0 < n_narrow < n_full
     # the fixture assigns RECRUITING/COMPLETED to 2 of every 4 studies
     # that carry a statusModule at all
     rows = [
-        json.loads(r[0])
+        r["study"]
         for p in rest.RestStudiesReader(dict(opts)).partitions()
-        for r in rest.RestStudiesReader(dict(opts)).read(p)
+        for b in rest.RestStudiesReader(dict(opts)).read(p)
+        for r in b.to_pylist()
     ]
     expected = sum(
         1
         for s in rows
-        if s.get("protocolSection", {}).get("statusModule", {}).get("overallStatus")
+        if ((s["protocolSection"] or {}).get("statusModule") or {}).get("overallStatus")
         in ("RECRUITING", "COMPLETED")
     )
     assert n_narrow == expected
@@ -383,34 +405,37 @@ def test_fields_projection_prunes_served_payload(spark):
         **FIXTURE_OPTS,
         fields="protocolSection.identificationModule.nctId",
     )
-    rows = [json.loads(r[0]) for r in df.collect()]
+    rows = df.collect()
     assert len(rows) == 57
-    for s in rows:
-        assert set(s) <= {"protocolSection"}
-        proto = s.get("protocolSection", {})
-        assert set(proto) <= {"identificationModule"}
-        assert set(proto.get("identificationModule", {})) <= {"nctId"}
+    for r in rows:
+        assert set(_leaves(r.study.asDict(recursive=True))) <= {
+            "protocolSection.identificationModule.nctId"
+        }
     # full fetch carries the other modules; pruned payload is smaller
     full = _read(spark, **FIXTURE_OPTS)
-    assert sum(len(r[0]) for r in df.collect()) < sum(
-        len(r[0]) for r in full.collect()
+    assert sum(len(_leaves(r.study.asDict(recursive=True))) for r in rows) < sum(
+        len(_leaves(r.study.asDict(recursive=True))) for r in full.collect()
     )
+
+
+def _leaves(value, path=""):
+    """Dotted paths of the non-null leaves of a study dict (list
+    elements share their list's path)."""
+    if isinstance(value, dict):
+        return [p for k, v in value.items() for p in _leaves(v, f"{path}.{k}" if path else k)]
+    if isinstance(value, list):
+        return [p for v in value for p in _leaves(v, path)]
+    return [] if value is None else [path]
 
 
 def test_fields_projection_preserves_flatten_parity(spark):
     """Fetching only flatten_fields() must leave the flattened frame
     byte-identical to flattening full documents — the projection is
     lossless for the pipeline that requests it."""
-    from pyspark.sql import functions as F2
-
     from ctgov_ai_etl_spark.operators.flatten import flatten_fields, flatten_studies
-    from ctgov_ai_etl_spark.schemas import RAW_STUDY
 
     def flat(df):
-        parsed = df.select(F2.from_json("raw_json", RAW_STUDY).alias("study"))
-        return sorted(
-            map(tuple, flatten_studies(parsed, extended=True).collect())
-        )
+        return sorted(map(tuple, flatten_studies(df, extended=True).collect()))
 
     full = _read(spark, **FIXTURE_OPTS)
     pruned = _read(spark, **FIXTURE_OPTS, fields=flatten_fields(extended=True))
@@ -423,10 +448,10 @@ def _stream_rows(spark, opts, ckpt):
     reader = spark.readStream.format("ctgov_rest")
     for k, v in opts.items():
         reader = reader.option(k, v)
-    rows: list[str] = []
+    rows: list = []
     q = (
         reader.load()
-        .writeStream.foreachBatch(lambda df, _: rows.extend(r[0] for r in df.collect()))
+        .writeStream.foreachBatch(lambda df, _: rows.extend(df.collect()))
         .option("checkpointLocation", ckpt)
         .trigger(processingTime="0 seconds")
         .start()
@@ -440,28 +465,112 @@ def _stream_rows(spark, opts, ckpt):
 
 @pytest.mark.parametrize("cap", [None, 4], ids=["uncapped", "max_pages_4"])
 def test_batch_and_stream_walk_the_same_pages_once(spark, tmp_path, cap):
-    """Token mode, indexed mode and the stream reader return the same
-    rows from one corpus, fetching each page exactly once, with and
-    without a page cap below the corpus's 6 pages."""
-    from collections import Counter
-
-    from ctgov_ai_etl_spark.fixtures import make_raw_studies_json
-
+    """Token mode, indexed mode (4 page ranges) and the stream reader
+    fetch each page exactly once, with and without a page cap below the
+    corpus's 6 pages, and each returns, in page order, what
+    ``from_json(json.dumps(s), RAW_STUDY)`` makes of the studies the
+    transport serves: absent modules and leaves are NULL, and
+    ``locations`` lists are kept, or NULL where a study has none."""
     pages = cap or 6
-    expected = Counter(make_raw_studies_json(57)[: pages * 10])
+    expected = _json_parsed(spark, _served_studies()[: pages * 10])
+    assert any(r.study.locations is None for r in expected)
+    assert any(r.study.protocolSection.identificationModule is None for r in expected)
+    assert any(r.study.protocolSection.identificationModule.officialTitle is None
+               for r in expected if r.study.protocolSection.identificationModule)
     for mode in ("token", "indexed", "stream"):
         log = str(tmp_path / f"{mode}.log")
         opts = dict(FIXTURE_OPTS, transport_args=json.dumps([57, 10, mode == "indexed", log]))
-        if mode == "indexed":  # one partition per page, up to max_pages
-            opts.update(paging="indexed", max_pages=str(pages))
+        if mode == "indexed":
+            opts.update(paging="indexed", max_pages=str(pages), parallelism="4")
         elif cap:
             opts["max_pages"] = str(cap)
         if mode == "stream":
             opts["pages_per_batch"] = "2"
             rows = _stream_rows(spark, opts, str(tmp_path / "ckpt"))
         else:
-            rows = [r[0] for r in _read(spark, **opts).collect()]
-        assert Counter(_canonical(rows)) == expected, mode
+            rows = _read(spark, **opts).collect()
+        assert rows == expected, mode
         with open(log) as fh:
             served = sorted(map(int, fh.read().split()))
         assert served == ([10] * cap if cap else [7] + [10] * 5), mode
+
+
+# ------------------------------------------------- typed study pages
+
+def wrong_leaf_transport(bad_page: int = 2, indexed: bool = False):
+    """The 57-study fixture transport in pages of 10, except that page
+    ``bad_page`` serves its first study's ``nctId`` as a number."""
+    inner = mock_ctgov_transport(57, 10, indexed)
+
+    def transport(params, token):
+        page = inner(params, token)
+        if int(token or 0) == bad_page * (1 if indexed else 10):
+            page["studies"][0]["protocolSection"]["identificationModule"]["nctId"] = 20
+        return page
+
+    return transport
+
+
+@pytest.mark.parametrize(
+    "paging, page", [("token", "page 2 (token '20')"), ("indexed", "page 2")]
+)
+def test_wrong_typed_leaf_fails_the_read_naming_its_page(spark, paging, page):
+    """A value whose JSON type does not fit its RAW_STUDY leaf aborts
+    the read, like any other page error; the error names the page and
+    carries Arrow's own message."""
+    with pytest.raises(pa.ArrowTypeError) as arrow:
+        pa.array([{"protocolSection": {"identificationModule": {"nctId": 20}}}], type=rest.ARROW_STUDY)
+    df = _read(
+        spark,
+        transport_factory="tests.test_rest_source:wrong_leaf_transport",
+        transport_args=json.dumps([2, paging == "indexed"]),
+        page_size="10",
+        paging=paging,
+        max_pages="6",
+    )
+    with pytest.raises(Exception) as err:
+        df.collect()
+    assert f"ctgov_rest {page}: " in str(err.value)
+    assert str(arrow.value) in str(err.value)
+
+
+def _classes(tree):
+    """Every ``class`` named in a Catalyst tree's JSON form: plan nodes
+    and the expressions inside them."""
+    if isinstance(tree, dict):
+        return [*([tree["class"]] if "class" in tree else []), *_classes(list(tree.values()))]
+    if isinstance(tree, list):
+        return [c for v in tree for c in _classes(v)]
+    return []
+
+
+def test_pipeline_plan_parses_no_json_and_has_one_python_stage(spark):
+    """The source's ``study`` column is typed already: the pipeline's
+    optimized plan has no JSON parse, and its only Python stage besides
+    the source scan is the labelling ``MapInPandas``."""
+    from ctgov_ai_etl_spark.plans.pipeline import run_pipeline
+
+    cfg = {"ctgov": dict(FIXTURE_OPTS)}
+    plan = json.loads(run_pipeline(spark, cfg)._jdf.queryExecution().optimizedPlan().toJSON())
+    assert not [c for c in _classes(plan) if c.endswith(".JsonToStructs")]
+    nodes = [n["class"].rsplit(".", 1)[-1] for n in plan]
+    assert [n for n in nodes if re.search("Python|Pandas|Arrow", n)] == ["MapInPandas"]
+    assert nodes[-1] == "DataSourceV2ScanRelation"
+
+
+def test_pipeline_runs_register_the_source_once_per_session(spark, monkeypatch):
+    """Two pipeline runs in one session register ``ctgov_rest`` once:
+    each re-registration replaces the source and logs a warning."""
+    from pyspark.sql.datasource import DataSourceRegistration
+
+    from ctgov_ai_etl_spark.plans.pipeline import run_pipeline
+
+    calls = []
+    register = DataSourceRegistration.register
+    monkeypatch.setattr(rest, "_REGISTERED_SESSIONS", set())
+    monkeypatch.setattr(
+        DataSourceRegistration, "register", lambda self, ds: calls.append(ds) or register(self, ds)
+    )
+    cfg = {"ctgov": dict(FIXTURE_OPTS)}
+    assert [run_pipeline(spark, cfg).count() for _ in range(2)] == [57, 57]
+    assert calls == [rest.RestStudiesDataSource]

@@ -208,7 +208,7 @@ def pair_counts(spark, registry, sf_dir: str) -> dict:
 
 
 def main() -> int:
-    spark = get_spark("scale_rehearsal", cpus="32")
+    spark = get_spark("scale_rehearsal")
     registry = load_all()
     if "--skip-gen" not in sys.argv:
         print("generating sf1 derivative ...", flush=True)
