@@ -464,11 +464,9 @@ def ivf_topk_partitioned(
         if cached is not None and os.path.isdir(cached):
             path, write_needed = cached, False
         else:
-            import atexit
-            import shutil
+            from ctgov_ai_etl_spark.session import remove_at_exit
 
-            tmp = tempfile.mkdtemp(prefix="ivf_inv_")
-            atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+            tmp = remove_at_exit(tempfile.mkdtemp(prefix="ivf_inv_"))
             path = os.path.join(tmp, "inverted")
             _IVF_LAYOUT_CACHE[key] = path
     if write_needed:

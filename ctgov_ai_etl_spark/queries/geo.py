@@ -6,8 +6,7 @@ All pure JVM bit-algebra / equality shuffles — the epsilon-join maps
 each point to its 3x3 neighbor cells so every matching pair meets in
 exactly ONE bucket (no cartesian, no post-dedup); the geohash encoder
 is shared-dialect SQL generated once and run verbatim on both
-engines.  Consolidated from queries/round11.py (VERDICT r11 #7) with
-no behavior change.
+engines.
 """
 
 from __future__ import annotations
@@ -19,7 +18,7 @@ from pyspark.sql import functions as F
 from ctgov_ai_etl_spark.functions.exact import cents, fdiv, sql_fdiv  # noqa: F401
 from ctgov_ai_etl_spark.operators.sketches import portable_hash60  # noqa: F401
 from ctgov_ai_etl_spark.queries.registry import query
-from ctgov_ai_etl_spark.tables import load_table
+from ctgov_ai_etl_spark.tables import load_table, stream_table
 
 _US_PER_DAY = 86_400_000_000
 
@@ -325,13 +324,12 @@ def stream_run_geo_fence(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded output per batch: the geofence monitor a 100 TB/day
     location pipeline actually runs."""
     from ctgov_ai_etl_spark.streaming.events import (
-        read_events_stream,
         run_stream_to_memory,
         stateful_geo_fence,
     )
 
     out = run_stream_to_memory(
-        stateful_geo_fence(read_events_stream(spark, sf_dir)),
+        stateful_geo_fence(stream_table(spark, sf_dir, "events")),
         mode="append",
     )
     return out.select(

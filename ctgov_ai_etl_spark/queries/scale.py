@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from ctgov_ai_etl_spark.operators.skew import salted_agg_sum_count, salted_join
 from ctgov_ai_etl_spark.queries.registry import query
+from ctgov_ai_etl_spark.session import remove_at_exit
 from ctgov_ai_etl_spark.tables import load_table
 
 
@@ -82,7 +83,7 @@ def partition_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     tools/explain_audit.py),
     the mechanism that turns a 100 TB table into a 1-partition read."""
     o = load_table(spark, sf_dir, "orders")
-    out = os.path.join(tempfile.mkdtemp(prefix="part_"), "orders_by_year")
+    out = os.path.join(remove_at_exit(tempfile.mkdtemp(prefix="part_")), "orders_by_year")
     o.withColumn("o_year", F.year("o_orderdate")).write.mode("overwrite").partitionBy(
         "o_year"
     ).parquet(out)
@@ -202,7 +203,7 @@ def join_bucket_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     # concurrent sessions sharing a metastore can't race on a fixed
     # name, and each run drops ITS OWN previous table (none) rather
     # than orphaning another run's bucketed files.
-    root = tempfile.mkdtemp(prefix="bucketed_")
+    root = remove_at_exit(tempfile.mkdtemp(prefix="bucketed_"))
     run_id = os.path.basename(root).removeprefix("bucketed_").lower()
     tables = {}
     for base, df, key in (

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from ctgov_ai_etl_spark.functions.exact import cents
 from ctgov_ai_etl_spark.operators.sketches import portable_hash60
 from ctgov_ai_etl_spark.queries.registry import query
-from ctgov_ai_etl_spark.tables import load_table
+from ctgov_ai_etl_spark.tables import load_table, stream_table
 
 
 @query(
@@ -139,12 +139,11 @@ def stream_run_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch, so the watermark drops nothing and the complete-mode
     result equals the batch window aggregation the oracle computes."""
     from ctgov_ai_etl_spark.streaming.events import (
-        read_events_stream,
         run_stream_to_memory,
         tumbling_counts,
     )
 
-    stream = tumbling_counts(read_events_stream(spark, sf_dir))
+    stream = tumbling_counts(stream_table(spark, sf_dir, "events"))
     return run_stream_to_memory(stream, mode="complete")
 
 
@@ -165,12 +164,9 @@ def stream_run_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows; the oracle reproduces Spark's epoch-aligned window starts
     with the two slide-offset buckets.  Closes the last windowed-agg
     row that ran through readStream only in tumbling/session form."""
-    from ctgov_ai_etl_spark.streaming.events import (
-        read_events_stream,
-        run_stream_to_memory,
-    )
+    from ctgov_ai_etl_spark.streaming.events import run_stream_to_memory
 
-    ev = read_events_stream(spark, sf_dir)
+    ev = stream_table(spark, sf_dir, "events")
     agg = (
         ev.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
@@ -219,13 +215,9 @@ def stream_run_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     Hash-checked: the finite single-file source is one micro-batch, so
     no session is split across watermark evictions and complete mode
     emits every finalized session."""
-    from ctgov_ai_etl_spark.streaming.events import (
-        read_events_stream,
-        run_stream_to_memory,
-        session_counts,
-    )
+    from ctgov_ai_etl_spark.streaming.events import run_stream_to_memory, session_counts
 
-    stream = session_counts(read_events_stream(spark, sf_dir))
+    stream = session_counts(stream_table(spark, sf_dir, "events"))
     return run_stream_to_memory(stream, mode="complete")
 
 
@@ -244,13 +236,10 @@ def stream_run_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     each batch so slowly-changing dims stay fresh), then a streaming
     count by segment. Complete-mode memory sink equals the batch
     join+agg the oracle computes."""
-    from ctgov_ai_etl_spark.streaming.events import (
-        read_events_stream,
-        run_stream_to_memory,
-    )
+    from ctgov_ai_etl_spark.streaming.events import run_stream_to_memory
     from ctgov_ai_etl_spark.tables import load_table as _lt
 
-    ev = read_events_stream(spark, sf_dir)
+    ev = stream_table(spark, sf_dir, "events")
     cust = F.broadcast(_lt(spark, sf_dir, "customer"))
     joined = ev.join(cust, ev.user_id == cust.c_custkey)
     agg = joined.groupBy("c_mktsegment").agg(F.count("*").alias("n_events"))
@@ -273,12 +262,11 @@ def stream_run_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     equals the batch groupBy answer the oracle computes (rounding done
     Spark-side with F.round, never Python round)."""
     from ctgov_ai_etl_spark.streaming.events import (
-        read_events_stream,
         run_stream_to_memory,
         stateful_user_stats,
     )
 
-    stream = stateful_user_stats(read_events_stream(spark, sf_dir))
+    stream = stateful_user_stats(stream_table(spark, sf_dir, "events"))
     out = run_stream_to_memory(stream, mode="update")
     # update-mode emits one row per key per batch; keep the final state
     from pyspark.sql import Window as W
@@ -308,12 +296,11 @@ def stream_run_stateful_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-checked contract as stream_run_stateful — final state equals
     the batch groupBy — whichever API ran."""
     from ctgov_ai_etl_spark.streaming.events import (
-        read_events_stream,
         run_stream_to_memory,
         stateful_user_stats_auto,
     )
 
-    stream = stateful_user_stats_auto(read_events_stream(spark, sf_dir))
+    stream = stateful_user_stats_auto(stream_table(spark, sf_dir, "events"))
     out = run_stream_to_memory(stream, mode="update")
     from pyspark.sql import Window as W
 
@@ -372,11 +359,10 @@ def stream_run_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the distinct key set."""
     from ctgov_ai_etl_spark.streaming.events import (
         dedup_within_watermark,
-        read_events_stream,
         run_stream_to_memory,
     )
 
-    stream = dedup_within_watermark(read_events_stream(spark, sf_dir))
+    stream = dedup_within_watermark(stream_table(spark, sf_dir, "events"))
     return run_stream_to_memory(stream, mode="append")
 
 
@@ -400,13 +386,10 @@ def stream_run_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Inner-join matches emit as they arrive, so the append-mode result
     of the finite single-batch source equals the batch range self-join
     the oracle replays (time delta in exact integer micros)."""
-    from ctgov_ai_etl_spark.streaming.events import (
-        read_events_stream,
-        run_stream_to_memory,
-    )
+    from ctgov_ai_etl_spark.streaming.events import run_stream_to_memory
 
     clicks = (
-        read_events_stream(spark, sf_dir)
+        stream_table(spark, sf_dir, "events")
         .filter(F.col("event_type") == "click")
         .select(
             F.col("event_id").alias("click_id"),
@@ -416,7 +399,7 @@ def stream_run_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("c_ts", "1 hour")
     )
     purchases = (
-        read_events_stream(spark, sf_dir)
+        stream_table(spark, sf_dir, "events")
         .filter(F.col("event_type") == "purchase")
         .select(
             F.col("event_id").alias("purchase_id"),
@@ -443,28 +426,6 @@ def stream_run_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _read_embeddings_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source micro-batch stream over the embeddings parquet
-    (the events-stream pattern, streaming/events.py:26, applied to the
-    vector table: explicit schema, file-or-directory layout handled by
-    streaming.events.stream_table_reader)."""
-    import os as _os
-
-    import pyspark.sql.types as T
-
-    _ = _os.path.join(sf_dir, "embeddings.parquet")  # path sanity
-    schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.FloatType())),
-            T.StructField("label", T.IntegerType()),
-        ]
-    )
-    from ctgov_ai_etl_spark.streaming.events import stream_table_reader
-
-    return stream_table_reader(spark, sf_dir, "embeddings", schema)
-
-
 @query(
     "stream_run_semantic_admission",
     oracle=None,  # patched below: identical result contract to the
@@ -489,7 +450,7 @@ def stream_run_semantic_admission(spark: SparkSession, sf_dir: str) -> DataFrame
 
     e = _lt(spark, sf_dir, "embeddings")
     existing = e.filter(hash_bucket(F.col("vec_id")) < 8000)
-    incoming = _read_embeddings_stream(spark, sf_dir).filter(
+    incoming = stream_table(spark, sf_dir, "embeddings").filter(
         hash_bucket(F.col("vec_id")) >= 8000
     )
     dups = semantic_admission_plan(existing, incoming, threshold=0.3)
@@ -609,23 +570,10 @@ def stream_run_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming tier; append mode emits rows as they pass).  The
     finite-source result equals the batch filter, which the oracle
     replays."""
-    import pyspark.sql.types as T
-
     from ctgov_ai_etl_spark.operators.quality import linear_quality_score
     from ctgov_ai_etl_spark.streaming.events import run_stream_to_memory
 
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("lang", T.StringType()),
-            T.StructField("source", T.StringType()),
-            T.StructField("n_chars", T.LongType()),
-        ]
-    )
-    from ctgov_ai_etl_spark.streaming.events import stream_table_reader
-
-    stream = stream_table_reader(spark, sf_dir, "documents", schema)
+    stream = stream_table(spark, sf_dir, "documents")
     scored = linear_quality_score(stream).filter(F.col("keep")).select(
         "doc_id", "logit_micro"
     )
@@ -659,12 +607,9 @@ def stream_run_cms_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells computed in SQL over the same rows — streaming-equals-batch
     for an additive aggregate."""
     from ctgov_ai_etl_spark.operators.sketches import cms_build
-    from ctgov_ai_etl_spark.streaming.events import (
-        read_events_stream,
-        run_stream_to_memory,
-    )
+    from ctgov_ai_etl_spark.streaming.events import run_stream_to_memory
 
-    stream = read_events_stream(spark, sf_dir).select(
+    stream = stream_table(spark, sf_dir, "events").select(
         F.col("user_id").cast("string").alias("item")
     )
     sketch = cms_build(stream, "item", depth=3, width=16)
@@ -697,10 +642,7 @@ def stream_run_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     theta join is unplannable for a stream.  Oracle: the batch naive
     theta join over the same rows."""
     from ctgov_ai_etl_spark.operators.intervals import interval_point_join
-    from ctgov_ai_etl_spark.streaming.events import (
-        read_events_stream,
-        run_stream_to_memory,
-    )
+    from ctgov_ai_etl_spark.streaming.events import run_stream_to_memory
 
     static = load_table(spark, sf_dir, "events")
     intervals = static.filter(F.col("event_type") == "error").select(
@@ -709,7 +651,7 @@ def stream_run_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("ts") + F.expr("INTERVAL 10 MINUTES")).alias("hi"),
     )
     points = (
-        read_events_stream(spark, sf_dir)
+        stream_table(spark, sf_dir, "events")
         .filter(F.col("event_type") == "purchase")
         .select(
             F.col("event_id").alias("purchase_id"),
@@ -759,13 +701,12 @@ def stream_run_capped_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact because event arithmetic is int64 micros on both sides and
     the finite source replays in event-time order."""
     from ctgov_ai_etl_spark.streaming.events import (
-        read_events_stream,
         run_stream_to_memory,
         stateful_capped_sessions,
     )
 
     stream = stateful_capped_sessions(
-        read_events_stream(spark, sf_dir), gap_seconds=1800, cap_seconds=3600
+        stream_table(spark, sf_dir, "events"), gap_seconds=1800, cap_seconds=3600
     )
     return run_stream_to_memory(stream, mode="update")
 
@@ -784,13 +725,10 @@ def stream_run_running_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan, and streaming stateful scan all hash-check against the one
     recursive-CTE oracle."""
     from ctgov_ai_etl_spark.operators.balance import stateful_balance
-    from ctgov_ai_etl_spark.streaming.events import (
-        read_events_stream,
-        run_stream_to_memory,
-    )
+    from ctgov_ai_etl_spark.streaming.events import run_stream_to_memory
 
     stream = stateful_balance(
-        read_events_stream(spark, sf_dir), cap_cents=2500
+        stream_table(spark, sf_dir, "events"), cap_cents=2500
     )
     return run_stream_to_memory(stream, mode="update")
 
@@ -820,12 +758,11 @@ def stream_run_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-level twin of the attribution_last_touch batch rollup; oracle
     is the batch ignorenulls-window replay."""
     from ctgov_ai_etl_spark.streaming.events import (
-        read_events_stream,
         run_stream_to_memory,
         stateful_attribution,
     )
 
-    stream = stateful_attribution(read_events_stream(spark, sf_dir))
+    stream = stateful_attribution(stream_table(spark, sf_dir, "events"))
     return run_stream_to_memory(stream, mode="update")
 
 
@@ -857,12 +794,9 @@ def stream_run_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     order statistics, and struct min/max merge incrementally across
     micro-batches like any aggregate.  Complete-mode memory sink over
     the finite source; oracle is the batch bucket rollup."""
-    from ctgov_ai_etl_spark.streaming.events import (
-        read_events_stream,
-        run_stream_to_memory,
-    )
+    from ctgov_ai_etl_spark.streaming.events import run_stream_to_memory
 
-    ev = read_events_stream(spark, sf_dir).filter(F.col("ts").isNotNull())
+    ev = stream_table(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
     ts_us = F.unix_micros(F.col("ts"))
     xc = F.round(F.col("value") * 100).cast("long")
     keyed = ev.select(
@@ -918,12 +852,9 @@ def stream_run_topk_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     math never needs a rank window (rank windows don't stream).
     Complete-mode memory sink; oracle is the batch rank replay with
     the same (value, event_id) descending tie order."""
-    from ctgov_ai_etl_spark.streaming.events import (
-        read_events_stream,
-        run_stream_to_memory,
-    )
+    from ctgov_ai_etl_spark.streaming.events import run_stream_to_memory
 
-    ev = read_events_stream(spark, sf_dir).filter(F.col("ts").isNotNull())
+    ev = stream_table(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
     xc = F.round(F.col("value") * 100).cast("long")
     agg = (
         ev.withWatermark("ts", "10 minutes")
@@ -973,13 +904,12 @@ def stream_run_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch chained-min, so the two strategies hash-check against
     the same contract.  7-day step bound, exact int64 micros."""
     from ctgov_ai_etl_spark.streaming.events import (
-        read_events_stream,
         run_stream_to_memory,
         stateful_funnel,
     )
 
     stream = stateful_funnel(
-        read_events_stream(spark, sf_dir), bound_us=7 * _FUNNEL_DAY_US
+        stream_table(spark, sf_dir, "events"), bound_us=7 * _FUNNEL_DAY_US
     )
     per_user = run_stream_to_memory(stream, mode="update")
     final = per_user.groupBy("user_id").agg(
@@ -996,7 +926,7 @@ def stream_run_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # A step no user reaches produces no exploded row, but the batch
     # twin's oracle always emits all 3 steps (count over an empty
     # step CTE = 0) — left-join a static 3-row spine so the row
-    # shapes agree on sparse fixtures too (ADVICE r9).
+    # shapes agree on sparse fixtures too.
     spine = spark.range(1, 4).select(F.col("id").cast("int").alias("step"))
     counts = spine.join(reached_counts, "step", "left").select(
         "step", F.coalesce("n_users", F.lit(0)).cast("long").alias("n_users")
@@ -1047,13 +977,12 @@ def stream_run_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of a per-key batch scan.  Completes the batch/streaming
     twin set alongside balance and capped sessions."""
     from ctgov_ai_etl_spark.streaming.events import (
-        read_events_stream,
         run_stream_to_memory,
         stateful_rate_limiter,
     )
 
     stream = stateful_rate_limiter(
-        read_events_stream(spark, sf_dir), _TB_CAP, _TB_REFILL, _TB_COST
+        stream_table(spark, sf_dir, "events"), _TB_CAP, _TB_REFILL, _TB_COST
     )
     return run_stream_to_memory(stream, mode="update")
 
@@ -1109,14 +1038,10 @@ def stream_run_sprt(spark: SparkSession, sf_dir: str) -> DataFrame:
     The streaming twin of stat_sprt: both hash-check against the one
     batch windowed-walk oracle — early-stopping decisions computed on
     live traffic equal the offline replay."""
-    from ctgov_ai_etl_spark.streaming.events import (
-        read_events_stream,
-        run_stream_to_memory,
-        stateful_sprt,
-    )
+    from ctgov_ai_etl_spark.streaming.events import run_stream_to_memory, stateful_sprt
 
     stream = stateful_sprt(
-        read_events_stream(spark, sf_dir),
+        stream_table(spark, sf_dir, "events"),
         c1=_SPRT_C1,
         c0=_SPRT_C0,
         bound=_SPRT_BOUND,
@@ -1175,14 +1100,11 @@ def stream_run_bitmap_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows — streaming-equals-batch for an idempotent monoid.  The
     bitmap-window membership (off in 0..63) is an explicit filter on
     both engines: Spark's shiftleft wraps out-of-range shifts mod 64
-    while DuckDB's << does not (ADVICE r9)."""
-    from ctgov_ai_etl_spark.streaming.events import (
-        read_events_stream,
-        run_stream_to_memory,
-    )
+    while DuckDB's << does not."""
+    from ctgov_ai_etl_spark.streaming.events import run_stream_to_memory
     from ctgov_ai_etl_spark.functions.exact import fdiv
 
-    ev = read_events_stream(spark, sf_dir).filter(F.col("ts").isNotNull())
+    ev = stream_table(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
     off = (fdiv(F.unix_micros("ts"), 86_400_000_000) - 19_723).cast("int")
     d = ev.select("user_id", off.alias("off")).filter(
         F.col("off").between(0, 63)
@@ -1244,12 +1166,9 @@ def stream_run_burn_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     counters are an additive monoid and the alert is a pure function
     of the final spine."""
     from ctgov_ai_etl_spark.functions.exact import fdiv
-    from ctgov_ai_etl_spark.streaming.events import (
-        read_events_stream,
-        run_stream_to_memory,
-    )
+    from ctgov_ai_etl_spark.streaming.events import run_stream_to_memory
 
-    ev = read_events_stream(spark, sf_dir).filter(F.col("ts").isNotNull())
+    ev = stream_table(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
     hours = ev.groupBy(
         fdiv(F.unix_micros("ts"), 3_600_000_000).alias("hr")
     ).agg(
@@ -1316,13 +1235,12 @@ def stream_run_audit_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive-CTE oracle — live tamper detection equals the batch
     recompute."""
     from ctgov_ai_etl_spark.streaming.events import (
-        read_events_stream,
         run_stream_to_memory,
         stateful_audit_chain,
     )
 
     snaps = run_stream_to_memory(
-        stateful_audit_chain(read_events_stream(spark, sf_dir)),
+        stateful_audit_chain(stream_table(spark, sf_dir, "events")),
         mode="update",
     )
     latest = snaps.groupBy("user_id").agg(
@@ -1379,7 +1297,7 @@ def stream_run_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         # harness cost at sf0.1 for evidence that three triggers (events,
         # sentinel 1, sentinel 2) already carry: the watermark closure
         # and the cross-batch null flush live in the sentinel triggers,
-        # not in how many pieces batch 1 arrives (VERDICT r9 #2).
+        # not in how many pieces batch 1 arrives.
         ev.coalesce(1).write.mode("overwrite").parquet(b1)
         max_us = ev.agg(F.max(F.unix_micros("ts"))).first()[0]
         for i, gap_h in enumerate((3, 6), start=1):
@@ -1401,9 +1319,8 @@ def stream_run_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
             sent.coalesce(1).write.mode("overwrite").parquet(
                 os.path.join(stage, f"sentinel{i}")
             )
-        schema = spark.read.parquet(b1).schema
         stream = (
-            spark.readStream.schema(schema)
+            spark.readStream.schema(ev.schema)
             .option("maxFilesPerTrigger", "1")
             .parquet(os.path.join(stage, "*"))
         )
@@ -1470,14 +1387,10 @@ def stream_run_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
     equals the offline batch replay over the same rows.  Completes
     the batch/streaming twin set alongside SPRT, audit chain,
     bitmap days, funnel, rate limit, and burn rate."""
-    from ctgov_ai_etl_spark.streaming.events import (
-        read_events_stream,
-        run_stream_to_memory,
-        stateful_holt,
-    )
+    from ctgov_ai_etl_spark.streaming.events import run_stream_to_memory, stateful_holt
 
     snaps = run_stream_to_memory(
-        stateful_holt(read_events_stream(spark, sf_dir)), mode="update"
+        stateful_holt(stream_table(spark, sf_dir, "events")), mode="update"
     )
     latest = snaps.groupBy("event_type").agg(
         F.max(
@@ -1514,12 +1427,9 @@ def stream_run_chi2_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot the sink materializes.  The always-on version of
     stat_chi2_independence; both hash-check the same oracle."""
     from ctgov_ai_etl_spark.functions.exact import fdiv
-    from ctgov_ai_etl_spark.streaming.events import (
-        read_events_stream,
-        run_stream_to_memory,
-    )
+    from ctgov_ai_etl_spark.streaming.events import run_stream_to_memory
 
-    ev = read_events_stream(spark, sf_dir).filter(F.col("ts").isNotNull())
+    ev = stream_table(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
     obs_stream = ev.groupBy(
         "event_type",
         F.pmod(fdiv(F.unix_micros("ts"), 86_400_000_000), F.lit(7))
@@ -1704,13 +1614,12 @@ def stream_run_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     same rows — the oracle IS the mergeability proof.  Floored-cents
     Horvitz-Thompson weights as in the batch twin."""
     from ctgov_ai_etl_spark.streaming.events import (
-        read_events_stream,
         run_stream_to_memory,
         stateful_priority_sample,
     )
 
     snaps = run_stream_to_memory(
-        stateful_priority_sample(read_events_stream(spark, sf_dir), _PRIO_K),
+        stateful_priority_sample(stream_table(spark, sf_dir, "events"), _PRIO_K),
         mode="update",
     )
     latest = snaps.groupBy("shard").agg(
@@ -1738,27 +1647,6 @@ def stream_run_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ----------------------------------- streaming decontamination gate
-
-
-def _read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source micro-batch stream over the documents parquet
-    (the events/embeddings-stream pattern: explicit schema +
-    pathGlobFilter on the sf dir) — the corpus-ingest side of the
-    decontamination gate."""
-    import pyspark.sql.types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("lang", T.StringType()),
-            T.StructField("source", T.StringType()),
-            T.StructField("n_chars", T.LongType()),
-        ]
-    )
-    from ctgov_ai_etl_spark.streaming.events import stream_table_reader
-
-    return stream_table_reader(spark, sf_dir, "documents", schema)
 
 
 @query(
@@ -1798,7 +1686,7 @@ def stream_run_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    train = _read_documents_stream(spark, sf_dir).filter(
+    train = stream_table(spark, sf_dir, "documents").filter(
         F.col("source") != "src0"
     )
     probes = train.select(
@@ -1860,7 +1748,7 @@ def stream_run_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ctgov_ai_etl_spark.streaming.events import run_stream_to_memory
 
-    d = _read_documents_stream(spark, sf_dir)
+    d = stream_table(spark, sf_dir, "documents")
     terms = F.array(*[F.lit(t) for t in _BLOCKLIST_TERMS])
     n_hit = F.size(
         F.array_intersect(F.array_distinct(tokens(F.col("text"))), terms)
@@ -1966,7 +1854,7 @@ def stream_run_dsir_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus so every bucket hits the map, but on genuinely new data
     # an absent bucket must score at the smoothing floor, not NULL —
     # a NULL would null the document's whole aggregate and silently
-    # drop it at the >= 0 gate (ADVICE r12).
+    # drop it at the >= 0 gate.
     packed = (
         model.agg(
             F.map_from_entries(
@@ -1987,7 +1875,7 @@ def stream_run_dsir_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("lr_floor"),
         )
     )
-    stream = _read_documents_stream(spark, sf_dir)
+    stream = stream_table(spark, sf_dir, "documents")
     buckets = F.transform(
         tokens(F.col("text")),
         lambda t: hash_bucket(t, _DSIR_BUCKETS).cast("int"),
@@ -2051,13 +1939,10 @@ def stream_run_volume_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch chart anomaly_volume_days, whose oracle this twin
     shares."""
     from ctgov_ai_etl_spark.functions.exact import fdiv
-    from ctgov_ai_etl_spark.streaming.events import (
-        read_events_stream,
-        run_stream_to_memory,
-    )
+    from ctgov_ai_etl_spark.streaming.events import run_stream_to_memory
     from ctgov_ai_etl_spark.tables import load_table as _lt
 
-    ev = read_events_stream(spark, sf_dir).filter(F.col("ts").isNotNull())
+    ev = stream_table(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
     day = fdiv(F.unix_micros("ts"), 86_400_000_000).alias("day")
     counts = ev.select(day).groupBy("day").agg(
         F.count("*").cast("long").alias("n")
@@ -2135,12 +2020,9 @@ def stream_run_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     complete mode ==> registers equal the batch build
     (sketch_hll_registers), whose oracle this twin replays."""
     from ctgov_ai_etl_spark.operators.sketches import hll_registers
-    from ctgov_ai_etl_spark.streaming.events import (
-        read_events_stream,
-        run_stream_to_memory,
-    )
+    from ctgov_ai_etl_spark.streaming.events import run_stream_to_memory
 
-    e = read_events_stream(spark, sf_dir).select("event_type", "user_id")
+    e = stream_table(spark, sf_dir, "events").select("event_type", "user_id")
     regs = hll_registers(e, "user_id", "event_type")
     drained = run_stream_to_memory(regs, mode="complete")
     merged = (

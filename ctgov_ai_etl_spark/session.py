@@ -17,6 +17,8 @@ import tempfile
 
 from pyspark.sql import SparkSession
 
+from ctgov_ai_etl_spark.tables import ensure_session_confs
+
 
 def _usable_cpus() -> int:
     """Cores this process may run on (its affinity mask, not the
@@ -42,6 +44,16 @@ DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(_usable_cpus())
 _SHIPPED_SESSIONS: set[int] = set()
 
 
+def remove_at_exit(path: str) -> str:
+    """Remove the directory ``path`` at interpreter exit and return it.
+
+    For scratch directories that a returned DataFrame reads lazily, so
+    they cannot be removed when the function that made them returns.
+    """
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
+
+
 def ship_package(spark: SparkSession) -> None:
     """Make ``ctgov_ai_etl_spark`` importable on executor Python workers.
 
@@ -62,8 +74,7 @@ def ship_package(spark: SparkSession) -> None:
     if key in _SHIPPED_SESSIONS:
         return
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    tmp = tempfile.mkdtemp(prefix="ctgov_pkg_")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    tmp = remove_at_exit(tempfile.mkdtemp(prefix="ctgov_pkg_"))
     zip_base = os.path.join(tmp, "ctgov_ai_etl_spark_pkg")
     root = os.path.dirname(pkg_dir)
     archive = shutil.make_archive(zip_base, "zip", root_dir=root, base_dir="ctgov_ai_etl_spark")
@@ -72,10 +83,10 @@ def ship_package(spark: SparkSession) -> None:
 
 
 #: Minimum free bytes /dev/shm must have before it is used as shuffle
-#: scratch (ADVICE r15: spills exist to relieve memory pressure, so a
-#: RAM-backed spill medium is self-defeating when RAM is what's scarce;
-#: a modest-/dev/shm host must fall back to disk, not fail the job
-#: with no-space-left).  8 GiB comfortably covers every shuffle this
+#: scratch: spills exist to relieve memory pressure, so a RAM-backed
+#: spill medium is self-defeating when RAM is what's scarce; a
+#: modest-/dev/shm host must fall back to disk, not fail the job with
+#: no-space-left.  8 GiB comfortably covers every shuffle this
 #: engine plans at bench scale while excluding small-tmpfs hosts.
 _SHM_MIN_FREE_BYTES = 8 << 30
 
@@ -84,10 +95,9 @@ def _local_scratch() -> str:
     """Directory for spark.local.dir (shuffle files, spills).
 
     $SPARK_GRAFT_LOCAL_DIR > /dev/shm (RAM-backed, when writable AND
-    holding at least ``_SHM_MIN_FREE_BYTES`` free — the free-space
-    gate ADVICE r15 asked for) > the platform default tempdir.  Must
-    be decided before the SparkContext exists, hence a builder-time
-    helper rather than a runtime conf."""
+    holding at least ``_SHM_MIN_FREE_BYTES`` free) > the platform
+    default tempdir.  Must be decided before the SparkContext exists,
+    hence a builder-time helper rather than a runtime conf."""
     override = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
     if override:
         return override
@@ -113,7 +123,10 @@ def get_spark(app_name: str = "ctgov_ai_etl_spark", cpus: str | None = None) -> 
     - Arrow makes every pandas-UDF boundary a columnar batch transfer
       instead of per-row pickling.
     - UTC session timezone keeps timestamp semantics identical to the
-      DuckDB oracle and to any other engine reading the same parquet.
+      DuckDB oracle and to any other engine reading the same parquet;
+      it and the engine's other runtime confs come from
+      :func:`tables.ensure_session_confs`, applied once the session
+      exists.
     """
     cpus = cpus or DEFAULT_CPUS
     builder = (
@@ -126,15 +139,14 @@ def get_spark(app_name: str = "ctgov_ai_etl_spark", cpus: str | None = None) -> 
         # tempfs when present).  Parameterised: $SPARK_GRAFT_LOCAL_DIR
         # wins, else /dev/shm when writable, else Spark's default
         # (/tmp).  Same medium rationale as the streaming state-store
-        # scratch (streaming/events.py:scratch_dir, VERDICT r14 #1) —
-        # the bench host's virtual disk shows bursty multi-second I/O
-        # stalls that swing shuffle-heavy queries 4-8x.
+        # scratch (streaming/events.py:scratch_dir): a virtual disk
+        # can show bursty multi-second I/O stalls that swing
+        # shuffle-heavy queries 4-8x.
         .config("spark.local.dir", _local_scratch())
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config(
@@ -143,12 +155,8 @@ def get_spark(app_name: str = "ctgov_ai_etl_spark", cpus: str | None = None) -> 
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128MB")
-        # If events.parquet carries TIMESTAMP(NANOS) (as it did in some
-        # environments), read raw int64 nanos instead of erroring;
-        # tables._normalize_events_ts converts adaptively. Harmless for
-        # µs-stored files, which arrive as native timestamps.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
     spark = builder.getOrCreate()
+    ensure_session_confs(spark)
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -12,7 +12,6 @@ batch-equivalence is the correctness story (run both, compare).
 
 from __future__ import annotations
 
-import atexit
 import contextlib
 import os
 import shutil
@@ -21,9 +20,6 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from ctgov_ai_etl_spark.schemas import EVENTS
-from ctgov_ai_etl_spark.tables import ensure_session_confs
 
 
 def scratch_dir(prefix: str) -> str:
@@ -109,60 +105,6 @@ def _capture_stream_plan(q) -> None:
             STREAM_PLAN_CAPTURE.append(q._jsq.explainInternal(True))
         except Exception as exc:  # surfaced as a failing assertion
             STREAM_PLAN_CAPTURE.append(f"<explain failed: {exc}>")
-
-
-def stream_table_reader(spark: SparkSession, sf_dir: str, table: str, schema) -> DataFrame:
-    """File-source stream over ``<sf_dir>/<table>.parquet`` handling
-    BOTH storage layouts: a single parquet FILE (the testdata shape —
-    FileStreamSource requires a directory, so the sf dir is streamed
-    with a glob filter selecting just that file) and a parquet
-    DIRECTORY of part files (every Spark-written dataset, e.g. the
-    generated sf1 rehearsal tables — where the same glob would match
-    ZERO files and the stream would be silently empty)."""
-    import os as _os
-
-    path = _os.path.join(sf_dir, f"{table}.parquet")
-    reader = spark.readStream.schema(schema).format("parquet")
-    if _os.path.isdir(path):
-        return reader.load(path)
-    return reader.option("pathGlobFilter", f"{table}.parquet").load(sf_dir)
-
-
-def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source micro-batch stream over the events parquet.
-
-    The storage dtype of ``ts`` is NOT assumed: a one-off batch schema
-    read (footer only, no data scan) reveals what the reader actually
-    produces for this file — int64 nanos (legacy nanosAsLong) or a
-    native timestamp — and the stream schema + conversion are derived
-    from that. Hardcoding either branch has silently corrupted
-    timestamps before (µs values divided as if nanos → epoch-1970
-    windows); see tables._normalize_events_ts for the batch twin.
-    """
-    ensure_session_confs(spark)
-    import os as _os
-
-    import pyspark.sql.types as T
-
-    path = _os.path.join(sf_dir, "events.parquet")
-    batch_ts_type = spark.read.parquet(path).schema["ts"].dataType
-    raw_schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", batch_ts_type),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-    stream = stream_table_reader(spark, sf_dir, "events", raw_schema)
-    if isinstance(batch_ts_type, T.LongType):
-        # nanos-as-long storage: µs-aligned, exact integer division.
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif isinstance(batch_ts_type, T.TimestampNTZType):
-        stream = stream.withColumn("ts", F.col("ts").cast(T.TimestampType()))
-    return stream.select(*[f.name for f in EVENTS.fields])
 
 
 def tumbling_counts(events: DataFrame, width: str = "1 hour") -> DataFrame:
@@ -361,17 +303,16 @@ def stream_upsert_snapshot(
     on return: the frame reads it lazily.
     """
     from ctgov_ai_etl_spark.operators.merge import merge_upsert_versioned
+    from ctgov_ai_etl_spark.session import remove_at_exit
     from ctgov_ai_etl_spark.tables import load_table
 
-    ensure_session_confs(spark)
     ev = load_table(spark, sf_dir, "events")
-    work = scratch_dir("upsert_stream_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = remove_at_exit(scratch_dir("upsert_stream_"))
     src_dir = os.path.join(work, "shards")
     target_dir = os.path.join(work, "target")
     ev.repartition(n_shards).write.parquet(src_dir)
 
-    schema = spark.read.parquet(src_dir).schema
+    schema = ev.schema
     stream = (
         spark.readStream.schema(schema)
         .format("parquet")

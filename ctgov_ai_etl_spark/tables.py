@@ -1,9 +1,18 @@
-"""Testdata table loading.
+"""Testdata table loading: the one place that turns ``(sf_dir, table
+name)`` into a DataFrame, batch (:func:`load_table`) or stream
+(:func:`stream_table`).
 
-Always reads with the explicit schema from :mod:`schemas` — schema
-inference is a correctness and performance hazard at 100 TB (a full
-footer scan per query); explicit schemas also guarantee the parquet
-reader can push filters and prune columns deterministically.
+Every table except ``events`` is read with its declared schema,
+``schemas.TABLE_SCHEMAS[name]``: schema inference reads the parquet
+footers in a Spark job on every load, and a declared schema keeps
+filter pushdown and column pruning independent of what a footer says.
+
+``events`` is the exception.  How its ``ts`` column is stored has
+changed before (TIMESTAMP(NANOS), then timestamp[us]), and a
+nanosecond-stored file read under the declared ``TimestampType`` fails
+at execution.  So ``events`` is read with its inferred schema and
+:func:`_normalize_events_ts` converts ``ts`` to ``TimestampType``
+from the dtype the reader actually produced.
 """
 
 from __future__ import annotations
@@ -12,7 +21,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ctgov_ai_etl_spark.schemas import TABLE_NAMES
+from ctgov_ai_etl_spark.schemas import EVENTS, TABLE_NAMES, TABLE_SCHEMAS
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -46,21 +55,49 @@ def ensure_session_confs(spark: SparkSession) -> None:
             spark.conf.set(k, v)
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one testdata table as a DataFrame (columnar parquet scan)."""
+def _path(sf_dir: str, name: str) -> str:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
+    return os.path.join(sf_dir, f"{name}.parquet")
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Load one testdata table as a DataFrame (columnar parquet scan)."""
+    path = _path(sf_dir, name)
     ensure_session_confs(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    if name != "events":
+        return spark.read.schema(TABLE_SCHEMAS[name]).parquet(path)
+    return _normalize_events_ts(spark.read.parquet(path))
+
+
+def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """File-source micro-batch stream over one testdata table, typed as
+    :func:`load_table` types the batch read.
+
+    Handles BOTH storage layouts: a single parquet FILE (the testdata
+    shape — FileStreamSource requires a directory, so the sf dir is
+    streamed with a glob filter selecting just that file) and a parquet
+    DIRECTORY of part files (every Spark-written dataset, where the same
+    glob would match ZERO files and the stream would be silently
+    empty)."""
+    path = _path(sf_dir, name)
+    ensure_session_confs(spark)
     if name == "events":
-        df = _normalize_events_ts(df)
-        df = df.select("event_id", "ts", "user_id", "event_type", "value", "props")
-    return df
+        schema = spark.read.parquet(path).schema
+    else:
+        schema = TABLE_SCHEMAS[name]
+    reader = spark.readStream.schema(schema).format("parquet")
+    if os.path.isdir(path):
+        stream = reader.load(path)
+    else:
+        stream = reader.option("pathGlobFilter", f"{name}.parquet").load(sf_dir)
+    return _normalize_events_ts(stream) if name == "events" else stream
 
 
 def _normalize_events_ts(df: DataFrame) -> DataFrame:
     """Normalize the events ``ts`` column to TimestampType, adapting to
-    how the file was physically stored.
+    how the file was physically stored, and put the columns in
+    ``schemas.EVENTS`` order.  Serves the batch and the stream read.
 
     The storage format has changed under the engine before (TIMESTAMP
     with nanos → timestamp[us]), so never assume a conf applied — branch
@@ -75,13 +112,13 @@ def _normalize_events_ts(df: DataFrame) -> DataFrame:
 
     dt = df.schema["ts"].dataType
     if isinstance(dt, T.LongType):
-        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if isinstance(dt, T.TimestampNTZType):
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    elif isinstance(dt, T.TimestampNTZType):
         # Session tz is pinned to UTC, so this relabel is value-exact.
-        return df.withColumn("ts", F.col("ts").cast(T.TimestampType()))
-    if isinstance(dt, T.TimestampType):
-        return df
-    raise TypeError(f"events.ts has unsupported storage dtype {dt}")
+        df = df.withColumn("ts", F.col("ts").cast(T.TimestampType()))
+    elif not isinstance(dt, T.TimestampType):
+        raise TypeError(f"events.ts has unsupported storage dtype {dt}")
+    return df.select(*EVENTS.fieldNames())
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -178,3 +178,29 @@ def test_ship_package_archive_is_removed_at_exit(tmp_path):
     assert shipped.startswith(str(tmp_path))
     assert not os.path.exists(shipped)
     assert not [p for p in os.listdir(tmp_path) if p.startswith("ctgov_pkg_")]
+
+
+def test_query_scratch_dirs_are_removed_at_exit(tmp_path):
+    """Queries whose result reads a scratch directory lazily leave
+    nothing behind once the interpreter exits."""
+    proc = _run_python(
+        """
+        import os, tempfile
+        from ctgov_ai_etl_spark.queries import load_all
+        from ctgov_ai_etl_spark.session import get_spark
+
+        spark = get_spark("scratch-hygiene")
+        registry = load_all()
+        for name in ("csv_scan_roundtrip", "maintenance_compact_files"):
+            assert registry[name].fn(spark, "/root/testdata/sf0.001").collect()
+        print(sorted(os.listdir(tempfile.gettempdir())))
+        """,
+        TMPDIR=str(tmp_path),
+        SPARK_GRAFT_CPUS="2",
+        SPARK_GRAFT_DRIVER_MEM="1g",
+    )
+    assert proc.returncode == 0, proc.stderr
+    made = proc.stdout.strip().splitlines()[-1]
+    assert "csv_rt_" in made and "compact_" in made
+    left = [p for p in os.listdir(tmp_path) if p.startswith(("csv_rt_", "compact_"))]
+    assert not left

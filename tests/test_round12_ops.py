@@ -206,14 +206,13 @@ def test_dp_histogram_arithmetic(spark):
 # --------------------------------------- streaming reader layouts
 
 
-def test_stream_table_reader_directory_layout(spark, tmp_path):
+def test_stream_table_directory_layout(spark, tmp_path):
     """The stream reader must see rows whether the table is a single
     parquet FILE (testdata) or a Spark-written DIRECTORY (generated
     rehearsal data) — the glob-on-file approach silently streamed
     zero rows from directories."""
-    import pyspark.sql.types as T
-
-    from ctgov_ai_etl_spark.streaming.events import stream_table_reader
+    from ctgov_ai_etl_spark.streaming.events import run_stream_to_memory
+    from ctgov_ai_etl_spark.tables import stream_table
 
     src = spark.range(10).select(
         F.col("id").alias("doc_id"),
@@ -221,15 +220,7 @@ def test_stream_table_reader_directory_layout(spark, tmp_path):
     )
     d = str(tmp_path / "sfdir")
     src.write.parquet(f"{d}/documents.parquet")
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    stream = stream_table_reader(spark, d, "documents", schema)
-    from ctgov_ai_etl_spark.streaming.events import run_stream_to_memory
-
+    stream = stream_table(spark, d, "documents")
     out = run_stream_to_memory(
         stream.groupBy().agg(F.count("*").alias("n")), mode="complete"
     )

@@ -9,12 +9,11 @@ from pyspark.sql import functions as F
 
 from ctgov_ai_etl_spark.streaming.events import (
     dedup_within_watermark,
-    read_events_stream,
     run_stream_to_memory,
     session_counts,
     tumbling_counts,
 )
-from ctgov_ai_etl_spark.tables import load_table
+from ctgov_ai_etl_spark.tables import load_table, stream_table
 from tests.conftest import SF_SMALL
 
 
@@ -24,7 +23,7 @@ def _rows(df, cols):
 
 def test_streaming_tumbling_equals_batch(spark):
     stream_out = run_stream_to_memory(
-        tumbling_counts(read_events_stream(spark, SF_SMALL)), mode="complete"
+        tumbling_counts(stream_table(spark, SF_SMALL, "events")), mode="complete"
     )
     batch = load_table(spark, SF_SMALL, "events")
     batch_out = (
@@ -43,7 +42,7 @@ def test_streaming_tumbling_equals_batch(spark):
 
 def test_streaming_dedup_equals_batch_distinct(spark):
     stream_out = run_stream_to_memory(
-        dedup_within_watermark(read_events_stream(spark, SF_SMALL)), mode="append"
+        dedup_within_watermark(stream_table(spark, SF_SMALL, "events")), mode="append"
     )
     batch_out = (
         load_table(spark, SF_SMALL, "events").select("user_id", "event_type").distinct()
@@ -57,7 +56,7 @@ def test_stateful_user_stats_equals_batch_agg(spark):
     from pyspark.sql import Window as W
 
     out = run_stream_to_memory(
-        stateful_user_stats(read_events_stream(spark, SF_SMALL)), mode="update"
+        stateful_user_stats(stream_table(spark, SF_SMALL, "events")), mode="update"
     )
     w = W.partitionBy("user_id").orderBy(F.col("n_events").desc())
     final = (
@@ -127,8 +126,6 @@ def test_foreach_batch_sink_writes_every_batch(spark, tmp_path):
     """Real writeStream.foreachBatch: each micro-batch lands in a
     parquet sink via custom writer logic; reading the sink back equals
     the batch source (SURVEY §2.3 'foreachBatch sink', R17 analog)."""
-    from ctgov_ai_etl_spark.streaming.events import read_events_stream
-
     out = str(tmp_path / "sink")
     ckpt = str(tmp_path / "ckpt")
     seen = []
@@ -138,7 +135,7 @@ def test_foreach_batch_sink_writes_every_batch(spark, tmp_path):
         df.write.mode("append").parquet(out)
 
     q = (
-        read_events_stream(spark, SF_SMALL)
+        stream_table(spark, SF_SMALL, "events")
         .select("event_id", "user_id", "event_type")
         .writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", ckpt)
@@ -229,7 +226,7 @@ def test_stateful_auto_dispatches_to_supported_api(spark):
         assert not supports_transform_with_state()
 
     out = run_stream_to_memory(
-        stateful_user_stats_auto(read_events_stream(spark, SF_SMALL)), mode="update"
+        stateful_user_stats_auto(stream_table(spark, SF_SMALL, "events")), mode="update"
     )
     w = W.partitionBy("user_id").orderBy(F.col("n_events").desc())
     final = (
@@ -326,7 +323,6 @@ def test_stream_admission_across_multiple_microbatches(spark, tmp_path):
     )
     dups = semantic_admission_plan(existing, stream, threshold=0.3)
 
-    import tempfile
     import uuid
 
     name = f"mb_{uuid.uuid4().hex[:8]}"
@@ -334,7 +330,7 @@ def test_stream_admission_across_multiple_microbatches(spark, tmp_path):
         dups.writeStream.outputMode("complete")
         .format("memory")
         .queryName(name)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_mb_"))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
     )
@@ -358,7 +354,7 @@ def test_streaming_session_window_equals_batch(spark):
     # session state) must equal the batch session_window expression on
     # the same finite input — batch/stream duality for session windows.
     stream_out = run_stream_to_memory(
-        session_counts(read_events_stream(spark, SF_SMALL)), mode="complete"
+        session_counts(stream_table(spark, SF_SMALL, "events")), mode="complete"
     )
     batch = load_table(spark, SF_SMALL, "events")
     batch_out = (
@@ -383,10 +379,7 @@ def test_session_merges_across_microbatches(spark, tmp_path):
     than emit a new one.  Complete mode keeps every session; the
     result must equal the batch session_window over the union."""
     import datetime as dt
-    import tempfile
     import uuid
-
-    import pyspark.sql.types as T
 
     t0 = dt.datetime(2024, 3, 1, 12, 0, 0)
     rows1 = [(1, t0, 7, "view", 1.0, "{}"),
@@ -429,7 +422,7 @@ def test_session_merges_across_microbatches(spark, tmp_path):
         agg.writeStream.outputMode("complete")
         .format("memory")
         .queryName(name)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_sess_"))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
     )
@@ -860,7 +853,7 @@ def test_upsert_snapshot_restores_shuffle_parts(spark, session_parts):
 
 def test_failed_stream_run_restores_shuffle_parts(spark, session_parts):
     """A query that raises mid-run still gets the caller's conf back."""
-    failing = read_events_stream(spark, SF_SMALL).select(
+    failing = stream_table(spark, SF_SMALL, "events").select(
         F.assert_true(F.col("event_id") < 0).alias("never")
     )
     with pytest.raises(Exception):

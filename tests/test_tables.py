@@ -1,10 +1,13 @@
-"""Contract tests for testdata table loading (tables.load_table).
+"""Contract tests for testdata table loading (tables.load_table and
+tables.stream_table).
 
-The events ``ts`` storage format has changed under the engine once
-(TIMESTAMP(NANOS) → timestamp[us]), breaking every events query. These
-tests pin the CONTRACT — ``load_table`` always yields a TimestampType
-``ts`` with correct values — for every storage variant the loader
-claims to handle, so a future environment shift fails here first.
+Every table but ``events`` is read with its declared schema, so the
+declared schemas must match the stored footers.  The events ``ts``
+storage format has changed under the engine once (TIMESTAMP(NANOS) →
+timestamp[us]), breaking every events query.  These tests pin the
+CONTRACT — ``events`` always yields a TimestampType ``ts`` with correct
+values — for every storage variant the loader claims to handle, so a
+future environment shift fails here first.
 """
 
 from __future__ import annotations
@@ -12,13 +15,15 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+import time
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import types as T
 
-from ctgov_ai_etl_spark.tables import load_table
+from ctgov_ai_etl_spark.schemas import TABLE_NAMES, TABLE_SCHEMAS
+from ctgov_ai_etl_spark.tables import ensure_session_confs, load_table, stream_table
 
 SF_SMALL = "/root/testdata/sf0.001"
 
@@ -120,12 +125,9 @@ def test_load_events_ns_stored(spark, expected_us):
 
 
 def test_stream_schema_tracks_storage(spark, expected_us):
-    """read_events_stream derives its schema from the file instead of
+    """stream_table derives the events schema from the file instead of
     hardcoding a dtype — both storage variants stream correct values."""
-    from ctgov_ai_etl_spark.streaming.events import (
-        read_events_stream,
-        run_stream_to_memory,
-    )
+    from ctgov_ai_etl_spark.streaming.events import run_stream_to_memory
     from pyspark.sql import functions as F
 
     for mk in (
@@ -136,7 +138,7 @@ def test_stream_schema_tracks_storage(spark, expected_us):
     ):
         d = _synth_dir(mk(list(expected_us.values())))
         try:
-            stream = read_events_stream(spark, d)
+            stream = stream_table(spark, d, "events")
             assert isinstance(stream.schema["ts"].dataType, T.TimestampType)
             out = run_stream_to_memory(
                 stream.select("event_id", F.unix_micros("ts").alias("us"))
@@ -145,3 +147,50 @@ def test_stream_schema_tracks_storage(spark, expected_us):
             assert got == expected_us
         finally:
             shutil.rmtree(d, ignore_errors=True)
+
+
+_DECLARED = [n for n in TABLE_NAMES if n != "events"]
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
+def test_declared_schemas_match_stored_footers(spark, sf):
+    """The schema a footer read infers equals the declared one, name,
+    type, order and nullability, for every table read by declaration.
+    Footer inference reads timestamps under the engine's session confs."""
+    ensure_session_confs(spark)
+    sf_dir = os.path.join("/root/testdata", sf)
+    for name in _DECLARED:
+        inferred = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet")).schema
+        assert inferred == TABLE_SCHEMAS[name], name
+
+
+def _jobs_started(spark, fn) -> int:
+    """Spark jobs started while ``fn`` runs, counted by job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    tag = uuid.uuid4().hex[:8]
+    group, marker = f"load_{tag}", f"marker_{tag}"
+    sc.setJobGroup(group, "jobs started by a table load")
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(marker, "listener-bus marker")
+        spark.range(1).count()
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    # Job-start events reach the tracker in order, so once the marker
+    # job is visible every job of ``group`` is too.
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(marker) and time.monotonic() < deadline:
+        time.sleep(0.05)
+    assert tracker.getJobIdsForGroup(marker)
+    return len(tracker.getJobIdsForGroup(group))
+
+
+def test_declared_schema_load_starts_no_job(spark):
+    """A declared-schema load plans without touching the files; only
+    ``events`` pays one schema-inference job."""
+    for name in _DECLARED:
+        assert _jobs_started(spark, lambda: load_table(spark, SF_SMALL, name)) == 0, name
+    assert _jobs_started(spark, lambda: load_table(spark, SF_SMALL, "events")) == 1
