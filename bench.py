@@ -36,6 +36,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from ctgov_ai_etl_spark.operators import cache  # noqa: E402
 from ctgov_ai_etl_spark.queries import load_all  # noqa: E402
 from ctgov_ai_etl_spark.session import get_spark  # noqa: E402
 
@@ -101,7 +102,9 @@ def _run(fn, spark) -> float:
     # unpersist — across a catalog sweep the accumulated blocks drive
     # GC/eviction churn that inflated unrelated queries by 20-40%.
     # Clearing BEFORE the timed window charges each query its own
-    # first-touch cost and nothing else.
+    # first-touch cost and nothing else.  A query's runs share its
+    # scratch layouts (the IVF inverted file); the callers release
+    # them with cache.release_all() once the query's runs are done.
     spark.catalog.clearCache()
     t0 = time.time()
     fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
@@ -137,9 +140,7 @@ def _warm_up(spark) -> None:
         transport_args="[5, 5]",
         page_size="5",
     ).load().write.format("noop").mode("overwrite").save()
-    from ctgov_ai_etl_spark.streaming.events import scratch_dir
-
-    ckpt = scratch_dir("bench_warm_ckpt_")
+    ckpt = cache.scratch_dir("bench_warm_ckpt_")
     try:
         q = (
             spark.readStream.format("rate").option("rowsPerSecond", "1")
@@ -174,6 +175,7 @@ def _time_named(spark, registry, names: list[str], explain: str | None) -> None:
                 fh.write(buf.getvalue())
         runs: list[float] = []
         medians[name] = _median_of_3(fn, spark, runs)
+        cache.release_all()
         mins[name] = min(runs)
         print(json.dumps({name: {"median": medians[name], "runs": runs}}),
               flush=True)
@@ -193,6 +195,7 @@ def _sweep(spark, registry, deep: bool, sf: float) -> None:
         timings[name] = _median_of_3(
             registry[name].fn, spark, headline_runs[name]
         )
+        cache.release_all()
     total = round(sum(timings.values()), 3)
 
     tail = [
@@ -220,6 +223,7 @@ def _sweep(spark, registry, deep: bool, sf: float) -> None:
                 timings[name] = runs[0]
         except Exception as exc:  # record, don't kill the bench line
             errors[name] = f"{type(exc).__name__}: {exc}"[:200]
+        cache.release_all()
 
     out = {
         "metric": "headline_queries_total_runtime",

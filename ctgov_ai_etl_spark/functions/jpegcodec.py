@@ -834,7 +834,7 @@ def _encode_block(
         if s > 10:
             # Annex K AC tables stop at size 10 (|v| <= 1023); an
             # extreme block under a tiny quant table would otherwise
-            # surface as a bare KeyError (ADVICE r10).
+            # surface as a bare KeyError.
             raise ValueError(
                 f"AC coefficient {v} exceeds the Annex K table range "
                 "(|v| > 1023) — use a larger quantization table"

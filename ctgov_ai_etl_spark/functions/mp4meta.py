@@ -23,7 +23,7 @@ biased by 0x60 (ISO 639-2/T).  Unknown leaf boxes are SKIPPED by
 their declared size (the format's own forward-compat rule) but still
 counted; any size that overruns its container fails loudly with
 Mp4Error — a truncated archive must never parse as a shorter valid
-one (same fail-loud contract as functions/zipmeta.py, ADVICE r14).
+one (same fail-loud contract as functions/zipmeta.py).
 
 Codec payload decode (the mdat bytes) stays behind the documented
 native-codec seam in functions/imagecodec.py; the H.264 parameter

@@ -17,7 +17,7 @@ The parser resolves startxref, walks the xref entries, and VERIFIES
 each in-use entry actually lands on its `N 0 obj` header — a wrong
 offset, a lying /Size, or a /Length that disagrees with the actual
 `stream...endstream` span fails loudly (the zipmeta fail-loud
-contract, ADVICE r14).  Text extraction, fonts, filters, and
+contract).  Text extraction, fonts, filters, and
 encryption are out of scope by design — content streams are opaque
 payload to this walk, exactly like mdat to the MP4 walk.
 

@@ -18,7 +18,7 @@ byte_rate block_align bits_per_sample, with the two derived fields
 cross-checked (block_align = channels*bits/8, byte_rate =
 rate*block_align) — a desync there is a corrupt or lying header and
 fails loudly, as does any chunk whose size overruns the enclosure
-(same fail-loud contract as functions/zipmeta.py, ADVICE r14).
+(same fail-loud contract as functions/zipmeta.py).
 Duration is exact integer microseconds: n_samples * 1e6 // rate
 where n_samples = data_bytes / block_align.
 

@@ -92,7 +92,7 @@ def keyed_scan_input(rows: DataFrame, key: str, order_cols: list[str]) -> DataFr
     Arrow batches preserve partition order, so carrying (key, state)
     across the iterator is exact.
 
-    CONTRACT (ADVICE r15): the key column must be NON-NULL.  Consumers
+    CONTRACT: the key column must be NON-NULL.  Consumers
     detect run boundaries with ``u != prev_uid`` on numpy values; a
     NULL key surfaces as NaN there and NaN != NaN is always True, so
     state would silently reset per null row (where the old

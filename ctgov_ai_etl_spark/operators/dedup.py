@@ -49,7 +49,7 @@ _VOCAB_DRIVER_CAP = 1_000_000
 #: in this engine already implies; graphs past the cap take the
 #: distributed label-prop/star path unchanged.  Read at CALL time
 #: (:func:`_cc_driver_cap`) so late env changes apply — the
-#: import-time read silently ignored them (VERDICT r15 #4).
+#: import-time read silently ignored them.
 _CC_DRIVER_CAP_DEFAULT = 500_000
 
 
@@ -1144,8 +1144,7 @@ def connected_components(
     )
     out = labels.unionByName(singles).select(F.col("v").alias(id_col), "component")
     if observation is not None:
-        # Graph-depth telemetry without a profiler (VERDICT r5 item
-        # 7): rides the result's own execution via df.observe — zero
+        # Graph-depth telemetry without a profiler: rides the result's own execution via df.observe — zero
         # extra jobs, surfaced to any QueryExecutionListener (or a
         # pyspark Observation) when the caller materializes.  The
         # loop/handoff facts are driver-side literals folded into

@@ -167,10 +167,10 @@ def hits(
     its input twice (the max-aggregate branch plus the rescale branch)
     and without truncation that doubling compounds per iteration into
     an exponentially growing physical plan.  One checkpoint per
-    iteration, not per half-step (VERDICT r15 #6): the authority
-    half-step's doubling is bounded by the iteration-end truncation,
-    at the price of one extra join+partial-agg recompute — cheaper
-    than a dedicated checkpoint job barrier.
+    iteration, not per half-step, halves the job barriers: the
+    authority half-step's doubling is bounded by the iteration-end
+    truncation, at the price of one extra join+partial-agg recompute
+    — cheaper than a dedicated checkpoint job barrier.
     """
     e = edges.select(
         F.col(src).alias("src"), F.col(dst).alias("dst")
@@ -194,8 +194,8 @@ def hits(
 
     auth = None
     for _ in range(iters):
-        # ONE eager checkpoint per iteration (on hraw), not two
-        # (VERDICT r15 #6: halve the job barriers).  Dropping araw's
+        # ONE eager checkpoint per iteration (on hraw), not two, to
+        # halve the job barriers.  Dropping araw's
         # checkpoint lets its subtree appear twice in the iteration's
         # plan (_norm reads its input in the max-aggregate branch and
         # the rescale branch), but hraw's checkpoint truncates that
@@ -416,8 +416,8 @@ def kcore(
         # without it the alive set's plan doubles per round — two
         # semi-joins of a tree containing the previous tree twice —
         # and five rounds of that is exponential re-execution.
-        # KEPT eager-per-round after measuring the VERDICT r15 #6
-        # batching proposals (r16): two peels per eager checkpoint
+        # KEPT eager-per-round after measuring batched checkpoints:
+        # two peels per eager checkpoint
         # doubled the query (4.6 → 8.2 s at sf0.1 — the un-truncated
         # round is recomputed by both next-round semi-joins), and lazy
         # per-round checkpoints still lost to eager (6.3 vs 4.6 s

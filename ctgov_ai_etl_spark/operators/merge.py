@@ -138,7 +138,7 @@ def refresh_count_sum(
     # eqNullSafe on the merge key: a nullable group key's NULL row
     # must net against the state's NULL-key row (a plain equi-join
     # would keep them apart — NULL ≠ NULL — and the refreshed state
-    # would diverge from a full recompute; ADVICE r4).  Spark plans
+    # would diverge from a full recompute).  Spark plans
     # null-safe equality as an ordinary hash/sort-merge key via an
     # internal coalesce, so the shuffle shape is unchanged.
     st = state.select(F.col(key_out).alias("__k_st"), "n", "s")

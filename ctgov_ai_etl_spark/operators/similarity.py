@@ -30,7 +30,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ctgov_ai_etl_spark.operators.cache import track
+from ctgov_ai_etl_spark.operators.cache import scratch_dir, track
 from ctgov_ai_etl_spark.operators.limits import spread_to_parallelism
 
 _SEED = 1337
@@ -435,13 +435,13 @@ def ivf_topk_partitioned(
     for one call: it builds the layout in a session-scoped temp
     directory that is re-USED across calls in the same SparkSession
     (keyed by corpus+quantizer identity, so repeated identical calls
-    skip the rewrite) and removed at JVM exit.  Note the write +
+    skip the rewrite) until the caller's ``cache.release_all``
+    removes it.  Note the write +
     probe-set collect are EAGER side effects of constructing the
     returned DataFrame — callers embedding this in a lazy pipeline
     should call it at plan-build time, not inside another job.
     """
     import os
-    import tempfile
 
     ncent = len(centroids)
     cent_lit = _planes_literal(centroids)
@@ -454,7 +454,8 @@ def ivf_topk_partitioned(
         # Session-scoped default layout: keyed by (app, corpus plan,
         # quantizer), so repeated identical calls reuse the written
         # inverted file instead of re-materializing it; the directory
-        # is removed at interpreter exit.
+        # is a cache.scratch_dir, so the caller's release_all removes
+        # it and the next call writes it afresh.
         key = (
             corpus.sparkSession.sparkContext.applicationId,
             corpus.semanticHash(),
@@ -464,10 +465,7 @@ def ivf_topk_partitioned(
         if cached is not None and os.path.isdir(cached):
             path, write_needed = cached, False
         else:
-            from ctgov_ai_etl_spark.session import remove_at_exit
-
-            tmp = remove_at_exit(tempfile.mkdtemp(prefix="ivf_inv_"))
-            path = os.path.join(tmp, "inverted")
+            path = os.path.join(scratch_dir("ivf_inv_"), "inverted")
             _IVF_LAYOUT_CACHE[key] = path
     if write_needed:
         # shared norm-hoisted assignment prologue (see _assign_frame)

@@ -139,7 +139,7 @@ def sim_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pq_topk(e, e.filter(F.col("vec_id") < 5), _PQ_BOOKS, topk=5, refine=50)
 
 
-# Bench-slice cap (VERDICT r10 #3): orderkeys are dense 0..N-1, so
+# Bench-slice cap: orderkeys are dense 0..N-1, so
 # the cap keeps sf0.001/sf0.01 edge sets BIT-IDENTICAL (all keys
 # < 15000 there — correctness evidence unchanged) while the sf0.1
 # bench stops paying 10x the edge volume for the same 2,000-node
@@ -371,7 +371,7 @@ def graph_jaccard_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame
 
 _LPA_ROUNDS = 3
 _LPA_CUST_OFFSET = 1_000_000
-# Bench-slice cap (VERDICT r10 #3): orderkeys are dense 0..N-1, so
+# Bench-slice cap: orderkeys are dense 0..N-1, so
 # sf0.001/sf0.01 edge sets are BIT-IDENTICAL with or without the cap
 # (correctness evidence unchanged); only the sf0.1 bench stops paying
 # 10x the edge volume for the same K-round community evidence.

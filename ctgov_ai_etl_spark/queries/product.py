@@ -1814,8 +1814,7 @@ def seq_user_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
     # activity (a gap week, or the phantom week after the window) —
     # the oracle's weeks CTE only contains observed weeks, so the
     # engine semi-joins the same observed-week spine instead of a
-    # min/max bound (which would still admit interior gap weeks —
-    # ADVICE r9).
+    # min/max bound (which would still admit interior gap weeks).
     obs_weeks = wk.select("week_idx").distinct()
     mw = wk.agg(F.min("week_idx").alias("mw"))
     return (
@@ -2839,8 +2838,7 @@ def agg_bitmap_distinct_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     0..63, and the engines DISAGREE outside that range (Spark's
     shiftleft masks the shift to 6 bits, Java-style, silently
     wrapping; DuckDB's << does not) — so the window membership is an
-    EXPLICIT guard on both sides, never an implicit wrap (ADVICE
-    r9).  One shuffle (user rollup), map-side partial bit_or."""
+    EXPLICIT guard on both sides, never an implicit wrap.  One shuffle (user rollup), map-side partial bit_or."""
     ev = load_table(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
     off = (
         fdiv(F.unix_micros("ts"), 86_400_000_000) - _BITMAP_LO_DAY
@@ -2985,7 +2983,7 @@ def agg_bitmap_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     day index is the fdiv floor convention; window membership
     (off in 0..63) is an explicit filter on both sides because the
     engines disagree on out-of-range shifts (Spark wraps mod 64,
-    DuckDB does not — ADVICE r9).  One partial-aggregated user
+    DuckDB does not).  One partial-aggregated user
     rollup, all streak logic map-side after it."""
     ev = load_table(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
     off = (
@@ -3178,10 +3176,9 @@ def agg_bitmap_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     identically on int64 *within* the 0..63 shift range — outside
     it Spark wraps the shift mod 64 while DuckDB does not, so the
     day-window filter and the cohort_day+k <= 63 retention guard are
-    explicit on both sides (NULL when the horizon leaves the bitmap
-    — ADVICE r9, medium).  Scale story: one partial-aggregated user
-    rollup, then a |cohort-days|-sized second rollup — no self-join,
-    no window."""
+    explicit on both sides (NULL when the horizon leaves the bitmap).
+    Scale story: one partial-aggregated user rollup, then a
+    |cohort-days|-sized second rollup — no self-join, no window."""
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("ts").isNotNull() & (F.col("event_type") == "purchase")
     )
@@ -3617,7 +3614,7 @@ def dq_dataset_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     # F.concat (NOT concat_ws): concat propagates NULL like the
     # oracle's '||', so a NULL field NULLs the row hash identically
     # on both engines instead of being silently skipped on one side
-    # (ADVICE r10 — concat_ws drops NULL columns).
+    # (concat_ws drops NULL columns).
     canon = F.concat(
         F.col("o_orderkey").cast("string"),
         F.lit("|"),

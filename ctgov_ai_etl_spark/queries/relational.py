@@ -773,13 +773,13 @@ def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS via the SQL API (same Catalyst plan as
     the DataFrame rollup/cube family)."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     return spark.sql(
         """
         SELECT o_orderstatus, o_orderpriority, count(*) AS n
-        FROM orders
+        FROM {orders}
         GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 

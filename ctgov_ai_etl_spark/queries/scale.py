@@ -8,14 +8,13 @@ mismatch, and tools/explain_audit.py asserts the redistributed shuffle.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ctgov_ai_etl_spark.operators import cache
 from ctgov_ai_etl_spark.operators.skew import salted_agg_sum_count, salted_join
 from ctgov_ai_etl_spark.queries.registry import query
-from ctgov_ai_etl_spark.session import remove_at_exit
 from ctgov_ai_etl_spark.tables import load_table
 
 
@@ -83,7 +82,7 @@ def partition_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     tools/explain_audit.py),
     the mechanism that turns a 100 TB table into a 1-partition read."""
     o = load_table(spark, sf_dir, "orders")
-    out = os.path.join(remove_at_exit(tempfile.mkdtemp(prefix="part_")), "orders_by_year")
+    out = os.path.join(cache.scratch_dir("part_"), "orders_by_year")
     o.withColumn("o_year", F.year("o_orderdate")).write.mode("overwrite").partitionBy(
         "o_year"
     ).parquet(out)
@@ -190,9 +189,6 @@ def join_bucket_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     pay the exchange once at write time instead of on every query; the
     oracle replays the plain (layout-free) join, proving bucketing
     changed the plan, not the answer."""
-    import os
-    import tempfile
-
     from ctgov_ai_etl_spark.functions.exact import cents
 
     o = load_table(spark, sf_dir, "orders").select(
@@ -203,7 +199,7 @@ def join_bucket_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     # concurrent sessions sharing a metastore can't race on a fixed
     # name, and each run drops ITS OWN previous table (none) rather
     # than orphaning another run's bucketed files.
-    root = remove_at_exit(tempfile.mkdtemp(prefix="bucketed_"))
+    root = cache.scratch_dir("bucketed_")
     run_id = os.path.basename(root).removeprefix("bucketed_").lower()
     tables = {}
     for base, df, key in (
@@ -236,8 +232,8 @@ def join_bucket_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the catalog entries can drop NOW without breaking the lazy
     # result or its shuffle-free plan, and a shared/persistent
     # metastore stops accumulating one orphan pair per run.  External
-    # tables: DROP leaves the temp-dir files for the pending scan; the
-    # tempdir reaper owns their lifetime.
+    # tables: DROP leaves the scratch files for the pending scan;
+    # cache.release_all owns their lifetime.
     for name in tables.values():
         spark.sql(f"DROP TABLE IF EXISTS {name}")
     return result

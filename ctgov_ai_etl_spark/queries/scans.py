@@ -12,15 +12,14 @@ exactly.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ctgov_ai_etl_spark.operators import cache
 from ctgov_ai_etl_spark.queries.registry import query
 from ctgov_ai_etl_spark.schemas import CUSTOMER
-from ctgov_ai_etl_spark.session import remove_at_exit
 from ctgov_ai_etl_spark.tables import load_table
 
 
@@ -39,7 +38,7 @@ def csv_scan_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     R17's format, generalized to directory output at scale), proven
     lossless against the parquet-direct oracle."""
     c = load_table(spark, sf_dir, "customer")
-    out = os.path.join(remove_at_exit(tempfile.mkdtemp(prefix="csv_rt_")), "customer_csv")
+    out = os.path.join(cache.scratch_dir("csv_rt_"), "customer_csv")
     c.write.mode("overwrite").option("header", True).csv(out)
     back = spark.read.schema(CUSTOMER).option("header", True).csv(out)
     cents = F.round(F.col("c_acctbal") * 100).cast("long")
@@ -65,7 +64,7 @@ def orc_scan_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     natively; same predicate-pushdown/column-pruning machinery as
     parquet), proven lossless against the parquet-direct oracle."""
     p = load_table(spark, sf_dir, "part")
-    out = os.path.join(remove_at_exit(tempfile.mkdtemp(prefix="orc_rt_")), "part_orc")
+    out = os.path.join(cache.scratch_dir("orc_rt_"), "part_orc")
     p.write.mode("overwrite").orc(out)
     back = spark.read.orc(out)
     cents = F.round(F.col("p_retailprice") * 100).cast("long")
@@ -93,7 +92,7 @@ def parquet_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     sentinel convention coalesces the holes.  Hash-checked against a
     single-table replay of the same evolution rule."""
     d = load_table(spark, sf_dir, "documents")
-    root = remove_at_exit(tempfile.mkdtemp(prefix="schema_evo_"))
+    root = cache.scratch_dir("schema_evo_")
     d.filter(F.col("doc_id") % 2 == 0).select("doc_id", "source").write.parquet(
         os.path.join(root, "batch=v1")
     )
@@ -127,7 +126,7 @@ def xml_scan_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-tagged XML, read back, broadcast-joined to nation, exact-cents
     aggregate."""
     s = load_table(spark, sf_dir, "supplier")
-    out = os.path.join(remove_at_exit(tempfile.mkdtemp(prefix="xml_rt_")), "supplier_xml")
+    out = os.path.join(cache.scratch_dir("xml_rt_"), "supplier_xml")
     s.select("s_suppkey", "s_nationkey", "s_acctbal").write.mode(
         "overwrite"
     ).format("xml").option("rootTag", "suppliers").option("rowTag", "supplier").save(
@@ -224,7 +223,7 @@ def maintenance_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     compacted copy with the parquet-direct oracle.  The file-count
     collapse itself is asserted in tests/test_scale.py."""
     d = load_table(spark, sf_dir, "documents")
-    root = remove_at_exit(tempfile.mkdtemp(prefix="compact_"))
+    root = cache.scratch_dir("compact_")
     frag, compact = os.path.join(root, "frag"), os.path.join(root, "compact")
     d.repartition(64).write.mode("overwrite").parquet(frag)
     spark.read.parquet(frag).repartition(4).write.mode("overwrite").parquet(compact)
@@ -255,7 +254,7 @@ def json_scan_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", F.unix_micros("ts").alias("ts_us"), "event_type"
     )
-    out = os.path.join(remove_at_exit(tempfile.mkdtemp(prefix="json_rt_")), "events_json")
+    out = os.path.join(cache.scratch_dir("json_rt_"), "events_json")
     ev.write.mode("overwrite").json(out)
     schema = T.StructType(
         [
@@ -349,7 +348,7 @@ def text_scan_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     is tab/newline-free; a production writer would escape or frame
     (JSONL) instead."""
     d = load_table(spark, sf_dir, "documents")
-    out = os.path.join(remove_at_exit(tempfile.mkdtemp(prefix="text_rt_")), "documents_txt")
+    out = os.path.join(cache.scratch_dir("text_rt_"), "documents_txt")
     d.select(
         F.concat_ws("\t", F.col("doc_id"), F.col("lang"), F.col("text")).alias("value")
     ).write.mode("overwrite").text(out)
@@ -405,7 +404,7 @@ def export_sharded_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ctgov_ai_etl_spark.operators.limits import hash_bucket
 
     d = load_table(spark, sf_dir, "documents")
-    out = os.path.join(remove_at_exit(tempfile.mkdtemp(prefix="shard_exp_")), "corpus")
+    out = os.path.join(cache.scratch_dir("shard_exp_"), "corpus")
     lines = d.select(
         hash_bucket(F.col("doc_id"), 8).alias("shard"),
         F.concat_ws(

@@ -16,6 +16,8 @@ from pyspark.sql import functions as F
 
 from ctgov_ai_etl_spark.functions.exact import cents
 from ctgov_ai_etl_spark.operators.sketches import portable_hash60
+from ctgov_ai_etl_spark.queries import semantic  # noqa: F401  (registers twins)
+from ctgov_ai_etl_spark.queries.registry import REGISTRY as _REG
 from ctgov_ai_etl_spark.queries.registry import query
 from ctgov_ai_etl_spark.tables import load_table, stream_table
 
@@ -428,8 +430,8 @@ def stream_run_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_run_semantic_admission",
-    oracle=None,  # patched below: identical result contract to the
-    # batch twin dedup_semantic_incremental, so it shares that oracle
+    # Identical result contract to the batch twin, so it shares that oracle.
+    oracle=_REG["dedup_semantic_incremental"].oracle,
 )
 def stream_run_semantic_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ACTUAL streaming semantic admission: the embedding corpus
@@ -519,24 +521,6 @@ def semantic_admission_plan(
         )
     )
 
-
-def _patch_stream_semantic_oracle() -> None:
-    from ctgov_ai_etl_spark.queries.registry import REGISTRY
-
-    # Force the twin's module to register before we look it up, so the
-    # patch works under ANY import order (previously it silently left the
-    # oracle as None if stream_batch was imported before semantic).
-    import ctgov_ai_etl_spark.queries.semantic  # noqa: F401
-
-    spec = REGISTRY["stream_run_semantic_admission"]
-    twin = REGISTRY.get("dedup_semantic_incremental")
-    if twin is not None and spec.oracle is None:
-        REGISTRY["stream_run_semantic_admission"] = type(spec)(
-            name=spec.name, fn=spec.fn, oracle=twin.oracle, doc=spec.doc
-        )
-
-
-_patch_stream_semantic_oracle()
 
 
 @query(
@@ -1283,11 +1267,12 @@ def stream_run_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    from ctgov_ai_etl_spark.streaming.events import run_stream_to_memory, scratch_dir
+    from ctgov_ai_etl_spark.operators import cache
+    from ctgov_ai_etl_spark.streaming.events import run_stream_to_memory
     from ctgov_ai_etl_spark.tables import load_table
 
     ev = load_table(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
-    stage = scratch_dir("ssjo_")
+    stage = cache.scratch_dir("ssjo_")
     try:
         b1 = os.path.join(stage, "batch1")
         # ONE file → ONE trigger for the whole real-event slice.  With
@@ -1368,7 +1353,6 @@ def stream_run_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
 from ctgov_ai_etl_spark.queries.analytics import (  # noqa: E402
     ts_holt_linear as _batch_holt,
 )
-from ctgov_ai_etl_spark.queries.registry import REGISTRY as _REG  # noqa: E402
 
 
 @query(
@@ -1651,8 +1635,8 @@ def stream_run_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_run_decontam",
-    oracle=None,  # patched below: identical result contract to the
-    # batch gate decontam_ngram, so it shares that oracle
+    # Identical result contract to the batch gate, so it shares that oracle.
+    oracle=_REG["decontam_ngram"].oracle,
 )
 def stream_run_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ACTUAL streaming decontamination at ingest (the corpus-crawl
@@ -1701,29 +1685,14 @@ def stream_run_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_stream_to_memory(hits, mode="complete")
 
 
-def _patch_stream_decontam_oracle() -> None:
-    from ctgov_ai_etl_spark.queries.registry import REGISTRY
-
-    import ctgov_ai_etl_spark.queries.semantic  # noqa: F401
-
-    spec = REGISTRY["stream_run_decontam"]
-    twin = REGISTRY.get("decontam_ngram")
-    if twin is not None and spec.oracle is None:
-        REGISTRY["stream_run_decontam"] = type(spec)(
-            name=spec.name, fn=spec.fn, oracle=twin.oracle, doc=spec.doc
-        )
-
-
-_patch_stream_decontam_oracle()
-
 
 # ----------------------------------- streaming blocklist ingest gate
 
 
 @query(
     "stream_run_blocklist",
-    oracle=None,  # patched below: identical result contract to the
-    # batch gate text_blocklist_filter, so it shares that oracle
+    # Identical result contract to the batch gate, so it shares that oracle.
+    oracle=_REG["text_blocklist_filter"].oracle,
 )
 def stream_run_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming denylist admission filter: the stateless twin of
@@ -1761,28 +1730,15 @@ def stream_run_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_stream_to_memory(scored, mode="append")
 
 
-def _patch_stream_blocklist_oracle() -> None:
-    from ctgov_ai_etl_spark.queries.registry import REGISTRY
-
-    import ctgov_ai_etl_spark.queries.semantic  # noqa: F401
-
-    spec = REGISTRY["stream_run_blocklist"]
-    twin = REGISTRY.get("text_blocklist_filter")
-    if twin is not None and spec.oracle is None:
-        REGISTRY["stream_run_blocklist"] = type(spec)(
-            name=spec.name, fn=spec.fn, oracle=twin.oracle, doc=spec.doc
-        )
-
-
-_patch_stream_blocklist_oracle()
-
-
 # ------------------------------ streaming DSIR admission gate
+
+from ctgov_ai_etl_spark.queries.product import _DSIR_CTES  # noqa: E402
 
 
 @query(
     "stream_run_dsir_gate",
-    oracle=None,  # patched below from the shared DSIR model CTEs
+    oracle=f"WITH {_DSIR_CTES}\n"
+    "    SELECT doc_id, log_w_micro FROM scored WHERE log_w_micro >= 0",
 )
 def stream_run_dsir_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming DSIR admission: score every arriving document's
@@ -1898,34 +1854,13 @@ def stream_run_dsir_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_stream_to_memory(scored, mode="append")
 
 
-def _patch_stream_dsir_oracle() -> None:
-    from ctgov_ai_etl_spark.queries.registry import REGISTRY
-
-    from ctgov_ai_etl_spark.queries.product import _DSIR_CTES
-
-    spec = REGISTRY["stream_run_dsir_gate"]
-    if spec.oracle is None:
-        REGISTRY["stream_run_dsir_gate"] = type(spec)(
-            name=spec.name,
-            fn=spec.fn,
-            oracle=(
-                f"WITH {_DSIR_CTES}\n"
-                "    SELECT doc_id, log_w_micro FROM scored"
-                " WHERE log_w_micro >= 0"
-            ),
-            doc=spec.doc,
-        )
-
-
-_patch_stream_dsir_oracle()
-
 
 # ---------------------------------- streaming volume control chart
 
 
 @query(
     "stream_run_volume_alert",
-    oracle=None,  # patched below: shares anomaly_volume_days' oracle
+    oracle=_REG["anomaly_volume_days"].oracle,
 )
 def stream_run_volume_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING ingest-volume monitor: per-day event counts as a
@@ -1988,25 +1923,10 @@ def stream_run_volume_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _patch_stream_volume_oracle() -> None:
-    from ctgov_ai_etl_spark.queries.registry import REGISTRY
-
-    import ctgov_ai_etl_spark.queries.analytics  # noqa: F401
-
-    spec = REGISTRY["stream_run_volume_alert"]
-    twin = REGISTRY.get("anomaly_volume_days")
-    if twin is not None and spec.oracle is None:
-        REGISTRY["stream_run_volume_alert"] = type(spec)(
-            name=spec.name, fn=spec.fn, oracle=twin.oracle, doc=spec.doc
-        )
-
-
-_patch_stream_volume_oracle()
-
 
 @query(
     "stream_run_hll",
-    oracle=None,  # patched below: shares sketch_hll_registers' oracle
+    oracle=_REG["sketch_hll_registers"].oracle,
 )
 def stream_run_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING HyperLogLog register maintenance: the production
@@ -2032,18 +1952,3 @@ def stream_run_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return drained.unionByName(merged)
 
-
-def _patch_stream_hll_oracle() -> None:
-    from ctgov_ai_etl_spark.queries.registry import REGISTRY
-
-    import ctgov_ai_etl_spark.queries.semantic  # noqa: F401
-
-    spec = REGISTRY["stream_run_hll"]
-    twin = REGISTRY.get("sketch_hll_registers")
-    if twin is not None and spec.oracle is None:
-        REGISTRY["stream_run_hll"] = type(spec)(
-            name=spec.name, fn=spec.fn, oracle=twin.oracle, doc=spec.doc
-        )
-
-
-_patch_stream_hll_oracle()

@@ -125,14 +125,14 @@ def udtf_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield i, tok
 
     spark.udtf.register("tokenize_udtf", Tokenize)
-    load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 20).select(
-        "doc_id", "text"
-    ).createOrReplaceTempView("docs_for_udtf")
     return spark.sql(
         """
         SELECT d.doc_id, t.pos, t.tok
-        FROM docs_for_udtf d, LATERAL tokenize_udtf(d.text) t
-        """
+        FROM {docs} d, LATERAL tokenize_udtf(d.text) t
+        """,
+        docs=load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") < 20)
+        .select("doc_id", "text"),
     )
 
 

@@ -44,16 +44,6 @@ DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(_usable_cpus())
 _SHIPPED_SESSIONS: set[int] = set()
 
 
-def remove_at_exit(path: str) -> str:
-    """Remove the directory ``path`` at interpreter exit and return it.
-
-    For scratch directories that a returned DataFrame reads lazily, so
-    they cannot be removed when the function that made them returns.
-    """
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    return path
-
-
 def ship_package(spark: SparkSession) -> None:
     """Make ``ctgov_ai_etl_spark`` importable on executor Python workers.
 
@@ -74,7 +64,8 @@ def ship_package(spark: SparkSession) -> None:
     if key in _SHIPPED_SESSIONS:
         return
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    tmp = remove_at_exit(tempfile.mkdtemp(prefix="ctgov_pkg_"))
+    tmp = tempfile.mkdtemp(prefix="ctgov_pkg_")
+    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
     zip_base = os.path.join(tmp, "ctgov_ai_etl_spark_pkg")
     root = os.path.dirname(pkg_dir)
     archive = shutil.make_archive(zip_base, "zip", root_dir=root, base_dir="ctgov_ai_etl_spark")
@@ -92,7 +83,8 @@ _SHM_MIN_FREE_BYTES = 8 << 30
 
 
 def _local_scratch() -> str:
-    """Directory for spark.local.dir (shuffle files, spills).
+    """Directory for spark.local.dir (shuffle files, spills) and the
+    root of :func:`ctgov_ai_etl_spark.operators.cache.scratch_dir`.
 
     $SPARK_GRAFT_LOCAL_DIR > /dev/shm (RAM-backed, when writable AND
     holding at least ``_SHM_MIN_FREE_BYTES`` free) > the platform
@@ -138,10 +130,10 @@ def get_spark(app_name: str = "ctgov_ai_etl_spark", cpus: str | None = None) -> 
         # cluster this is the local-NVMe mount, here the RAM-backed
         # tempfs when present).  Parameterised: $SPARK_GRAFT_LOCAL_DIR
         # wins, else /dev/shm when writable, else Spark's default
-        # (/tmp).  Same medium rationale as the streaming state-store
-        # scratch (streaming/events.py:scratch_dir): a virtual disk
-        # can show bursty multi-second I/O stalls that swing
-        # shuffle-heavy queries 4-8x.
+        # (/tmp).  Query scratch (operators/cache.py:scratch_dir:
+        # streaming checkpoints and state stores) shares the root: a
+        # virtual disk can show bursty multi-second I/O stalls that
+        # swing shuffle-heavy and stateful queries 4-8x.
         .config("spark.local.dir", _local_scratch())
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -15,34 +15,12 @@ from __future__ import annotations
 import contextlib
 import os
 import shutil
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def scratch_dir(prefix: str) -> str:
-    """Scratch directory for streaming checkpoints / state stores,
-    RAM-backed when possible.
-
-    Stream-stream joins commit four state stores per partition per
-    micro-batch; on a contended disk that commit cost dominates the
-    query (measured 4-8x wall swings on the shared bench host).  The
-    state here is bounded (one watermark window per stream) and the
-    checkpoints are single-run throwaways, so tmpfs is the right
-    medium.  Resolution order: ``$SPARK_GRAFT_SCRATCH`` if set, then
-    ``/dev/shm`` when present and writable, else the system tempdir
-    (the prior behavior).  On a real cluster the equivalent knob is
-    pointing the state store at local SSD / RocksDB, not HDFS.
-    """
-    base = os.environ.get("SPARK_GRAFT_SCRATCH")
-    if not base and os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK):
-        base = "/dev/shm"
-    try:
-        return tempfile.mkdtemp(prefix=prefix, dir=base)
-    except OSError:
-        return tempfile.mkdtemp(prefix=prefix)
+from ctgov_ai_etl_spark.operators import cache
 
 
 #: Upper bound on the state-store partitions of a stream run.
@@ -299,15 +277,15 @@ def stream_upsert_snapshot(
     read→write pass per batch, no defensive materialization.  Once the
     stream stops, the shards, the checkpoint and every superseded
     version are removed: the returned frame reads only the latest.
-    The work directory holding it is removed at interpreter exit, not
-    on return: the frame reads it lazily.
+    The work directory holding it is a :func:`cache.scratch_dir`, removed
+    at the caller's ``release_all``, not on return: the frame reads it
+    lazily.
     """
     from ctgov_ai_etl_spark.operators.merge import merge_upsert_versioned
-    from ctgov_ai_etl_spark.session import remove_at_exit
     from ctgov_ai_etl_spark.tables import load_table
 
     ev = load_table(spark, sf_dir, "events")
-    work = remove_at_exit(scratch_dir("upsert_stream_"))
+    work = cache.scratch_dir("upsert_stream_")
     src_dir = os.path.join(work, "shards")
     target_dir = os.path.join(work, "target")
     ev.repartition(n_shards).write.parquet(src_dir)
@@ -380,7 +358,7 @@ def run_stream_to_memory_until_done(
     ``processAllAvailable()``, which loops micro-batches until the
     source's offset stops advancing (the reader's ``done`` state)."""
     name = name or f"mem_{uuid.uuid4().hex[:8]}"
-    ckpt = scratch_dir(f"ckpt_{name}_")
+    ckpt = cache.scratch_dir(f"ckpt_{name}_")
     spark = df.sparkSession
     try:
         with _stream_shuffle_parts(spark):
@@ -417,7 +395,7 @@ def run_stream_to_memory(
     — the tail would be withheld forever.
     """
     name = name or f"mem_{uuid.uuid4().hex[:8]}"
-    ckpt = scratch_dir(f"ckpt_{name}_")
+    ckpt = cache.scratch_dir(f"ckpt_{name}_")
     spark = df.sparkSession
     try:
         with _stream_shuffle_parts(spark):

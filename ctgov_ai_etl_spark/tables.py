@@ -2,17 +2,17 @@
 name)`` into a DataFrame, batch (:func:`load_table`) or stream
 (:func:`stream_table`).
 
-Every table except ``events`` is read with its declared schema,
-``schemas.TABLE_SCHEMAS[name]``: schema inference reads the parquet
-footers in a Spark job on every load, and a declared schema keeps
-filter pushdown and column pruning independent of what a footer says.
+Every table is read with a declared schema: schema inference reads
+the parquet footers in a Spark job on every load, and a declared schema
+keeps filter pushdown and column pruning independent of what a footer
+says.  Every table but ``events`` uses ``schemas.TABLE_SCHEMAS[name]``.
 
-``events`` is the exception.  How its ``ts`` column is stored has
-changed before (TIMESTAMP(NANOS), then timestamp[us]), and a
-nanosecond-stored file read under the declared ``TimestampType`` fails
-at execution.  So ``events`` is read with its inferred schema and
-:func:`_normalize_events_ts` converts ``ts`` to ``TimestampType``
-from the dtype the reader actually produced.
+How ``events`` stores its ``ts`` column has changed before
+(TIMESTAMP(NANOS), then timestamp[us]), and a nanosecond-stored file
+read under ``TimestampType`` fails at execution.  So :func:`_schema`
+declares ``ts`` as the reader yields it, from the footer that pyarrow
+reads on the driver, and :func:`_normalize_events_ts` converts it to
+``TimestampType``.
 """
 
 from __future__ import annotations
@@ -20,6 +20,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 from ctgov_ai_etl_spark.schemas import EVENTS, TABLE_NAMES, TABLE_SCHEMAS
 
@@ -61,13 +62,38 @@ def _path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+def _schema(path: str, name: str) -> T.StructType:
+    """The declared read schema of table ``name`` stored at ``path``.
+
+    For ``events``, ``ts`` is ``LongType`` when the footer stores it
+    as a nanosecond TIMESTAMP (``nanosAsLong`` reads it as int64 nanos)
+    and ``TimestampType`` otherwise, INT96 included.  A directory's
+    schema is its first part file's."""
+    if name != "events":
+        return TABLE_SCHEMAS[name]
+    import json
+
+    import pyarrow.parquet as pq
+
+    footer = path
+    if os.path.isdir(path):
+        parts = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
+        footer = os.path.join(path, parts[0])
+    columns = pq.read_metadata(footer).schema
+    ts = columns.column(columns.names.index("ts")).logical_type
+    if json.loads(ts.to_json()).get("timeUnit") != "nanoseconds":
+        return EVENTS
+    return T.StructType(
+        [T.StructField("ts", T.LongType()) if f.name == "ts" else f for f in EVENTS]
+    )
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table as a DataFrame (columnar parquet scan)."""
     path = _path(sf_dir, name)
     ensure_session_confs(spark)
-    if name != "events":
-        return spark.read.schema(TABLE_SCHEMAS[name]).parquet(path)
-    return _normalize_events_ts(spark.read.parquet(path))
+    df = spark.read.schema(_schema(path, name)).parquet(path)
+    return _normalize_events_ts(df) if name == "events" else df
 
 
 def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -82,11 +108,7 @@ def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     empty)."""
     path = _path(sf_dir, name)
     ensure_session_confs(spark)
-    if name == "events":
-        schema = spark.read.parquet(path).schema
-    else:
-        schema = TABLE_SCHEMAS[name]
-    reader = spark.readStream.schema(schema).format("parquet")
+    reader = spark.readStream.schema(_schema(path, name)).format("parquet")
     if os.path.isdir(path):
         stream = reader.load(path)
     else:
@@ -108,7 +130,6 @@ def _normalize_events_ts(df: DataFrame) -> DataFrame:
     - TimestampType / TimestampNTZType: already what we want.
     """
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
     dt = df.schema["ts"].dataType
     if isinstance(dt, T.LongType):

@@ -1,6 +1,7 @@
-"""Tracked-persist registry (operators/cache.py): operators register
-their internal persists so long-lived sessions can release them with
-release_all() instead of spark.catalog.clearCache()."""
+"""Query leftovers (operators/cache.py): operators register their
+internal persists and lazily-read scratch directories so long-lived
+sessions can release them with release_all() instead of
+spark.catalog.clearCache()."""
 
 from __future__ import annotations
 
@@ -10,6 +11,7 @@ from pyspark.sql import functions as F
 from ctgov_ai_etl_spark.operators import cache
 from ctgov_ai_etl_spark.operators.graph import kcore, triangle_count
 from ctgov_ai_etl_spark.operators.limits import global_rank
+from tests.conftest import SF_SMALL
 
 
 def test_track_release_unpersists(spark):
@@ -139,3 +141,110 @@ def test_spanning_pairs_have_identical_components(spark):
     full_set = {(r.id_a, r.id_b) for r in full.collect()}
     span_set = {(r.id_a, r.id_b) for r in span.collect()}
     assert span_set <= full_set
+
+
+@pytest.mark.parametrize(
+    "stream, twin",
+    [
+        ("stream_run_semantic_admission", "dedup_semantic_incremental"),
+        ("stream_run_decontam", "decontam_ngram"),
+        ("stream_run_blocklist", "text_blocklist_filter"),
+        ("stream_run_volume_alert", "anomaly_volume_days"),
+        ("stream_run_hll", "sketch_hll_registers"),
+        ("stream_run_dsir_gate", None),
+    ],
+)
+def test_stream_runs_share_their_twin_oracle(stream, twin):
+    """A streaming run with a batch twin's result contract carries
+    that twin's oracle text byte for byte; the DSIR gate's oracle
+    replays the batch model's CTEs with its admission predicate."""
+    from ctgov_ai_etl_spark.queries import load_all
+    from ctgov_ai_etl_spark.queries.product import _DSIR_CTES
+
+    registry = load_all()
+    oracle = registry[stream].oracle
+    if twin is None:
+        assert oracle == (
+            f"WITH {_DSIR_CTES}\n"
+            "    SELECT doc_id, log_w_micro FROM scored WHERE log_w_micro >= 0"
+        )
+    else:
+        assert oracle is not None and oracle == registry[twin].oracle
+
+
+def test_release_all_removes_held_dirs(tmp_path, monkeypatch):
+    import os
+
+    monkeypatch.setenv("SPARK_GRAFT_LOCAL_DIR", str(tmp_path))
+    cache.release_all()
+    d = cache.scratch_dir("held_")
+    assert os.path.dirname(d) == str(tmp_path)
+    with open(os.path.join(d, "f"), "w") as fh:
+        fh.write("x")
+    assert d in cache.held_dirs()
+    cache.release_all()
+    assert not os.path.exists(d)
+    assert not cache.held_dirs()
+
+
+def test_sql_queries_leave_caller_views_alone(spark):
+    """Queries that run SQL text over a frame pass it as a ``spark.sql``
+    argument, so a caller's view of the same name survives and no
+    view is left behind."""
+    from ctgov_ai_etl_spark.queries import load_all
+
+    registry = load_all()
+    mine = spark.range(3).toDF("o_orderkey")
+    mine.createOrReplaceTempView("orders")
+    try:
+        before = sorted(t.name for t in spark.catalog.listTables())
+        for name in ("agg_grouping_sets", "udtf_tokenize"):
+            assert registry[name].fn(spark, SF_SMALL).collect()
+        assert sorted(t.name for t in spark.catalog.listTables()) == before
+        assert spark.table("orders").count() == 3
+    finally:
+        spark.catalog.dropTempView("orders")
+
+
+# The perfbench catalog's stream and LLM items, and the queries whose
+# result reads a scratch directory lazily.
+_LIFECYCLE = (
+    "stream_run_tumbling",
+    "stream_run_stateful",
+    "dedup_minhash_lsh",
+    "mm_audio_wav_meta",
+    "csv_scan_roundtrip",
+    "maintenance_compact_files",
+    "stream_run_upsert",
+    "sim_topk_ivf_partitioned",
+)
+
+
+def test_release_all_leaves_nothing_behind(spark, tmp_path, monkeypatch):
+    """Run the queries twice in one session, releasing after each: no
+    persist stays tracked, every scratch directory is gone, and the
+    session's views and shuffle width are as before."""
+    import os
+
+    from ctgov_ai_etl_spark.queries import load_all
+
+    registry = load_all()
+    monkeypatch.setenv("SPARK_GRAFT_LOCAL_DIR", str(tmp_path))
+    cache.release_all()
+    views = sorted(t.name for t in spark.catalog.listTables())
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+    made: set[str] = set()
+    pinned = 0
+    for _ in range(2):
+        for name in _LIFECYCLE:
+            assert registry[name].fn(spark, SF_SMALL).collect(), name
+            made.update(os.listdir(tmp_path))
+            pinned += cache.tracked_count()
+            cache.release_all()
+            assert cache.tracked_count() == 0, name
+            assert not os.listdir(tmp_path), name
+    assert {p.split("_")[0] for p in made} >= {"csv", "compact", "upsert", "ivf"}
+    assert pinned > 0
+    assert not cache.held_dirs()
+    assert sorted(t.name for t in spark.catalog.listTables()) == views
+    assert spark.conf.get("spark.sql.shuffle.partitions") == parts

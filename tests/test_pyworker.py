@@ -185,7 +185,7 @@ def test_query_scratch_dirs_are_removed_at_exit(tmp_path):
     nothing behind once the interpreter exits."""
     proc = _run_python(
         """
-        import os, tempfile
+        import os
         from ctgov_ai_etl_spark.queries import load_all
         from ctgov_ai_etl_spark.session import get_spark
 
@@ -193,9 +193,9 @@ def test_query_scratch_dirs_are_removed_at_exit(tmp_path):
         registry = load_all()
         for name in ("csv_scan_roundtrip", "maintenance_compact_files"):
             assert registry[name].fn(spark, "/root/testdata/sf0.001").collect()
-        print(sorted(os.listdir(tempfile.gettempdir())))
+        print(sorted(os.listdir(os.environ["SPARK_GRAFT_LOCAL_DIR"])))
         """,
-        TMPDIR=str(tmp_path),
+        SPARK_GRAFT_LOCAL_DIR=str(tmp_path),
         SPARK_GRAFT_CPUS="2",
         SPARK_GRAFT_DRIVER_MEM="1g",
     )

@@ -275,7 +275,7 @@ def test_stream_join_outer_removes_its_staged_batches(spark, tmp_path, monkeypat
         stream_run_stream_join_outer,
     )
 
-    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path))
+    monkeypatch.setenv("SPARK_GRAFT_LOCAL_DIR", str(tmp_path))
     rows = stream_run_stream_join_outer(spark, SF_SMALL).collect()
     assert rows and all(r.click_id >= 0 for r in rows)
     assert not list(tmp_path.glob("ssjo_*"))
@@ -926,7 +926,7 @@ def test_upsert_snapshot_work_dir_is_removed_at_exit(tmp_path):
         env={
             **os.environ,
             "PYTHONPATH": repo,
-            "SPARK_GRAFT_SCRATCH": str(tmp_path),
+            "SPARK_GRAFT_LOCAL_DIR": str(tmp_path),
             "SPARK_GRAFT_DRIVER_MEM": "1g",
         },
         capture_output=True,

@@ -1,8 +1,9 @@
 """Contract tests for testdata table loading (tables.load_table and
 tables.stream_table).
 
-Every table but ``events`` is read with its declared schema, so the
-declared schemas must match the stored footers.  The events ``ts``
+Every table is read with a declared schema, so the declared schemas
+must match the stored footers (``events`` takes its ``ts`` type from
+the footer).  The events ``ts``
 storage format has changed under the engine once (TIMESTAMP(NANOS) →
 timestamp[us]), breaking every events query.  These tests pin the
 CONTRACT — ``events`` always yields a TimestampType ``ts`` with correct
@@ -47,7 +48,7 @@ def _events_sample_us():
     return dict(zip(ids, ts))
 
 
-def _synth_dir(ts_array: pa.Array) -> str:
+def _synth_dir(ts_array: pa.Array, **write_kw) -> str:
     """Write a tiny synthetic sf dir whose events.parquet stores ``ts``
     with the given arrow type."""
     d = tempfile.mkdtemp(prefix="events_dtype_")
@@ -61,7 +62,7 @@ def _synth_dir(ts_array: pa.Array) -> str:
             "props": pa.array(['{"k":1}', '{"k":2}']),
         }
     )
-    pq.write_table(tbl, os.path.join(d, "events.parquet"))
+    pq.write_table(tbl, os.path.join(d, "events.parquet"), **write_kw)
     return d
 
 
@@ -124,9 +125,22 @@ def test_load_events_ns_stored(spark, expected_us):
         shutil.rmtree(d, ignore_errors=True)
 
 
+def test_load_events_int96_stored(spark, expected_us):
+    """INT96 storage (Spark's default timestamp writer) reads as a
+    timestamp, though pyarrow reports it as timestamp[ns]."""
+    d = _synth_dir(
+        pa.array(list(expected_us.values()), pa.int64()).cast(pa.timestamp("us")),
+        use_deprecated_int96_timestamps=True,
+    )
+    try:
+        _assert_contract(spark, d, expected_us)
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
 def test_stream_schema_tracks_storage(spark, expected_us):
-    """stream_table derives the events schema from the file instead of
-    hardcoding a dtype — both storage variants stream correct values."""
+    """stream_table derives the events ``ts`` type from the footer
+    instead of hardcoding a dtype — both storage variants stream correct values."""
     from ctgov_ai_etl_spark.streaming.events import run_stream_to_memory
     from pyspark.sql import functions as F
 
@@ -189,8 +203,7 @@ def _jobs_started(spark, fn) -> int:
 
 
 def test_declared_schema_load_starts_no_job(spark):
-    """A declared-schema load plans without touching the files; only
-    ``events`` pays one schema-inference job."""
-    for name in _DECLARED:
+    """A declared-schema load plans without a Spark job, ``events``
+    included: its ``ts`` type comes from a driver-side footer read."""
+    for name in TABLE_NAMES:
         assert _jobs_started(spark, lambda: load_table(spark, SF_SMALL, name)) == 0, name
-    assert _jobs_started(spark, lambda: load_table(spark, SF_SMALL, "events")) == 1

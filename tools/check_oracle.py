@@ -6,6 +6,11 @@ comparison: every cell is canonicalized exactly (floats via repr,
 i.e. bit-equality), so anything that passes here passes any
 reasonable normalization the driver applies.
 
+Each query's leftovers are released (``cache.release_all()``) after
+its compare.  The sweep ends with one hygiene line: scratch
+directories still held, tracked persists and temp views outside the
+testdata tables.  Any of them non-zero fails the run.
+
 Usage:
     python tools/check_oracle.py [--sf /root/testdata/sf0.01] [name ...]
 """
@@ -23,6 +28,7 @@ import duckdb
 
 sys.path.insert(0, ".")
 
+from ctgov_ai_etl_spark.operators import cache  # noqa: E402
 from ctgov_ai_etl_spark.queries import load_all  # noqa: E402
 from ctgov_ai_etl_spark.schemas import TABLE_NAMES  # noqa: E402
 from ctgov_ai_etl_spark.session import get_spark  # noqa: E402
@@ -211,6 +217,8 @@ def main() -> int:
             }
             n_fail += 1
             continue
+        finally:
+            cache.release_all()
         results[name] = {k: v for k, v in r.items() if k != "name"}
         tag = r["status"]
         extra = f" ({r['rows']} rows, spark {r['spark_s']}s)"
@@ -224,6 +232,19 @@ def main() -> int:
         else:
             n_fail += 1
     print(f"\n{n_pass} pass, {n_rowsonly} rows-only, {n_fail} fail / {len(names)} total")
+    # Whatever a query creates, its release leaves nothing behind.
+    held, pinned = cache.held_dirs(), cache.tracked_count()
+    views = [
+        t.name for t in spark.catalog.listTables()
+        if t.isTemporary and t.name not in TABLE_NAMES
+    ]
+    leftovers = len(held) + pinned + len(views)
+    print(
+        f"hygiene: {len(held)} held dirs, {pinned} tracked persists, "
+        f"{len(views)} stray temp views"
+    )
+    for left in held + views:
+        print(f"          {left}")
     if args.json:
         import json as _json
 
@@ -239,7 +260,7 @@ def main() -> int:
         with open(args.json, "w") as fh:
             _json.dump(summary, fh, indent=1, sort_keys=True)
         print(f"wrote {args.json}")
-    return 1 if n_fail else 0
+    return 1 if n_fail or leftovers else 0
 
 
 if __name__ == "__main__":

@@ -16,7 +16,9 @@ Gates:
    output column fails, since a generic result harness cannot
    sort/hash list cells, as fn_regex_family once showed).
 4. ``--full`` also re-verifies every registered query against its
-   DuckDB oracle at sf0.01 (``tools/check_oracle.py``).
+   DuckDB oracle at sf0.01 (``tools/check_oracle.py``), which fails
+   too if a released query leaves a scratch directory, a tracked
+   persist or a stray temp view behind.
 
 Exit code 0 = all gates green.  Each gate prints PASS/FAIL with the
 underlying tool's output on failure.

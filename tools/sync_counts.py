@@ -1,9 +1,9 @@
 """Regenerate prose counts that must track the query registry.
 
-The README's catalog count drifted twice (r10 VERDICT #4: prose said
-323 while ``load_all()`` registered 330), so the count is now a
-generated artifact: this tool rewrites the ``N named queries`` token
-in README.md from ``len(load_all())`` and fails loudly (exit 1) when
+The README's catalog count drifted twice (prose once said 323 while
+``load_all()`` registered 330), so the count is now a generated
+artifact: this tool rewrites the ``N named queries`` token in
+README.md from ``len(load_all())`` and fails loudly (exit 1) when
 run with ``--check`` and the prose is stale.  Run it at the end of
 every round, before committing artifacts.
 """
