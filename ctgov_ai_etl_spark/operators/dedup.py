@@ -19,7 +19,6 @@ O(Σ bucket²) with a single shuffle, the standard MinHash-LSH layout
 
 from __future__ import annotations
 
-import os
 import random
 
 import numpy as np
@@ -36,27 +35,14 @@ from ctgov_ai_etl_spark.operators.cache import track
 # the 31-bit hash space is still ≫ any shingle-set size.
 _P = (1 << 31) - 1
 _SEED = 42
-# Largest singleton-free vocabulary ranked driver-side (see
-# jaccard_token_pairs): 1M (tok, df) rows ≈ tens of MB collected —
-# comparable to the dictionary broadcast the encode join already
-# plans; beyond it the distributed global_rank takes over.
-_VOCAB_DRIVER_CAP = 1_000_000
 
 #: Edge budget for the driver union-find tier of
-#: :func:`connected_components` — same bounded-probe-with-distributed-
-#: fallback idiom as the vocabulary dictionary above.  500k edges of
-#: two 8-byte ids ≈ tens of MB collected, the ballpark every broadcast
-#: in this engine already implies; graphs past the cap take the
-#: distributed label-prop/star path unchanged.  Read at CALL time
-#: (:func:`_cc_driver_cap`) so late env changes apply — the
-#: import-time read silently ignored them.
-_CC_DRIVER_CAP_DEFAULT = 500_000
-
-
-def _cc_driver_cap() -> int:
-    return int(
-        os.environ.get("SPARK_GRAFT_CC_DRIVER_CAP", str(_CC_DRIVER_CAP_DEFAULT))
-    )
+#: :func:`connected_components` (read at CALL time; ``driver_cap=0``
+#: forces the distributed tier): 500k edges of two 8-byte ids ≈ tens
+#: of MB collected, the ballpark every broadcast in this engine
+#: already implies; graphs past the cap take the distributed
+#: label-prop/star path unchanged.
+_CC_DRIVER_CAP = 500_000
 
 
 def _materialize(df: DataFrame) -> DataFrame:
@@ -70,9 +56,8 @@ def _materialize(df: DataFrame) -> DataFrame:
     computing job populates blocks that same-job sibling stages reuse.
     MEMORY_AND_DISK default spills rather than OOMs; the table is
     n_distinct × ~0.5 KB — what you'd cache on a cluster anyway.
-    Entries live in the CacheManager until session end (identical
-    re-invocations share them); callers running many corpora through
-    one session can clear with spark.catalog.clearCache()."""
+    Entries are tracked (:mod:`ctgov_ai_etl_spark.operators.cache`):
+    they live until the caller's ``cache.release_all()`` barrier."""
     return track(df.persist())
 
 
@@ -676,36 +661,14 @@ def jaccard_token_pairs(
     # cluster between dedup runs.
     dfreq = exploded.groupBy("tok").agg(F.count("*").alias("df"))
     filt = _materialize(dfreq.filter(F.col("df") >= 2))
-    # Dictionary build, two tiers (the r6 advisor's df-threshold
-    # cutoff): the distributed global_rank pays three fixed job
-    # barriers (range-boundary sampling, per-partition offset counts,
-    # the rank itself) — measured ~2.9 s of pure scheduling on a
-    # 31-token vocabulary at sf0.1, the dominant share of the CC
-    # family's shared pair-generation floor.  A deduplicated,
-    # singleton-free vocabulary is usually SMALL (it grows with
-    # distinct shared tokens, not corpus rows), so when one
-    # bounded-size probe shows it fits the driver, rank it in Python
-    # (same (df, tok) rarest-first order: UTF-8 byte order == Unicode
-    # code-point order == Python str order) and ship it back as a
-    # broadcast dictionary — one job instead of three.  Bound:
-    # _VOCAB_DRIVER_CAP rows ≈ tens of MB, the same ballpark the
-    # broadcast tier below already implies; a web-scale vocabulary
-    # falls through to the distributed rank.  Tie-breaks can't change
-    # results: any consistent total order is a valid PPJoin canonical
-    # order, and verification is exact.
-    probe = filt.limit(_VOCAB_DRIVER_CAP + 1).collect()
-    if len(probe) <= _VOCAB_DRIVER_CAP:
-        n_vocab = len(probe)
-        order = sorted(probe, key=lambda r: (r["df"], r["tok"]))
-        vocab = df.sparkSession.createDataFrame(
-            [(r["tok"], i + 1) for i, r in enumerate(order)],
-            "tok string, tid int",
-        )
-    else:
-        ranked_vocab, n_vocab = global_rank_with_count(filt, ["df", "tok"])
-        vocab = ranked_vocab.select(
-            "tok", F.col("__pos").cast("int").alias("tid")
-        )
+    # A deduplicated, singleton-free vocabulary is usually SMALL (it
+    # grows with distinct shared tokens, not corpus rows), so the rank
+    # usually takes global_rank's driver tier: one bounded probe
+    # instead of three job barriers.  Tie-breaks can't change results:
+    # any consistent total order is a valid PPJoin canonical order,
+    # and verification is exact.
+    ranked_vocab, n_vocab = global_rank_with_count(filt, ["df", "tok"])
+    vocab = ranked_vocab.select("tok", F.col("__pos").cast("int").alias("tid"))
     # Broadcast the dictionary only while it plausibly fits executor
     # memory; a web-scale vocabulary falls back to a shuffle join on
     # the token key (both sides already shuffle-sized).
@@ -973,80 +936,98 @@ def connected_components(
         .select("v", "nbr")
         .localCheckpoint(eager=True)
     )
-    # ---- bounded driver tier (the vocab-probe idiom): near-dup pair
-    # graphs are tiny relative to their corpora (most documents are
-    # singletons — the sf0.1 semantic block graph is 981 edges for a
-    # 2,000-vector corpus), yet the iterative path pays
-    # 3 + rounds + handoff full job barriers to resolve them.  When
-    # the (already endpoint-filtered, checkpointed) edge list fits the
-    # same driver budget every dictionary/broadcast in this engine
-    # already implies, resolve it with one collect + union-find and
-    # ship the (vertex → min-id component) map back as one tiny
-    # DataFrame — identical labels (UTF-8 byte order == code-point
-    # order, so Python ``min`` agrees with Spark's string ordering;
-    # exact for integral ids trivially), metrics report lp_rounds=0.
-    # A graph past ``driver_cap`` (env SPARK_GRAFT_CC_DRIVER_CAP)
-    # takes the distributed loop below unchanged — at 100 TB the pair
-    # graph of a duplicate-heavy crawl has billions of edges and this
-    # probe costs one cheap count on checkpointed blocks.
+    # ---- bounded driver tier: near-dup pair graphs are tiny relative
+    # to their corpora (most documents are singletons — the sf0.1
+    # semantic block graph is 981 edges for a 2,000-vector corpus), yet
+    # the iterative path pays 3 + rounds + handoff full job barriers to
+    # resolve them.  When the (already endpoint-filtered, checkpointed)
+    # edge list fits ``driver_cap`` (default ``_CC_DRIVER_CAP``), one
+    # collect + union-find produces the labels (lp_rounds=0).  A larger
+    # graph takes the distributed loop — at 100 TB the pair graph of a
+    # duplicate-heavy crawl has billions of edges and this probe costs
+    # one cheap count on checkpointed blocks.
     if driver_cap is None:
-        driver_cap = _cc_driver_cap()
-    use_driver = driver_cap > 0 and e0.count() <= driver_cap
-    if use_driver:
-        parent: dict = {}
-
-        def find(x):
-            root = x
-            while parent[root] != root:
-                root = parent[root]
-            while parent[x] != root:  # path compression
-                parent[x], x = root, parent[x]
-            return root
-
-        for row in e0.collect():
-            a, b = row[0], row[1]
-            if a not in parent:
-                parent[a] = a
-            if b not in parent:
-                parent[b] = b
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[rb] = ra
-        mins: dict = {}
-        for x in parent:
-            r = find(x)
-            if r not in mins or x < mins[r]:
-                mins[r] = x
-        id_type = e0.schema["v"].dataType
-        from pyspark.sql import types as T
-
-        map_schema = T.StructType(
-            [T.StructField("v", id_type), T.StructField("component", id_type)]
-        )
-        labels = vertices.sparkSession.createDataFrame(
-            [(x, mins[find(x)]) for x in parent], map_schema
-        )
+        driver_cap = _CC_DRIVER_CAP
+    if driver_cap > 0 and e0.count() <= driver_cap:
+        labels = _union_find_labels(e0)
         rounds_run, converged = 0, True
-        singles = (
-            vertices.select(F.col(id_col).alias("v"))
-            .join(labels.select("v"), "v", "left_anti")
-            .select("v", F.col("v").alias("component"))
+    else:
+        labels, rounds_run, converged = _propagate_labels(
+            e0, max_iters, star_handoff
         )
-        out = labels.unionByName(singles).select(
-            F.col("v").alias(id_col), "component"
+    singles = (
+        vertices.select(F.col(id_col).alias("v"))
+        .join(labels.select("v"), "v", "left_anti")
+        .select("v", F.col("v").alias("component"))
+    )
+    out = labels.unionByName(singles).select(F.col("v").alias(id_col), "component")
+    if observation is not None:
+        # Graph-depth telemetry without a profiler: rides the result's own execution via df.observe — zero
+        # extra jobs, surfaced to any QueryExecutionListener (or a
+        # pyspark Observation) when the caller materializes.  The
+        # loop/handoff facts are driver-side literals folded into
+        # aggregates; the row metrics come from the data itself.
+        out = out.observe(
+            observation,
+            F.max(F.lit(rounds_run)).alias("lp_rounds"),
+            F.max(F.lit(1 if converged else 0)).alias("lp_converged"),
+            F.max(
+                F.lit(0 if converged or star_handoff >= max_iters else 1)
+            ).alias("star_handoff_used"),
+            F.count("*").alias("n_vertices"),
+            F.approx_count_distinct("component").alias("n_components_approx"),
         )
-        if observation is not None:
-            out = out.observe(
-                observation,
-                F.max(F.lit(rounds_run)).alias("lp_rounds"),
-                F.max(F.lit(1)).alias("lp_converged"),
-                F.max(F.lit(0)).alias("star_handoff_used"),
-                F.count("*").alias("n_vertices"),
-                F.approx_count_distinct("component").alias(
-                    "n_components_approx"
-                ),
-            )
-        return out
+    return out
+
+
+def _union_find_labels(e0: DataFrame) -> DataFrame:
+    """Driver tier of :func:`connected_components`: (v, component)
+    labels of every vertex of the edge list ``e0`` (v, nbr) from one
+    collect + union-find, shipped back as one tiny DataFrame.  Labels
+    equal the distributed tier's: UTF-8 byte order == code-point
+    order, so Python ``min`` agrees with Spark's string ordering, and
+    integral ids agree trivially."""
+    from pyspark.sql import types as T
+
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for row in e0.collect():
+        a, b = row[0], row[1]
+        if a not in parent:
+            parent[a] = a
+        if b not in parent:
+            parent[b] = b
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[rb] = ra
+    mins: dict = {}
+    for x in parent:
+        r = find(x)
+        if r not in mins or x < mins[r]:
+            mins[r] = x
+    id_type = e0.schema["v"].dataType
+    map_schema = T.StructType(
+        [T.StructField("v", id_type), T.StructField("component", id_type)]
+    )
+    return e0.sparkSession.createDataFrame(
+        [(x, mins[find(x)]) for x in parent], map_schema
+    )
+
+
+def _propagate_labels(
+    e0: DataFrame, max_iters: int, star_handoff: int
+) -> tuple[DataFrame, int, bool]:
+    """Distributed tier of :func:`connected_components`: (v, component)
+    labels of every vertex of the edge list ``e0`` (v, nbr), the
+    label-propagation rounds run, and whether they converged."""
     sym = (
         e0.unionByName(e0.select(F.col("nbr").alias("v"), F.col("v").alias("nbr")))
         .dropDuplicates(["v", "nbr"])
@@ -1137,29 +1118,7 @@ def connected_components(
         labels = labels.join(roots, "component").select(
             "v", F.col("root").alias("component")
         )
-    singles = (
-        vertices.select(F.col(id_col).alias("v"))
-        .join(labels.select("v"), "v", "left_anti")
-        .select("v", F.col("v").alias("component"))
-    )
-    out = labels.unionByName(singles).select(F.col("v").alias(id_col), "component")
-    if observation is not None:
-        # Graph-depth telemetry without a profiler: rides the result's own execution via df.observe — zero
-        # extra jobs, surfaced to any QueryExecutionListener (or a
-        # pyspark Observation) when the caller materializes.  The
-        # loop/handoff facts are driver-side literals folded into
-        # aggregates; the row metrics come from the data itself.
-        out = out.observe(
-            observation,
-            F.max(F.lit(rounds_run)).alias("lp_rounds"),
-            F.max(F.lit(1 if converged else 0)).alias("lp_converged"),
-            F.max(
-                F.lit(0 if converged or star_handoff >= max_iters else 1)
-            ).alias("star_handoff_used"),
-            F.count("*").alias("n_vertices"),
-            F.approx_count_distinct("component").alias("n_components_approx"),
-        )
-    return out
+    return labels, rounds_run, converged
 
 
 def _symmetrize(e: DataFrame) -> DataFrame:

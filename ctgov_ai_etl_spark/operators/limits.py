@@ -23,7 +23,6 @@ driver-side data is one (partition_id, count) row per partition.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterable
 
 from pyspark import StorageLevel
@@ -37,16 +36,15 @@ _RANK_COL = "__pos"
 _PID_COL = "__pid"
 
 #: Bounded driver tier for the distributed rank (read at CALL time,
-#: like the CC and stream-shuffle knobs): when the rank frame fits
-#: under this many rows, ONE bounded probe + a Python sort + a
-#: broadcast (key → __pos) map replaces the three fixed job barriers
-#: of the distributed tier (range-boundary sampling, per-partition
-#: offset counts, the persist-pinned rank itself) — measured ~1-3 s of
-#: pure scheduling per use at sf0.1 (the same observation that
-#: motivated the r15 vocabulary driver tier, operators/dedup.py).
+#: so a test can force the distributed tier in-process by setting it
+#: to 0): when the rank frame fits under this many rows, ONE bounded
+#: probe + a Python sort + a broadcast (key → __pos) map replaces the
+#: three fixed job barriers of the distributed tier (range-boundary
+#: sampling, per-partition offset counts, the persist-pinned rank
+#: itself) — measured ~1-3 s of pure scheduling per use at sf0.1.
 #: Corpus-scale rank frames at 100 TB blow the cap on the probe and
 #: fall through to the distributed tier byte-identically.  0 disables.
-_RANK_DRIVER_CAP_DEFAULT = 20_000
+_RANK_DRIVER_CAP = 20_000
 
 #: Key types the driver tier may sort: Python's tuple sort must equal
 #: Spark's multi-column ASC order.  Integral types trivially agree;
@@ -61,14 +59,6 @@ _RANK_DRIVER_KEY_TYPES = (
     T.LongType,
     T.BooleanType,
 )
-
-
-def _rank_driver_cap() -> int:
-    return int(
-        os.environ.get(
-            "SPARK_GRAFT_RANK_DRIVER_CAP", str(_RANK_DRIVER_CAP_DEFAULT)
-        )
-    )
 
 
 def global_rank(df: DataFrame, order_cols: Iterable[str]) -> DataFrame:
@@ -104,21 +94,27 @@ def global_rank_with_count(
     partitioning for both jobs; the blocks are released to LRU — at
     most one extra pass of ``df`` on disk, the price of a
     deterministic distributed rank.
+
+    A frame of at most ``_RANK_DRIVER_CAP`` rows whose keys are
+    unique, non-NULL and of a ``_RANK_DRIVER_KEY_TYPES`` type is ranked
+    on the driver instead; both tiers return the same ranks.
     """
     spark = df.sparkSession
-    cols = [F.col(c) for c in order_cols]
     order_cols = list(order_cols)
-    cap = _rank_driver_cap()
+    cols = [F.col(c) for c in order_cols]
+    cap = _RANK_DRIVER_CAP
     if cap > 0 and all(
         isinstance(df.schema[c].dataType, _RANK_DRIVER_KEY_TYPES)
         for c in order_cols
     ):
-        # Pin the rank input FIRST: the distributed tier's ranged
-        # persist also served as the cache multi-traversal consumers
-        # (e.g. both SNM self-join sides) relied on — dropping it
-        # regressed dedup_snm_multipass 2.5 → 6.1 s before this pin.
-        # The probe doubles as the cache fill.
-        df = track(df.persist(StorageLevel.MEMORY_AND_DISK))
+        # Pin the rank input FIRST (unless the caller already did): the
+        # distributed tier's ranged persist also served as the cache
+        # multi-traversal consumers (e.g. both SNM self-join sides)
+        # relied on — dropping it regressed dedup_snm_multipass
+        # 2.5 → 6.1 s before this pin.  The probe doubles as the
+        # cache fill.
+        if not df.is_cached:
+            df = track(df.persist(StorageLevel.MEMORY_AND_DISK))
         # Bounded probe: limit() short-circuits the scan, and only the
         # NARROW key projection ships — an over-cap frame costs one
         # truncated pass, then takes the distributed tier.
@@ -140,6 +136,10 @@ def global_rank_with_count(
                 pos_df = spark.createDataFrame(
                     [k + (i + 1,) for i, k in enumerate(order)], pos_schema
                 )
+                if set(order_cols) == set(df.columns):
+                    # The key IS the row (a vocabulary of unique
+                    # (df, tok) pairs): the position map is the answer.
+                    return pos_df.select(*df.columns, _RANK_COL), len(keys)
                 ranked = df.join(F.broadcast(pos_df), on=order_cols).select(
                     *df.columns, _RANK_COL
                 )

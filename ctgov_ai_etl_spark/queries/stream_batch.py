@@ -283,39 +283,6 @@ def stream_run_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "stream_run_stateful_auto",
-    oracle="""
-    SELECT user_id,
-           CAST(count(*) AS BIGINT) AS n_events,
-           round(max(value), 6) AS max_value
-    FROM events GROUP BY user_id
-    """,
-)
-def stream_run_stateful_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stateful streaming through the capability-probed dispatcher:
-    ``transformWithStateInPandas`` (Spark 4's stateful-processor API)
-    when the env has protobuf, else ``applyInPandasWithState``.  Same
-    hash-checked contract as stream_run_stateful — final state equals
-    the batch groupBy — whichever API ran."""
-    from ctgov_ai_etl_spark.streaming.events import (
-        run_stream_to_memory,
-        stateful_user_stats_auto,
-    )
-
-    stream = stateful_user_stats_auto(stream_table(spark, sf_dir, "events"))
-    out = run_stream_to_memory(stream, mode="update")
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    return (
-        out.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-        .withColumn("max_value", F.round("max_value", 6))
-    )
-
-
-@query(
     "stream_run_upsert",
     oracle="""
     SELECT user_id,

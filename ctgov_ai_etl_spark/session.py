@@ -86,13 +86,19 @@ def _local_scratch() -> str:
     """Directory for spark.local.dir (shuffle files, spills) and the
     root of :func:`ctgov_ai_etl_spark.operators.cache.scratch_dir`.
 
-    $SPARK_GRAFT_LOCAL_DIR > /dev/shm (RAM-backed, when writable AND
-    holding at least ``_SHM_MIN_FREE_BYTES`` free) > the platform
-    default tempdir.  Must be decided before the SparkContext exists,
-    hence a builder-time helper rather than a runtime conf."""
+    $SPARK_GRAFT_LOCAL_DIR > the first entry of $SPARK_LOCAL_DIRS
+    (which Spark itself gives precedence over ``spark.local.dir``, so
+    query scratch follows the shuffle files there) > /dev/shm
+    (RAM-backed, when writable AND holding at least
+    ``_SHM_MIN_FREE_BYTES`` free) > the platform default tempdir.  Must
+    be decided before the SparkContext exists, hence a builder-time
+    helper rather than a runtime conf."""
     override = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
     if override:
         return override
+    first = os.environ.get("SPARK_LOCAL_DIRS", "").split(",")[0].strip()
+    if first:
+        return first
     if os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK):
         try:
             if shutil.disk_usage("/dev/shm").free >= _SHM_MIN_FREE_BYTES:
@@ -129,11 +135,12 @@ def get_spark(app_name: str = "ctgov_ai_etl_spark", cpus: str | None = None) -> 
         # (guide: shuffle files live on executor-local disk; on a real
         # cluster this is the local-NVMe mount, here the RAM-backed
         # tempfs when present).  Parameterised: $SPARK_GRAFT_LOCAL_DIR
-        # wins, else /dev/shm when writable, else Spark's default
-        # (/tmp).  Query scratch (operators/cache.py:scratch_dir:
-        # streaming checkpoints and state stores) shares the root: a
-        # virtual disk can show bursty multi-second I/O stalls that
-        # swing shuffle-heavy and stateful queries 4-8x.
+        # wins, else $SPARK_LOCAL_DIRS, else /dev/shm when writable,
+        # else Spark's default (/tmp).  Query scratch
+        # (operators/cache.py:scratch_dir: streaming checkpoints and
+        # state stores) shares the root: a virtual disk can show bursty
+        # multi-second I/O stalls that swing shuffle-heavy and stateful
+        # queries 4-8x.
         .config("spark.local.dir", _local_scratch())
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -134,86 +134,6 @@ def dedup_within_watermark(events: DataFrame) -> DataFrame:
     )
 
 
-def supports_transform_with_state() -> bool:
-    """Capability probe for ``transformWithStateInPandas`` (Spark 4's
-    successor to ``applyInPandasWithState``).
-
-    The new API's state serialization rides on protobuf; in
-    environments without the ``protobuf`` wheel the query fails at
-    runtime even though the Python API surface imports. Probe the
-    actual dependency, not the API."""
-    try:
-        import google.protobuf  # noqa: F401
-        from pyspark.sql.streaming.stateful_processor import (  # noqa: F401
-            StatefulProcessor,
-        )
-
-        return True
-    except ImportError:
-        return False
-
-
-def stateful_user_stats_twsip(events: DataFrame) -> DataFrame:
-    """``transformWithStateInPandas`` implementation of
-    :func:`stateful_user_stats` — same output contract, Spark 4's
-    native stateful-processor API (value state handle instead of the
-    GroupState tuple)."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    from ctgov_ai_etl_spark.session import ship_package
-
-    ship_package(events.sparkSession)
-
-    class UserStats(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "stats", "n long, vmax double"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, vmax = (
-                self._state.get() if self._state.exists() else (0, float("-inf"))
-            )
-            for pdf in rows:
-                n += len(pdf)
-                if len(pdf):
-                    vmax = max(vmax, float(pdf["value"].max()))
-            self._state.update((n, vmax))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "max_value": [vmax]}
-            )
-
-        def close(self) -> None:
-            # Required StatefulProcessor hook; no per-task resources
-            # to release (state lives in the store, not the worker).
-            pass
-
-    return (
-        events.withWatermark("ts", "1 hour")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            UserStats(),
-            outputStructType="user_id long, n_events long, max_value double",
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-
-
-def stateful_user_stats_auto(events: DataFrame) -> DataFrame:
-    """Dispatch to the newest stateful-processor API the environment
-    can actually run: ``transformWithStateInPandas`` when protobuf is
-    available, else the ``applyInPandasWithState`` predecessor. Both
-    produce the identical output contract."""
-    if supports_transform_with_state():
-        return stateful_user_stats_twsip(events)
-    return stateful_user_stats(events)
-
-
 def stateful_user_stats(events: DataFrame) -> DataFrame:
     """Custom stateful per-key streaming operator
     (applyInPandasWithState): running event count and max value per

@@ -187,6 +187,42 @@ def test_release_all_removes_held_dirs(tmp_path, monkeypatch):
     assert not cache.held_dirs()
 
 
+def test_scratch_root_follows_spark_local_dirs(tmp_path):
+    """With only $SPARK_LOCAL_DIRS set, query scratch and Spark's own
+    block-manager directory share it as their root."""
+    import os
+    import subprocess
+    import sys
+
+    root = tmp_path / "a"
+    code = (
+        "from ctgov_ai_etl_spark.operators import cache\n"
+        "from ctgov_ai_etl_spark.session import get_spark\n"
+        "spark = get_spark('scratch-root')\n"
+        "print(cache.scratch_dir('probe_'))\n"
+        "env = spark.sparkContext._jvm.org.apache.spark.SparkEnv.get()\n"
+        "for d in env.blockManager().diskBlockManager().localDirs():\n"
+        "    print(d.getParent())\n"
+    )
+    env = {
+        k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_LOCAL_DIR"
+    }
+    env.update(
+        SPARK_LOCAL_DIRS=str(root),
+        SPARK_GRAFT_CPUS="2",
+        SPARK_GRAFT_DRIVER_MEM="1g",
+        PYTHONPATH=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", code], env=env, capture_output=True,
+        text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr
+    scratch, *block_parents = proc.stdout.strip().splitlines()
+    assert os.path.dirname(scratch) == str(root)
+    assert block_parents == [str(root)]
+
+
 def test_sql_queries_leave_caller_views_alone(spark):
     """Queries that run SQL text over a frame pass it as a ``spark.sql``
     argument, so a caller's view of the same name survives and no

@@ -45,3 +45,20 @@ def test_bench_named_queries_print_median_of_3(spark, monkeypatch, capsys):
         assert line[name]["median"] == sorted(runs)[1]
     medians = sum(line[n]["median"] for n, line in zip(names, lines))
     assert lines[-1]["total_median"] == round(medians, 3)
+
+
+def test_spark_graft_option_set_is_pinned():
+    """The package, the tools and ``bench.py`` read exactly these
+    ``SPARK_GRAFT_*`` environment variables; a new knob means editing
+    this set."""
+    import re
+    from pathlib import Path
+
+    root = Path(REPO)
+    files = [root / "bench.py"]
+    for d in ("ctgov_ai_etl_spark", "tools"):
+        files += sorted((root / d).rglob("*.py"))
+    names = set()
+    for f in files:
+        names.update(re.findall(r"SPARK_GRAFT_([A-Z_]+)", f.read_text()))
+    assert names == {"CPUS", "DRIVER_MEM", "LOCAL_DIR", "SF_DIR", "BENCH_BUDGET"}

@@ -195,21 +195,25 @@ def test_merge_upsert_versioned_is_arrival_order_independent(spark, rows, split)
         unique_by=lambda t: t[1],
     )
 )
-def test_global_rank_is_exact_permutation(spark, vals):
+def test_global_rank_is_exact_permutation(spark, monkeypatch, vals):
     """global_rank must equal the rank from a driver-side sort under
     the same (key, id) order — exactly once per row, no duplicates or
     gaps — regardless of how rows spread across range partitions
-    (the ADVICE-flagged double-exchange hazard)."""
+    (the double-exchange hazard), in the driver tier and (cap 0) the
+    distributed tier."""
+    from ctgov_ai_etl_spark.operators import limits
     from ctgov_ai_etl_spark.operators.limits import global_rank_with_count
 
     df = spark.createDataFrame(vals, "k long, id long")
-    ranked, total = global_rank_with_count(df, ["k", "id"])
-    got = {(r["k"], r["id"]): r["__pos"] for r in ranked.collect()}
     expected = {
         kv: i + 1 for i, kv in enumerate(sorted(vals, key=lambda t: (t[0], t[1])))
     }
-    assert total == len(vals)
-    assert got == expected
+    for cap in (20_000, 0):
+        monkeypatch.setattr(limits, "_RANK_DRIVER_CAP", cap)
+        ranked, total = global_rank_with_count(df, ["k", "id"])
+        got = {(r["k"], r["id"]): r["__pos"] for r in ranked.collect()}
+        assert total == len(vals), cap
+        assert got == expected, cap
 
 
 def test_components_observation_metrics(spark):

@@ -6,8 +6,6 @@ the distributed range-partitioned tier exactly, and ambiguous inputs
 
 from __future__ import annotations
 
-import os
-
 import pytest
 
 
@@ -18,25 +16,24 @@ def _ranks(df, cols):
     return n, sorted(tuple(r) for r in ranked.collect())
 
 
-def test_rank_tiers_agree(spark):
+def test_rank_tiers_agree(spark, monkeypatch):
+    """Ranked on every column, the driver tier returns its position map
+    as it is; ranked on a key beside a payload column, it joins the map
+    back.  Either way it agrees with the distributed tier."""
     import random
+
+    from ctgov_ai_etl_spark.operators import limits
 
     rng = random.Random(16)
     rows = [(f"k{rng.randrange(10**9):09d}", i) for i in range(500)]
     df = spark.createDataFrame(rows, "k string, v long")
-    prev = os.environ.get("SPARK_GRAFT_RANK_DRIVER_CAP")
-    try:
-        os.environ["SPARK_GRAFT_RANK_DRIVER_CAP"] = "100000"
-        n_drv, drv = _ranks(df, ["k", "v"])
-        os.environ["SPARK_GRAFT_RANK_DRIVER_CAP"] = "0"
-        n_dist, dist = _ranks(df, ["k", "v"])
-    finally:
-        if prev is None:
-            os.environ.pop("SPARK_GRAFT_RANK_DRIVER_CAP", None)
-        else:
-            os.environ["SPARK_GRAFT_RANK_DRIVER_CAP"] = prev
-    assert n_drv == n_dist == 500
-    assert drv == dist
+    for cols in (["k", "v"], ["v"]):
+        monkeypatch.setattr(limits, "_RANK_DRIVER_CAP", 100_000)
+        n_drv, drv = _ranks(df, cols)
+        monkeypatch.setattr(limits, "_RANK_DRIVER_CAP", 0)
+        n_dist, dist = _ranks(df, cols)
+        assert n_drv == n_dist == 500
+        assert drv == dist
 
 
 def test_rank_driver_tier_plan_is_broadcast_map(spark):

@@ -270,6 +270,23 @@ def test_jaccard_string_verify_path_matches_bruteforce(spark):
     _check_jaccard_matches_bruteforce(spark, 6000)
 
 
+@pytest.mark.parametrize("name", ["dedup_jaccard_pairs", "dedup_jaccard_bigram"])
+def test_jaccard_vocabulary_rank_tiers_agree(spark, monkeypatch, name):
+    """The vocabulary dictionary ranked by global_rank's distributed
+    tier (cap 0) gives the same pairs as its default driver tier."""
+    from ctgov_ai_etl_spark.operators import limits
+    from ctgov_ai_etl_spark.queries import load_all
+
+    fn = load_all()[name].fn
+    default = sorted(tuple(r) for r in fn(spark, SF_SMALL).collect())
+    monkeypatch.setattr(limits, "_RANK_DRIVER_CAP", 0)
+    dist = fn(spark, SF_SMALL)
+    plan = dist._jdf.queryExecution().executedPlan().toString()
+    assert "rangepartitioning(df" in plan.lower()
+    assert default
+    assert sorted(tuple(r) for r in dist.collect()) == default
+
+
 def test_minhash_recall_on_planted_corpus(spark):
     """Planted near-dups (true Jaccard ≈ 0.8) on a rich vocabulary —
     the driver fixture's 31-token vocab makes everything collide, so

@@ -207,45 +207,6 @@ def test_watermark_drops_late_data_across_restarts(spark, tmp_path):
     assert got2.get(datetime(2024, 1, 1, 12, 0)) == 3  # on-time event merged
 
 
-def test_stateful_auto_dispatches_to_supported_api(spark):
-    """The capability-probed dispatcher runs whichever stateful API the
-    environment supports (transformWithStateInPandas needs protobuf;
-    applyInPandasWithState is the predecessor) and produces the same
-    final per-user stats either way."""
-    from ctgov_ai_etl_spark.streaming.events import (
-        stateful_user_stats_auto,
-        supports_transform_with_state,
-    )
-    from pyspark.sql import Window as W
-
-    try:
-        import google.protobuf  # noqa: F401
-
-        assert supports_transform_with_state()
-    except ImportError:
-        assert not supports_transform_with_state()
-
-    out = run_stream_to_memory(
-        stateful_user_stats_auto(stream_table(spark, SF_SMALL, "events")), mode="update"
-    )
-    w = W.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    final = (
-        out.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .withColumn("max_value", F.round("max_value", 6))
-    )
-    batch = (
-        load_table(spark, SF_SMALL, "events")
-        .groupBy("user_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.max("value"), 6).alias("max_value"),
-        )
-    )
-    cols = ["user_id", "n_events", "max_value"]
-    assert _rows(final, cols) == _rows(batch, cols)
-
-
 def test_stream_semantic_admission_equals_batch_twin(spark):
     """Finite-source streaming admission == the batch twin
     (dedup_semantic_incremental): same store split, same centroid

@@ -144,7 +144,7 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
          r"HashAggregate[^\n]*\n[^\n]*Exchange|Exchange[^\n]*\n[^\n]*HashAggregate"),
     ],
     "shuffle_training_order": [
-        # r16: below SPARK_GRAFT_RANK_DRIVER_CAP the rank arrives as a
+        # r16: below limits._RANK_DRIVER_CAP the rank arrives as a
         # broadcast (key -> __pos) map built on the driver (ExistingRDD),
         # replacing the three distributed-rank job barriers; over the cap
         # the range-partitioned tier is unchanged.
@@ -1970,7 +1970,7 @@ STREAM_CHECKS: dict[str, list[tuple[str, str]]] = {
         ("window agg commits through a state store", r"StateStoreSave"),
         ("one shuffle, demanded by the stateful operator", r"REQUIRED_BY_STATEFUL_OPERATOR"),
     ],
-    "stream_run_stateful_auto": [
+    "stream_run_stateful": [
         ("custom state machine is Arrow-batched per key", r"FlatMapGroupsInPandasWithState"),
         ("keys co-located by ONE hash shuffle", r"Exchange hashpartitioning"),
     ],
